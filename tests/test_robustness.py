@@ -252,6 +252,35 @@ def test_regexp_inner_class_open_is_literal():
     assert rx.match("x[z") and rx.match("xyz") and not rx.match("xz")
 
 
+
+def test_regexp_leading_bracket_in_class_is_literal():
+    """A ']' right after '[' or '[^' is a class member in Lucene RegExp
+    (and Python re): '[]&&a]' is the class of ']', '&' and 'a'. The
+    translation escapes it so the class-literal scanner does not close
+    the class there, which left '&&' / '|' unescaped (FutureWarning in
+    Python re, class intersection in Java regex)."""
+    import re as _re
+    import warnings
+    from xltsearch_spark.plans.parser import RegexpQuery, escape_class_opens
+    from xltsearch_spark.plans.rewrite import _anchored_regexp
+
+    assert escape_class_opens("[]&&a]") == r"[\]\&\&a]"
+    assert escape_class_opens("[^]|b]") == r"[^\]\|b]"
+    assert escape_class_opens("[^a]") == "[^a]"
+    cases = {"[]&&a]": ("]&a", "b|c"), "[^]|b]": ("&ac", "]|b")}
+    keys = sorted("]&ab|c")
+    corpus = pd.DataFrame({"repo": keys, "path": "p", "commit": "c",
+                           "lang": "py", "content": "z", "title": None})
+    oracle = OracleIndex(corpus)
+    for pat, (hit, miss) in cases.items():
+        assert P.parse(f"/{pat}/") == RegexpQuery("content", pat)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            rx = _re.compile(_anchored_regexp(pat))
+            found = {keys[h["doc_id"]] for h in oracle.search(f"repo:/{pat}/", 10)}
+        assert all(rx.match(c) for c in hit) and not any(rx.match(c) for c in miss)
+        assert found == set(hit), pat
+
 def test_msm_fuzz_engine_equals_pyoracle(spark):
     """Randomized minimum-should-match queries: engine == pyoracle over
     random clause mixes (+/-/plain, dup terms) and msm values — both

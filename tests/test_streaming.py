@@ -143,3 +143,9 @@ def test_batch_sessionize_matches_oracle_shape(spark):
            for r in sessionize(spark.createDataFrame(rows), gap_minutes=30).collect()}
     assert got[7] == (2, 3, 2, 10 * 60_000_000)  # sessions: [0,10], [100]
     assert got[8] == (1, 1, 1, 0)
+
+
+def test_materialize_once_passes_streaming_frames_through(spark):
+    from xltsearch_spark.operators._parallel import materialize_once
+    stream = spark.readStream.format("rate").load()
+    assert materialize_once(stream) is stream

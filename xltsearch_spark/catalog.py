@@ -21,10 +21,13 @@ Mirrors the reference's catalog/lifecycle machinery Spark-first:
   ``Catalog.java:104-122``: ``last_updated`` = UPDATE_FAILED(-1) while a
   build runs, the build-start timestamp only after every stage commits;
   NEVER_CREATED(-2) before first build; INVALIDATED(-3) on config-hash
-  mismatch (any config change invalidates, ``Config.java:289-297``).
+  mismatch (any config change invalidates, ``Config.java:289-297``) or
+  when ``stats.json`` lacks the current ``INDEX_FORMAT`` (an index written
+  by code whose on-disk blocks this code cannot trust).
 * Checkpoint/resume (north-rule mandate): every stage directory carries a
   ``_manifest.json`` with the stage's input fingerprint + row/wall metrics;
-  a re-run with the same fingerprint skips completed stages.
+  a re-run with the same fingerprint, config and format skips completed
+  stages. The row count is observed on the write itself, never re-read.
 """
 
 from __future__ import annotations
@@ -34,16 +37,23 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from xltsearch_spark.config import (INDEX_INVALIDATED, INDEX_NEVER_CREATED,
                                     INDEX_UPDATE_FAILED, IndexConfig)
+from xltsearch_spark.operators._parallel import sized_partition_count
 from xltsearch_spark.operators.build import BuildStats, IndexBuilder
 from xltsearch_spark.operators.incremental import change_diff, diff_summary
 from xltsearch_spark.operators.search import SearchEngine
 
 STAGES = ("docs", "runs", "dictionary", "doc_stats", "postings")
 CORPUS_COLS = ("repo", "path", "commit", "lang", "content", "title", "meta")
+# on-disk layout version, stamped into stats.json and every stage manifest.
+# 2: every posting block is strictly doc-id ordered and its skip span is
+# its min/max doc. Earlier builds could glue overlapping runs into one
+# block, which conjunction pruning and the merge's dirty-block locator
+# read wrongly, so an index without this stamp reports INDEX_INVALIDATED.
+INDEX_FORMAT = 2
 
 
 class IndexCatalog:
@@ -81,10 +91,16 @@ class IndexCatalog:
     def status(self) -> int:
         """last_updated epoch-ms, or the Config.java:52-54 sentinels."""
         meta = self.read_meta()
-        if meta.get("config_hash") is not None and \
-                meta["config_hash"] != self.config.config_hash():
+        if meta.get("config_hash") is not None and (
+                meta["config_hash"] != self.config.config_hash()
+                or meta.get("format") != INDEX_FORMAT):
             return INDEX_INVALIDATED
         return meta.get("last_updated", INDEX_NEVER_CREATED)
+
+    def _require_valid(self) -> None:
+        if self.status() == INDEX_INVALIDATED:
+            raise RuntimeError("index invalidated by a config or format change; "
+                               "rebuild required")
 
     def delete_index(self) -> None:
         """Config.deleteIndex (Config.java:320-336)."""
@@ -108,20 +124,29 @@ class IndexCatalog:
             return False
         with open(p) as f:
             m = json.load(f)
-        return m.get("status") == "success" and m.get("input_fingerprint") == fingerprint
+        return (m.get("status") == "success"
+                and m.get("input_fingerprint") == fingerprint
+                and m.get("config_hash") == self.config.config_hash()
+                and m.get("format") == INDEX_FORMAT)
 
     def _write_stage(self, seg: str, stage: str, df: DataFrame, fingerprint: str,
-                     partition_by: tuple[str, ...] = ()) -> None:
+                     partition_by: tuple[str, ...] = ()) -> int:
+        """Write one stage table and its manifest; returns the row count,
+        observed on the write itself (no read-back count job, no listing)."""
         t0 = time.time()
         out = self._stage_dir(seg, stage)
-        self.store.write(df, out, partition_by=partition_by)
-        rows = self.store.read(self.spark, out).count()
+        obs = Observation()
+        self.store.write(df.observe(obs, F.count(F.lit(1)).alias("rows")), out,
+                         partition_by=partition_by)
+        rows = int(obs.get["rows"])
         with open(self._manifest_path(seg, stage), "w") as f:
             json.dump({"stage": stage, "segment": seg, "status": "success",
                        "input_fingerprint": fingerprint, "rows": rows,
                        "wall_ms": int((time.time() - t0) * 1000),
-                       "config_hash": self.config.config_hash()},
+                       "config_hash": self.config.config_hash(),
+                       "format": INDEX_FORMAT},
                       f, indent=1, sort_keys=True)
+        return rows
 
     def _read_stage(self, seg: str, stage: str) -> DataFrame:
         return self.store.read(self.spark, self._stage_dir(seg, stage))
@@ -199,7 +224,8 @@ class IndexCatalog:
         meta = self.read_meta()
         # crash marker first, like Catalog.java:104-105
         self._write_meta({**meta, "last_updated": INDEX_UPDATE_FAILED,
-                          "config_hash": self.config.config_hash()})
+                          "config_hash": self.config.config_hash(),
+                          "format": INDEX_FORMAT})
         seg = "seg_000000"
         # a fresh build invalidates later segments/tombstones from any history
         for s in meta.get("segments", []):
@@ -211,6 +237,7 @@ class IndexCatalog:
                                               fail_after)
         self._write_meta({
             "last_updated": start_ms, "config_hash": self.config.config_hash(),
+            "format": INDEX_FORMAT,
             "segments": [{"name": seg, "n_docs": seg_docs,
                           "fingerprint": fingerprint}],
             "tombstones": [],
@@ -234,6 +261,7 @@ class IndexCatalog:
             self.build(new_corpus, fingerprint, build_time_ms)
             return {"insert": self.load_stats().n_docs, "update": 0,
                     "unchanged": 0, "delete": 0}
+        self._require_valid()
         start_ms = build_time_ms if build_time_ms is not None else int(time.time() * 1000)
         live = self.live_docs(meta)
         diff = change_diff(new_corpus, live, full_snapshot=full_snapshot).persist()
@@ -314,6 +342,7 @@ class IndexCatalog:
         meta = self.read_meta()
         if not meta["segments"]:
             raise RuntimeError("nothing to merge: index never built")
+        self._require_valid()
         start_ms = build_time_ms if build_time_ms is not None else int(time.time() * 1000)
         self._write_meta({**meta, "last_updated": INDEX_UPDATE_FAILED})
         p = self._read_all("postings", meta)
@@ -326,6 +355,9 @@ class IndexCatalog:
             # whose segments are ALL pre-upgrade)
             p = p.withColumn("block_min_score",
                              F.lit(None).cast("double"))
+        # sized on the postings read, before the join below inflates the
+        # plan-stat estimate
+        n_parts = sized_partition_count(p)
         tomb = self.tombstones_df(meta)
         rs = self.config.doc_range_size
         if tomb is not None:
@@ -340,8 +372,9 @@ class IndexCatalog:
                                                      F.col("skip_last_doc")))
                     .groupBy("field", "term", "skip_first_doc")
                     .agg(F.collect_list("dead_id").alias("dead")))
-            # keep the postings table — the BIG side, all binary payloads —
-            # unshuffled: broadcast the dirty-block list when it is small.
+            # do not shuffle the postings table — the BIG side, all binary
+            # payloads — for the join: broadcast the dirty-block list when
+            # it is small.
             # Its size is O(tombstoned docs x distinct terms per doc), so the
             # gate estimates ENTRIES (tombstones x avg terms/doc from the
             # collection stats — total tf/doc upper-bounds distinct terms),
@@ -355,10 +388,7 @@ class IndexCatalog:
                 dead = F.broadcast(dead)
             p = p.join(dead, ["field", "term", "skip_first_doc"], "left")
         seg = f"seg_merged_{len(meta['segments']):06d}"
-        live = self.live_docs(meta)
-        self._write_stage(seg, "docs", live, fingerprint)
-        docs = self._read_stage(seg, "docs")
-        n_live = docs.count()
+        n_live = self._write_stage(seg, "docs", self.live_docs(meta), fingerprint)
         builder = IndexBuilder(self.spark, self.config)
         if recompute_block_max:
             runs = p.mapInPandas(make_block_to_run_udf(), schema=RUN_SCHEMA)
@@ -377,20 +407,24 @@ class IndexCatalog:
                               builder.postings_stage(runs, stats),
                               fingerprint, partition_by=("field", "bucket"))
         else:
-            merged = p.mapInPandas(make_block_merge_udf(), schema=POSTING_SCHEMA)
+            # one shuffle of the postings on the write's partition columns:
+            # each (field, bucket) directory is written by one task, so the
+            # merged segment keeps one file per directory
+            merged = (p.repartition(n_parts, "field", "bucket")
+                      .mapInPandas(make_block_merge_udf(), schema=POSTING_SCHEMA))
             self._write_stage(seg, "postings", merged, fingerprint,
                               partition_by=("field", "bucket"))
-            merged = self._read_stage(seg, "postings")
             summ = make_postings_summary_udf()
-            srows = merged.mapInPandas(summ, schema=summ.schema)
-            dictionary = (srows.groupBy("field", "term")
-                          .agg(F.first("bucket").alias("bucket"),
-                               F.sum("n_docs").cast("long").alias("doc_freq"),
-                               F.sum("sum_tf").cast("long").alias("total_term_freq")))
+            srows = self._read_stage(seg, "postings").mapInPandas(
+                summ, schema=summ.schema)
+            # cached, so the summary's Python pass runs once for both the
+            # dictionary write and the per-field ttf
+            dictionary = builder.dictionary_stage(srows).persist()
             self._write_stage(seg, "dictionary", dictionary, fingerprint,
                               partition_by=("bucket",))
-            ttf_rows = (srows.groupBy("field")
-                        .agg(F.sum("sum_tf").alias("ttf")).collect())
+            ttf_rows = (dictionary.groupBy("field")
+                        .agg(F.sum("total_term_freq").alias("ttf")).collect())
+            dictionary.unpersist()
             sum_ttf = {r["field"]: int(r["ttf"]) for r in ttf_rows}
             stats = BuildStats(
                 n_docs=n_live, sum_ttf=sum_ttf,
@@ -407,6 +441,7 @@ class IndexCatalog:
         # only a full rebuild could recover
         self._write_meta({
             "last_updated": start_ms, "config_hash": self.config.config_hash(),
+            "format": INDEX_FORMAT,
             "segments": [{"name": seg, "n_docs": n_live,
                           "fingerprint": fingerprint}],
             "tombstones": [],
@@ -460,8 +495,7 @@ class IndexCatalog:
                           sum_ttf={k: int(v) for k, v in meta["sum_ttf"].items()})
 
     def engine(self) -> SearchEngine:
-        if self.status() == INDEX_INVALIDATED:
-            raise RuntimeError("index invalidated by config change; rebuild required")
+        self._require_valid()
         meta = self.read_meta()
         stats = self.load_stats()
         # stored block_max_score is exact only while ONE segment exists:

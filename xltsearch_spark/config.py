@@ -50,7 +50,10 @@ class IndexConfig:
     max_token_length: int = 255      # StandardTokenizer default maxTokenLength
     block_size: int = 128            # postings docs per block (skip/block-max granularity)
     doc_range_size: int = 1 << 16    # docs per doc-range bucket (two-level merge unit)
-    term_buckets: int = 64           # postings table term-hash partition count
+    # on-disk term-hash bucket count: the `bucket` directory level of the
+    # dictionary and postings tables. Not a task count; the build sizes
+    # its tasks from the input (operators/_parallel.sized_partition_count)
+    term_buckets: int = 64
     # run the B3 parse/extract stage (operators/parse.py) on `content`
     # before tokenization — the reference's Tika step inside the pipeline
     # (ParseTask.java:55-77): markup becomes text, and `format` /

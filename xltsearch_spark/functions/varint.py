@@ -101,19 +101,6 @@ def varint_value_starts(buf: bytes) -> np.ndarray:
     return np.concatenate(([0], ends[:-1] + 1)).astype(np.int64)
 
 
-def first_varint(buf: bytes) -> int:
-    """First value of a varint stream without decoding the rest (e.g. the
-    absolute first doc id of a run — deltas restart per run)."""
-    v = 0
-    shift = 0
-    for byte in buf:
-        v |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            return v
-        shift += 7
-    return 0  # empty stream
-
-
 def encode_deltas(sorted_ids: np.ndarray) -> bytes:
     """Delta-encode a strictly increasing int64/uint64 array, then varint."""
     a = np.asarray(sorted_ids, dtype=np.uint64)

@@ -14,6 +14,10 @@ round-robin, which pays a sort-before-repartition and is retry-unsafe on
 nondeterministic input, guide §2.5). Row-wise results are unchanged: every
 operator using this computes per-row/per-group values that do not depend on
 physical partitioning.
+
+``sized_partition_count`` is the same rule for keyed passes that must
+shuffle anyway (the index build's per-bucket stages): a task count of at
+least defaultParallelism that grows with the input's plan-stat bytes.
 """
 
 from __future__ import annotations
@@ -39,8 +43,11 @@ def materialize_once(df: DataFrame) -> DataFrame:
     localCheckpoint stores MEMORY_AND_DISK on executors (disk-backed,
     distributed — the same bytes the shuffle already carries) and is
     released by the ContextCleaner when the frame is garbage collected.
-    Skipped when the caller already persisted the frame or it is already
-    a materialized checkpoint."""
+    Skipped for streaming frames (they cannot be checkpointed), when the
+    caller already persisted the frame, or when it is already a
+    materialized checkpoint."""
+    if df.isStreaming:
+        return df
     sl = df.storageLevel
     if sl.useMemory or sl.useDisk or sl.useOffHeap:
         return df
@@ -74,6 +81,15 @@ JVM_MIN_BYTES_PER_PARTITION = 64 << 20   # codegen'd JVM map work
 _UNKNOWN_STATS = 1 << 60  # Catalyst returns defaultSizeInBytes when unknown
 
 
+def _plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's plan-stat size estimate, or None when it is unknown."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - defensive (exotic plans)
+        return None
+    return None if size >= _UNKNOWN_STATS else size
+
+
 def ensure_min_parallelism(df: DataFrame, key_col: str | None = None,
                            min_bytes: int | None = None) -> DataFrame:
     """Repartition ``df`` up to ``sparkContext.defaultParallelism`` when its
@@ -92,14 +108,30 @@ def ensure_min_parallelism(df: DataFrame, key_col: str | None = None,
     target = sc.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
-        if cur >= target:
-            return df
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
     except Exception:  # pragma: no cover - defensive (exotic plans)
         return df
-    if size >= _UNKNOWN_STATS or size // max(cur, 1) < min_bytes:
+    if cur >= target:
+        return df
+    size = _plan_bytes(df)
+    if size is None or size // max(cur, 1) < min_bytes:
         return df
     if key_col is not None and key_col in df.columns:
         return df.repartition(target, key_col)
     return df.repartition(target)
+
+
+def sized_partition_count(df: DataFrame) -> int:
+    """Task count for a keyed whole-partition pass over ``df``: at least
+    ``defaultParallelism`` (every core busy), more once the plan-stat bytes
+    exceed ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` per task —
+    the size Spark itself aims a shuffle partition at. A fixed count would
+    start the same number of Python tasks for a 150-doc update segment as
+    for a full build; this one grows with the input instead."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    size = _plan_bytes(df)
+    if size is None:
+        return target
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    return max(target, -(-size // max(int(advisory), 1)))

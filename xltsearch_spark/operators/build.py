@@ -12,20 +12,26 @@ Stage 1  docs        corpus -> sha256(content) (built-in ``F.sha2``, B1) +
 Stage 2  runs        ``mapInPandas`` partition-local SPIMI: tokenize with the
                      configured analyzer (B4) and emit one row per
                      (field, term, doc-range) = a sorted, delta+varint
-                     compressed posting RUN, plus per-doc length rows.
-                     Doc ranges are disjoint and ordered, so every term's
-                     runs concatenate into a globally doc-sorted posting
-                     list WITHOUT a comparison merge — the "two-level
-                     (partition-local then global) posting merge": level 1
-                     inside each partition, level 2 a concatenation.
-Stage 3  dictionary  groupBy(field, term) over run *summaries* (column-
-                     pruned: n_docs/sum_tf only) -> doc_freq/total_term_freq.
-                     Map-side partial agg keeps the hot-term shuffle tiny.
-Stage 4  postings    runs shuffled once by hash(field, term) bucket; inside
-                     each bucket partition all runs of a term are local, so
-                     df(term) and block encoding need NO further shuffle.
-                     Emits ≤block_size-doc blocks with skip pointers
-                     (first/last doc) and an exact per-block max BM25 score
+                     compressed posting RUN, plus per-doc length rows —
+                     level 1 of the "two-level (partition-local then
+                     global) posting merge".
+Stage 3  dictionary  run *summaries* (column-pruned: n_docs/sum_tf only)
+                     hash-partitioned on the term's bucket, then grouped
+                     by (field, term) -> doc_freq/total_term_freq. One
+                     shuffle; each bucket directory is written by one task.
+Stage 4  postings    runs hash-partitioned once on (field, bucket) into
+                     ``_parallel.sized_partition_count`` tasks (at least
+                     defaultParallelism, more as the runs' plan-stat bytes
+                     grow; ``term_buckets`` is the on-disk bucket count,
+                     not a task count). Inside a task all runs of a term
+                     are local, so df(term) and block encoding need NO
+                     further shuffle, and each (field, bucket) directory
+                     is written by one task (one file). Level 2 of the
+                     merge: each term's decoded postings are ordered by
+                     absolute doc id — runs of one term can OVERLAP, as a
+                     docs-scan partition may pack non-adjacent doc-id files
+                     — and cut into ≤block_size-doc blocks with a skip span
+                     (min/max doc) and an exact per-block max BM25 score
                      (block-max WAND metadata).
 
 Hot-term skew: a term appearing in every doc ("the", "def") is never a
@@ -53,8 +59,8 @@ from xltsearch_spark.functions.norms import quantized_doc_length
 from xltsearch_spark.functions.varint import (decode_deltas, decode_varint,
                                               encode_deltas, encode_varint,
                                               encode_varint_grouped,
-                                              first_varint,
                                               varint_value_starts)
+from xltsearch_spark.operators._parallel import sized_partition_count
 
 ANALYZED_FIELDS = ("content", "title")
 KEYWORD_FIELDS = ("repo", "path", "commit", "lang", "hashsum",
@@ -374,9 +380,8 @@ def make_block_to_run_udf():
     (delta/varint formats of blocks and runs are identical by construction;
     only its sum_tf is decoded); a block carrying tombstoned docs (its
     ``dead`` array column, attached by a bucketized range join) is
-    re-encoded without them. ``range_id := skip_first_doc`` preserves the
-    per-term doc order the block encoder requires — block doc spans are
-    disjoint within and across segments (segment id ranges are disjoint)."""
+    re-encoded without them. ``range_id := skip_first_doc``; the block
+    encoder orders each term's postings by doc id itself."""
 
     def conv(it):
         for pdf in it:
@@ -502,11 +507,27 @@ def make_postings_summary_udf():
     return conv
 
 
+def _permute_varint_groups(raw: bytes, perm: np.ndarray,
+                           sizes: np.ndarray | None = None) -> bytes:
+    """Reorder a varint stream of consecutive groups (``sizes[i]`` values
+    each; one value per group when None) into ``perm`` order by a byte
+    gather — no decode, no re-encode."""
+    starts = varint_value_starts(raw)
+    if starts.size == 0:
+        return raw
+    if sizes is not None:
+        starts = starts[np.cumsum(sizes) - sizes]
+    lens = np.diff(np.append(starts, len(raw)))[perm]
+    idx = (np.repeat(starts[perm] - (np.cumsum(lens) - lens), lens)
+           + np.arange(int(lens.sum())))
+    return np.frombuffer(raw, dtype=np.uint8)[idx].tobytes()
+
+
 def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
-    """mapInPandas over bucket partitions: merge each term's (ordered,
-    disjoint) runs by concatenation and emit fixed-size blocks with exact
+    """mapInPandas over bucket partitions: merge each term's runs into one
+    doc-id-ordered posting list and emit fixed-size blocks with exact
     block-max score metadata. All runs of a term are guaranteed local
-    (bucket hash).
+    (bucket hash); they may overlap in doc ids (see Stage 4 above).
 
     Block max/min scores are computed under the CONFIGURED similarity —
     exactly Lucene, where the IndexWriterConfig's Similarity shapes the
@@ -517,10 +538,12 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
     block_quantize) before trusting the metadata for WAND pruning.
 
     Fully batch-vectorized: ONE decode per stream kind for the whole
-    partition, segment-cumsum for absolute doc ids, ``reduceat`` for block
-    max/min metadata, byte-slicing (no re-encode) for tf/dl/pos payloads;
-    only doc-id deltas are re-encoded (blocks must restart at an absolute
-    id). The sole Python loop assembles output tuples."""
+    partition, segment-cumsum for absolute doc ids, one ``lexsort`` for
+    the per-term doc order (with a byte gather of the tf/dl/pos payloads
+    when it moves anything), ``reduceat`` for block max/min metadata,
+    byte-slicing (no re-encode) for tf/dl/pos payloads; only doc-id deltas
+    are re-encoded (blocks must restart at an absolute id). The sole
+    Python loop assembles output tuples."""
     k1, b, quantize = config.k1, config.b, config.quantize_norms
     model = config.scoring_model
     block = config.block_size
@@ -531,21 +554,13 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
             return
         pdf = pd.concat(chunks, ignore_index=True)
         del chunks
-        # sort runs grouped by (field, term) with ranges ascending (doc-range
-        # order = doc-id order). Factorized int codes, never unicode arrays.
+        # group runs by (field, term); the doc order inside a term is set
+        # after the decode. Factorized int codes, never unicode arrays.
         fields = pdf["field"].to_numpy(dtype=object)
         terms = pdf["term"].to_numpy(dtype=object)
         fcodes = pd.factorize(fields, use_na_sentinel=False)[0]
         tcodes = pd.factorize(terms, use_na_sentinel=False)[0]
-        # order runs by their FIRST DOC ID, not range_id: several input
-        # partitions can emit runs for the SAME doc range (a range straddling
-        # a partition boundary), and cross-segment runs reuse range ids —
-        # range_id ties would concatenate doc-unsorted and corrupt the block
-        # skip spans. The first varint of docs_bin IS the absolute first doc
-        # (deltas restart per run), so the key is read without a full decode.
-        first_docs = np.fromiter((first_varint(b) for b in pdf["docs_bin"]),
-                                 dtype=np.int64, count=len(pdf))
-        order = np.lexsort((first_docs, tcodes, fcodes))
+        order = np.lexsort((tcodes, fcodes))
         pdf = pdf.iloc[order].reset_index(drop=True)
         fcodes, tcodes = fcodes[order], tcodes[order]
         fields = pdf["field"].to_numpy(dtype=object)
@@ -569,7 +584,7 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
         g = np.cumsum(deltas)
         corr = np.repeat(g[run_doc_starts] - deltas[run_doc_starts], nd)
         abs_ids = g - corr
-        # ---- term groups (runs are sorted; ranges disjoint & ordered) ----
+        # ---- term groups (runs are grouped by term) ----
         new_term_run = np.empty(R, dtype=bool)
         new_term_run[0] = True
         new_term_run[1:] = (tcodes[1:] != tcodes[:-1]) | (fcodes[1:] != fcodes[:-1])
@@ -577,6 +592,18 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
         term_doc_starts = run_doc_starts[term_run_idx]
         term_doc_counts = np.diff(np.append(term_doc_starts, D))
         tidx = np.repeat(np.arange(term_run_idx.size), term_doc_counts)
+        # ---- doc-id order within each term ----
+        # runs of one term may interleave (Stage 4 above): order the
+        # term's postings by absolute doc id and carry the per-doc tf, dl
+        # and position bytes along, so every block is strictly increasing
+        # and its skip span is its min/max doc
+        perm = np.lexsort((abs_ids, tidx))
+        if np.any(perm != np.arange(D)):
+            tok_counts = tfs
+            abs_ids, tfs, dls = abs_ids[perm], tfs[perm], dls[perm]
+            tfs_raw = _permute_varint_groups(tfs_raw, perm)
+            dls_raw = _permute_varint_groups(dls_raw, perm)
+            pos_raw = _permute_varint_groups(pos_raw, perm, tok_counts)
         # per-term scoring constants (model-aware: see docstring)
         df_term = term_doc_counts.astype(np.float64)
         if model == "bm25":
@@ -700,13 +727,16 @@ class IndexBuilder:
 
     def dictionary_stage(self, runs: DataFrame) -> DataFrame:
         # explicit projection before the exchange (guide §2.3): the binary
-        # posting payloads must never ride the dictionary shuffle
-        return (runs.select("field", "term", "bucket", "n_docs", "sum_tf")
-                .filter(F.col("term").isNotNull())
-                .groupBy("field", "term")
-                .agg(F.first("bucket").alias("bucket"),
-                     F.sum("n_docs").cast("long").alias("doc_freq"),
-                     F.sum("sum_tf").cast("long").alias("total_term_freq")))
+        # posting payloads must never ride the dictionary shuffle. The
+        # bucket is a function of the term, so hashing on it alone serves
+        # both the (field, term) grouping and the bucket-partitioned write
+        summ = (runs.select("field", "term", "bucket", "n_docs", "sum_tf")
+                .filter(F.col("term").isNotNull()))
+        return (summ.repartition(sized_partition_count(summ), "bucket")
+                .groupBy("bucket", "field", "term")
+                .agg(F.sum("n_docs").cast("long").alias("doc_freq"),
+                     F.sum("sum_tf").cast("long").alias("total_term_freq"))
+                .select("field", "term", "bucket", "doc_freq", "total_term_freq"))
 
     def stats_stage(self, docs: DataFrame, runs: DataFrame,
                     n_docs: int | None = None) -> BuildStats:
@@ -721,8 +751,8 @@ class IndexBuilder:
         return BuildStats(n_docs=n_docs, avgdl=avgdl, sum_ttf=sum_ttf)
 
     def postings_stage(self, runs: DataFrame, stats: BuildStats) -> DataFrame:
-        shuffled = (runs.filter(F.col("term").isNotNull())
-                    .repartition(self.config.term_buckets, F.col("field"), F.col("bucket")))
+        terms = runs.filter(F.col("term").isNotNull())
+        shuffled = terms.repartition(sized_partition_count(terms), "field", "bucket")
         udf = make_block_udf(self.config, stats.n_docs, stats.avgdl)
         return shuffled.mapInPandas(udf, schema=POSTING_SCHEMA)
 

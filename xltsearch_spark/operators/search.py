@@ -232,9 +232,11 @@ class SearchEngine:
         self._last_wand_tau_source: str | None = None
         # scan-task coalescing for exact-term queries: when the postings
         # frame is the builder's (field, bucket)-hash layout (partition
-        # count <= term_buckets), ALL rows for a query's terms live in at
-        # most |touched (field, bucket) pairs| partitions — the remaining
-        # tasks of the decode stage are empty Python round-trips (~10 ms
+        # count <= max(term_buckets, defaultParallelism): the builder sizes
+        # its task count from defaultParallelism up), ALL rows for a
+        # query's terms live in at most |touched (field, bucket) pairs|
+        # partitions — the remaining tasks of the decode stage are empty
+        # Python round-trips (~10 ms
         # each of pure protocol overhead). Coalescing the filtered scan to
         # the touched-pair count drops those empty tasks without losing
         # any real parallelism. Parquet-backed frames with more splits
@@ -1349,7 +1351,8 @@ class SearchEngine:
             except Exception:
                 self._postings_nparts = -1
         nparts = self._postings_nparts
-        if nparts < 1 or nparts > self.config.term_buckets:
+        if nparts < 1 or nparts > max(self.config.term_buckets,
+                                      self.spark.sparkContext.defaultParallelism):
             return scan
         touched = {(f, int(term_bucket(np.array([t], dtype=object),
                                        self.config.term_buckets)[0]))

@@ -259,7 +259,12 @@ def escape_class_opens(p: str) -> str:
     Lucene semantics the pyoracle implements. Escaping pins the literal
     meaning in every dialect. Applied at translation time only:
     ``RegexpQuery.pattern`` keeps the user's bytes (the fuzzed
-    round-trip contract)."""
+    round-trip contract).
+
+    A ``]`` right after ``[`` or ``[^`` is a literal member in Lucene
+    RegExp and Python re alike (``[]a]`` is the class of ``]`` and ``a``);
+    it is escaped too, so the scanner and Java regex agree on where the
+    class ends."""
     out = []
     in_class = False
     i = 0
@@ -278,6 +283,15 @@ def escape_class_opens(p: str) -> str:
                 in_class = False
         elif c == "[":
             in_class = True
+            out.append(c)
+            i += 1
+            if p.startswith("^", i):
+                out.append("^")
+                i += 1
+            if p.startswith("]", i):
+                out.append("\\]")
+                i += 1
+            continue
         out.append(c)
         i += 1
     return "".join(out)
