@@ -129,6 +129,37 @@ def test_block_min_is_lower_bound(bm25_setup, spark):
         assert blk["block_min_score"] <= sc.min() + 1e-12
 
 
+@pytest.mark.parametrize("model", ["bm25", "default"])
+def test_block_bounds_equal_decoded_scores(spark, model):
+    """Under the default config (quantized norms), every block's stored
+    block_max_score and block_min_score EQUAL the max and min of the scores
+    the engine decodes for its docs: the build and the engine share one
+    idf and one freq -> score expression, so no tolerance is needed."""
+    from pyspark.sql import functions as F
+    from xltsearch_spark.sources.corpus import generate_corpus
+    cfg = IndexConfig(scoring_model=model)
+    assert cfg.quantize_norms
+    engine, _ = build_engine(spark, generate_corpus(600, 0, 1), cfg)
+    idf_map = {(r["field"], r["term"]): int(r["doc_freq"])
+               for r in engine.dictionary.collect()}
+    decoded = engine._decode_blocks(engine.postings, idf_map, with_positions=False)
+    blk = engine.postings.select("field", "term", "block_id", "skip_first_doc",
+                                 "skip_last_doc", "block_max_score",
+                                 "block_min_score")
+    per_block = (decoded.join(blk, ["field", "term"])
+                 .filter(F.col("doc_id").between(F.col("skip_first_doc"),
+                                                 F.col("skip_last_doc")))
+                 .groupBy("field", "term", "block_id")
+                 .agg(F.max("score").alias("mx"), F.min("score").alias("mn"),
+                      F.first("block_max_score").alias("bmax"),
+                      F.first("block_min_score").alias("bmin")))
+    rows = per_block.collect()
+    assert len(rows) == engine.postings.count() > 1000
+    off = [(r["field"], r["term"], r["block_id"]) for r in rows
+           if r["mx"] != r["bmax"] or r["mn"] != r["bmin"]]
+    assert off == [], f"{len(off)} blocks, e.g. {off[:3]}"
+
+
 def test_wand_metadata_tau_skips_probe(spark):
     """With exact stats and full blocks, tau comes from block metadata (no
     probe job); with stale stats the probe fallback runs — both must return

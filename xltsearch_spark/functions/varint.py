@@ -7,6 +7,9 @@ array programs — no per-element Python loops over values; the only Python
 loops are over the ≤10 byte positions of a varint.
 
 Used for the ``postings`` table's binary block columns (FIXTURES.md §2).
+These are the scalar stream primitives; posting readers do not call the
+decoders row by row but go through ``functions/blocks.py``, which decodes a
+whole Arrow batch of runs or blocks with one call per stream.
 """
 
 from __future__ import annotations

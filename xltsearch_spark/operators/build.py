@@ -55,12 +55,11 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
 
 from xltsearch_spark.analyzers import analyze_flat, doc_lengths
 from xltsearch_spark.config import IndexConfig
-from xltsearch_spark.functions.norms import quantized_doc_length
-from xltsearch_spark.functions.varint import (decode_deltas, decode_varint,
-                                              encode_deltas, encode_varint,
-                                              encode_varint_grouped,
-                                              varint_value_starts)
+from xltsearch_spark.functions import blocks
+from xltsearch_spark.functions.varint import (encode_deltas, encode_varint,
+                                              encode_varint_grouped)
 from xltsearch_spark.operators._parallel import sized_partition_count
+from xltsearch_spark.plans import scoring
 
 ANALYZED_FIELDS = ("content", "title")
 KEYWORD_FIELDS = ("repo", "path", "commit", "lang", "hashsum",
@@ -376,117 +375,49 @@ def _emit_runs(out_rows, field, terms, docs, pos, dl_per_row, rows,
 def make_block_to_run_udf():
     """Posting BLOCKS -> synthesized RUNS, for segment MERGING (Lucene
     forceMerge without retokenization — IndexWriter merges by copying
-    postings, not re-analyzing). A clean block passes through byte-for-byte
-    (delta/varint formats of blocks and runs are identical by construction;
-    only its sum_tf is decoded); a block carrying tombstoned docs (its
-    ``dead`` array column, attached by a bucketized range join) is
-    re-encoded without them. ``range_id := skip_first_doc``; the block
-    encoder orders each term's postings by doc id itself."""
+    postings, not re-analyzing). Blocks and runs share one delta/varint
+    format, so ``blocks.drop_dead`` yields the run payloads: clean blocks
+    byte-for-byte, dirty ones without their tombstoned docs.
+    ``range_id := skip_first_doc``; the block encoder orders each term's
+    postings by doc id itself."""
+
+    cols = [f.name for f in RUN_SCHEMA.fields]
 
     def conv(it):
         for pdf in it:
-            has_dead = "dead" in pdf.columns
-            out = []
-            for r in pdf.itertuples(index=False):
-                nd = int(r.n_docs)
-                tfs = decode_varint(r.tfs_bin, nd).astype(np.int64)
-                dead = r.dead if has_dead else None
-                dead = [] if dead is None or (isinstance(dead, float)) else list(dead)
-                if not dead:
-                    out.append((r.field, r.term, int(r.skip_first_doc),
-                                int(r.bucket), nd, r.docs_bin, r.tfs_bin,
-                                r.dls_bin, r.pos_bin, int(tfs.sum())))
-                    continue
-                docs = decode_deltas(r.docs_bin, nd)
-                dls = decode_varint(r.dls_bin, nd)
-                keep = ~np.isin(docs, np.asarray(dead, dtype=np.int64))
-                if not keep.any():
-                    continue
-                if r.pos_bin is not None and len(r.pos_bin):
-                    # per-doc byte spans in the positions stream: doc i owns
-                    # tf[i] varint values (tf >= 1 always, spans contiguous)
-                    starts = varint_value_starts(r.pos_bin)
-                    cum = np.concatenate(([0], np.cumsum(tfs)))
-                    bstart = starts[cum[:-1]]
-                    bend = np.append(bstart[1:], len(r.pos_bin))
-                    pos_out = b"".join(r.pos_bin[bstart[i]:bend[i]]
-                                       for i in np.nonzero(keep)[0])
-                else:
-                    pos_out = r.pos_bin
-                out.append((r.field, r.term, int(r.skip_first_doc),
-                            int(r.bucket), int(keep.sum()),
-                            encode_deltas(docs[keep]),
-                            encode_varint(tfs[keep].astype(np.uint64)),
-                            encode_varint(dls[keep].astype(np.uint64)),
-                            pos_out, int(tfs[keep].sum())))
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in RUN_SCHEMA.fields])
+            pdf = blocks.drop_dead(pdf)
+            if len(pdf):
+                p = blocks.decode(pdf, ("tfs",))
+                pdf["sum_tf"] = blocks.row_sums(p.tfs, p.counts)
+                yield pdf.rename(columns={"skip_first_doc": "range_id"})[cols]
 
     return conv
 
 
 def make_block_merge_udf():
-    """Posting BLOCKS -> posting blocks for the FAST merge path: a clean
-    block is copied byte-for-byte; a block carrying tombstoned docs drops
-    them and refreshes n_docs / skip span / max_tf / min_dl. The stored
-    block_max_score is NOT recomputed — for the kept subset the old value
-    stays a valid (possibly loose) upper bound, and the engine's
-    stale-stats WAND bounds handle the rest (catalog marks the index
-    block_max_exact=False). This is Lucene's merge: postings are copied,
-    never re-scored or re-analyzed — cost tracks index bytes, not CPU."""
+    """Posting BLOCKS -> posting blocks for the FAST merge path:
+    ``blocks.drop_dead`` copies a clean block byte-for-byte and drops a
+    dirty block's tombstoned docs, refreshing n_docs / skip span / max_tf /
+    min_dl. The stored block_max_score is NOT recomputed — for the kept
+    subset the old value stays a valid (possibly loose) upper bound, and
+    the engine's stale-stats WAND bounds handle the rest (catalog marks
+    the index block_max_exact=False). This is Lucene's merge: postings are
+    copied, never re-scored or re-analyzed — cost tracks index bytes, not
+    CPU."""
+    cols = [f.name for f in POSTING_SCHEMA.fields]
 
     def conv(it):
         for pdf in it:
-            has_dead = "dead" in pdf.columns
-            keep_cols = [f.name for f in POSTING_SCHEMA.fields]
-            out = []
-            for r in pdf.itertuples(index=False):
-                dead = r.dead if has_dead else None
-                dead = [] if dead is None or isinstance(dead, float) else list(dead)
-                if not dead:
-                    out.append((r.field, r.term, r.bucket, r.block_id,
-                                r.n_docs, r.skip_first_doc, r.skip_last_doc,
-                                r.block_max_score, r.block_min_score,
-                                r.max_tf, r.min_dl,
-                                r.docs_bin, r.tfs_bin, r.dls_bin, r.pos_bin))
-                    continue
-                nd = int(r.n_docs)
-                docs = decode_deltas(r.docs_bin, nd)
-                tfs = decode_varint(r.tfs_bin, nd).astype(np.int64)
-                dls = decode_varint(r.dls_bin, nd).astype(np.int64)
-                keep = ~np.isin(docs, np.asarray(dead, dtype=np.int64))
-                if not keep.any():
-                    continue
-                if r.pos_bin is not None and len(r.pos_bin):
-                    starts = varint_value_starts(r.pos_bin)
-                    cum = np.concatenate(([0], np.cumsum(tfs)))
-                    bstart = starts[cum[:-1]]
-                    bend = np.append(bstart[1:], len(r.pos_bin))
-                    pos_out = b"".join(r.pos_bin[bstart[i]:bend[i]]
-                                       for i in np.nonzero(keep)[0])
-                else:
-                    pos_out = r.pos_bin
-                kd, kt, kl = docs[keep], tfs[keep], dls[keep]
-                # old block_min_score stays a valid FLOOR for the kept subset
-                # (min over a subset can only rise); the stored value is kept,
-                # like block_max_score, and the post-merge stats_exact=False
-                # gate keeps the engine from seeding tau off it anyway
-                out.append((r.field, r.term, r.bucket, r.block_id,
-                            int(keep.sum()), int(kd.min()), int(kd.max()),
-                            r.block_max_score, r.block_min_score,
-                            int(kt.max()), int(kl.min()),
-                            encode_deltas(kd),
-                            encode_varint(kt.astype(np.uint64)),
-                            encode_varint(kl.astype(np.uint64)), pos_out))
-            if out:
-                yield pd.DataFrame(out, columns=keep_cols)
+            pdf = blocks.drop_dead(pdf)
+            if len(pdf):
+                yield pdf[cols]
 
     return conv
 
 
 def make_postings_summary_udf():
     """postings -> (field, term, bucket, n_docs, sum_tf) rows: the cheap
-    varint-decode pass that rebuilds dictionary/stats after a fast merge."""
+    tfs-only decode pass that rebuilds dictionary/stats after a fast merge."""
     schema = StructType([
         StructField("field", StringType()), StructField("term", StringType()),
         StructField("bucket", IntegerType()), StructField("n_docs", LongType()),
@@ -495,32 +426,13 @@ def make_postings_summary_udf():
 
     def conv(it):
         for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                tfs = decode_varint(r.tfs_bin, int(r.n_docs))
-                out.append((r.field, r.term, int(r.bucket), int(r.n_docs),
-                            int(tfs.sum())))
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+            if len(pdf):
+                p = blocks.decode(pdf, ("tfs",))
+                pdf["sum_tf"] = blocks.row_sums(p.tfs, p.counts)
+                yield pdf[[f.name for f in schema.fields]]
 
     conv.schema = schema
     return conv
-
-
-def _permute_varint_groups(raw: bytes, perm: np.ndarray,
-                           sizes: np.ndarray | None = None) -> bytes:
-    """Reorder a varint stream of consecutive groups (``sizes[i]`` values
-    each; one value per group when None) into ``perm`` order by a byte
-    gather — no decode, no re-encode."""
-    starts = varint_value_starts(raw)
-    if starts.size == 0:
-        return raw
-    if sizes is not None:
-        starts = starts[np.cumsum(sizes) - sizes]
-    lens = np.diff(np.append(starts, len(raw)))[perm]
-    idx = (np.repeat(starts[perm] - (np.cumsum(lens) - lens), lens)
-           + np.arange(int(lens.sum())))
-    return np.frombuffer(raw, dtype=np.uint8)[idx].tobytes()
 
 
 def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
@@ -537,13 +449,14 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
     way. The engine verifies this provenance (block_score_model /
     block_quantize) before trusting the metadata for WAND pruning.
 
-    Fully batch-vectorized: ONE decode per stream kind for the whole
-    partition, segment-cumsum for absolute doc ids, one ``lexsort`` for
+    Fully batch-vectorized: ONE ``blocks.decode`` of the whole partition
+    (one varint decode per stream, segmented cumsum for absolute doc ids;
+    scores through ``scoring.score_freq``), one ``lexsort`` for
     the per-term doc order (with a byte gather of the tf/dl/pos payloads
     when it moves anything), ``reduceat`` for block max/min metadata,
     byte-slicing (no re-encode) for tf/dl/pos payloads; only doc-id deltas
-    are re-encoded (blocks must restart at an absolute id). The sole
-    Python loop assembles output tuples."""
+    are re-encoded (blocks must restart at an absolute id). Python touches
+    blocks only to slice their payloads."""
     k1, b, quantize = config.k1, config.b, config.quantize_norms
     model = config.scoring_model
     block = config.block_size
@@ -572,18 +485,10 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
         if D == 0:
             return
         run_doc_starts = np.concatenate(([0], np.cumsum(nd)[:-1]))
-        # ---- batch decode of all runs ----
-        docs_raw = b"".join(pdf["docs_bin"])
-        tfs_raw = b"".join(pdf["tfs_bin"])
-        dls_raw = b"".join(pdf["dls_bin"])
-        pos_raw = b"".join(x if x is not None else b"" for x in pdf["pos_bin"])
-        deltas = decode_varint(docs_raw, D).astype(np.int64)
-        tfs = decode_varint(tfs_raw, D).astype(np.int64)
-        dls = decode_varint(dls_raw, D).astype(np.int64)
-        # absolute doc ids: segment cumsum (deltas reset at each run start)
-        g = np.cumsum(deltas)
-        corr = np.repeat(g[run_doc_starts] - deltas[run_doc_starts], nd)
-        abs_ids = g - corr
+        p = blocks.decode(pdf)
+        abs_ids, tfs, dls = p.docs, p.tfs, p.dls
+        tfs_raw, dls_raw = p.raw["tfs"], p.raw["dls"]
+        pos_raw = blocks.join(pdf["pos_bin"])
         # ---- term groups (runs are grouped by term) ----
         new_term_run = np.empty(R, dtype=bool)
         new_term_run[0] = True
@@ -601,80 +506,41 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
         if np.any(perm != np.arange(D)):
             tok_counts = tfs
             abs_ids, tfs, dls = abs_ids[perm], tfs[perm], dls[perm]
-            tfs_raw = _permute_varint_groups(tfs_raw, perm)
-            dls_raw = _permute_varint_groups(dls_raw, perm)
-            pos_raw = _permute_varint_groups(pos_raw, perm, tok_counts)
-        # per-term scoring constants (model-aware: see docstring)
-        df_term = term_doc_counts.astype(np.float64)
-        if model == "bm25":
-            idf_t = np.log(1 + (n_docs - df_term + 0.5) / (df_term + 0.5))
-            uniq_fields = pd.unique(fields[term_run_idx])
-            ad_map = {f: (avgdl.get(f, 1.0) or 1.0) for f in uniq_fields}
-            ad_t = pd.Series(fields[term_run_idx]).map(ad_map).to_numpy(dtype=np.float64)
-            dlq = quantized_doc_length(dls) if quantize else dls.astype(np.float64)
-            scores = idf_t[tidx] * (k1 + 1) * tfs / (
-                tfs + k1 * (1 - b + b * dlq / ad_t[tidx]))
-        else:  # DefaultSimilarity: sqrt(tf) * idf^2 * norm(dl), same
-            # formula as the engine's decode kernel (search._decode_blocks)
-            from xltsearch_spark.functions.norms import decoded_tf_idf_norm
-            idf_t = 1 + np.log(n_docs / (df_term + 1))
-            nrm = (decoded_tf_idf_norm(dls) if quantize
-                   else np.where(dls > 0,
-                                 1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-            scores = np.sqrt(tfs.astype(np.float64)) * (idf_t * idf_t)[tidx] * nrm
+            tfs_raw = blocks.gather(tfs_raw, perm)
+            dls_raw = blocks.gather(dls_raw, perm)
+            pos_raw = blocks.gather(pos_raw, perm, tok_counts)
+        # per-term scoring constants through the engine's own scalar idf
+        # (one call per distinct df) and per-posting score_freq, so every
+        # stored bound is exactly a score the engine decodes
+        uniq_df, df_inv = np.unique(term_doc_counts, return_inverse=True)
+        idf_t = np.array([scoring.idf(model, n_docs, int(d)) for d in uniq_df])[df_inv]
+        run_fields = fields[term_run_idx]
+        ad_map = {f: (avgdl.get(f, 1.0) or 1.0) for f in pd.unique(run_fields)}
+        ad_t = pd.Series(run_fields).map(ad_map).to_numpy(dtype=np.float64)
+        scores = scoring.score_freq(model, tfs, dls, idf_t[tidx], ad_t[tidx],
+                                    k1, b, quantize)
         # ---- block boundaries (within-term, never spanning terms) ----
         w = np.arange(D) - np.repeat(term_doc_starts, term_doc_counts)
         blk_starts = np.nonzero(w % block == 0)[0]
-        blk_ends = np.append(blk_starts[1:], D)
-        blk_ids = w[blk_starts] // block
-        blk_tidx = tidx[blk_starts]
-        # block metadata via segment reductions
-        blk_max_score = np.maximum.reduceat(scores, blk_starts)
-        blk_min_score = np.minimum.reduceat(scores, blk_starts)
-        blk_max_tf = np.maximum.reduceat(tfs, blk_starts)
-        blk_min_dl = np.minimum.reduceat(dls, blk_starts)
-        skip_first = abs_ids[blk_starts]
-        skip_last = abs_ids[blk_ends - 1]
-        # doc-id deltas re-anchored at block starts, one grouped encode
-        bdeltas = np.empty(D, dtype=np.int64)
-        bdeltas[0] = abs_ids[0]
-        bdeltas[1:] = abs_ids[1:] - abs_ids[:-1]
-        bdeltas[blk_starts] = abs_ids[blk_starts]
-        docs_buf, docs_off = encode_varint_grouped(bdeltas.astype(np.uint64), blk_starts)
-        docs_end = np.append(docs_off[1:], len(docs_buf))
-        # tf/dl payloads: slice the RAW concatenated streams at value offsets
-        tf_starts_b = varint_value_starts(tfs_raw)
-        dl_starts_b = varint_value_starts(dls_raw)
-        tf_off = tf_starts_b[blk_starts]
-        tf_end = np.append(tf_off[1:], len(tfs_raw))
-        dl_off = dl_starts_b[blk_starts]
-        dl_end = np.append(dl_off[1:], len(dls_raw))
-        # position payloads: token-space offsets -> byte offsets
-        tok_starts = np.concatenate(([0], np.cumsum(tfs)))
-        pos_starts_b = varint_value_starts(pos_raw)
-        total_pos_bytes = len(pos_raw)
-        pos_tok0 = tok_starts[blk_starts]
-        pos_off = pos_starts_b[pos_tok0] if pos_starts_b.size else np.zeros(blk_starts.size, np.int64)
-        pos_end = np.append(pos_off[1:], total_pos_bytes)
-        # ---- assemble ----
-        run_fields = fields[term_run_idx]
-        run_terms = terms[term_run_idx]
-        run_buckets = buckets[term_run_idx]
-        out = []
-        for i in range(blk_starts.size):
-            t = blk_tidx[i]
-            out.append((run_fields[t], run_terms[t], int(run_buckets[t]),
-                        int(blk_ids[i]), int(blk_ends[i] - blk_starts[i]),
-                        int(skip_first[i]), int(skip_last[i]),
-                        float(blk_max_score[i]), float(blk_min_score[i]),
-                        int(blk_max_tf[i]), int(blk_min_dl[i]),
-                        docs_buf[docs_off[i]:docs_end[i]],
-                        tfs_raw[tf_off[i]:tf_end[i]],
-                        dls_raw[dl_off[i]:dl_end[i]],
-                        pos_raw[pos_off[i]:pos_end[i]]))
-        cols = [f.name for f in POSTING_SCHEMA.fields]
+        blk_n = np.diff(np.append(blk_starts, D))
+        t = term_run_idx[tidx[blk_starts]]
+        # block metadata via segment reductions; tf/dl/pos payloads are
+        # byte slices of the raw streams, only doc-id deltas re-encode
+        out = pd.DataFrame({
+            "field": fields[t], "term": terms[t], "bucket": buckets[t],
+            "block_id": w[blk_starts] // block, "n_docs": blk_n,
+            "skip_first_doc": abs_ids[blk_starts],
+            "skip_last_doc": abs_ids[blk_starts + blk_n - 1],
+            "block_max_score": np.maximum.reduceat(scores, blk_starts),
+            "block_min_score": np.minimum.reduceat(scores, blk_starts),
+            "max_tf": np.maximum.reduceat(tfs, blk_starts),
+            "min_dl": np.minimum.reduceat(dls, blk_starts),
+            "docs_bin": blocks.encode_docs(abs_ids, blk_starts),
+            "tfs_bin": blocks.split_groups(tfs_raw, blk_n),
+            "dls_bin": blocks.split_groups(dls_raw, blk_n),
+            "pos_bin": blocks.split_groups(pos_raw, blocks.row_sums(tfs, blk_n))})
         for j in range(0, len(out), 50000):
-            yield pd.DataFrame(out[j:j + 50000], columns=cols)
+            yield out.iloc[j:j + 50000]
 
     return to_blocks
 
@@ -765,12 +631,10 @@ class IndexBuilder:
 
         def explode_dl(it):
             for pdf in it:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    d = decode_deltas(r.docs_bin, int(r.n_docs))
-                    l = decode_varint(r.tfs_bin, int(r.n_docs)).astype(np.int64)
-                    out.append(pd.DataFrame({"field": r.field, "doc_id": d, "dl": l}))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                p = blocks.decode(pdf, ("docs", "tfs"))
+                if p.row.size:
+                    yield pd.DataFrame({
+                        "field": pdf["field"].to_numpy(dtype=object)[p.row],
+                        "doc_id": p.docs, "dl": p.tfs})
 
         return runs.filter(F.col("term").isNull()).mapInPandas(explode_dl, schema=dl_schema)

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass, replace as dc_replace
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -37,8 +38,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from xltsearch_spark.config import IndexConfig
-from xltsearch_spark.functions.norms import quantized_doc_length, decoded_tf_idf_norm
-from xltsearch_spark.functions.varint import decode_deltas, decode_varint
+from xltsearch_spark.functions import blocks
 from xltsearch_spark.operators.build import BuildStats, term_bucket
 from xltsearch_spark.plans import scoring
 from xltsearch_spark.plans.parser import (BooleanQuery, DisMaxQuery, MatchAllQuery, MUST,
@@ -63,6 +63,15 @@ DECODED_SCHEMA = StructType([
     StructField("dl", LongType()),
     StructField("positions", BinaryType()),  # int64-LE absolute positions (phrase eval)
 ])
+SCORE_SCHEMA = StructType([StructField("doc_id", LongType()),
+                           StructField("score", DoubleType())])
+
+
+def _freq_scorer(cfg: IndexConfig):
+    """``scoring.score_freq`` under the configured similarity:
+    (freq, dl, idf, avgdl) -> per-doc scores."""
+    return partial(scoring.score_freq, cfg.scoring_model, k1=cfg.k1, b=cfg.b,
+                   quantize=cfg.quantize_norms)
 
 
 @dataclass
@@ -816,15 +825,10 @@ class SearchEngine:
         idf_map = self._doc_freqs(terms)
         model = self.config.scoring_model
         n, k1 = self.stats.n_docs, self.config.k1
-        if model == "bm25":
-            qn = 1.0
-            def idf_of(f, t):
-                return scoring.bm25_idf(n, idf_map.get((f, t), 0))
-        else:
-            def idf_of(f, t):
-                return scoring.tfidf_idf(n, idf_map.get((f, t), 0))
-            qn = scoring.query_norm(
-                scoring.tfidf_sum_sq_weights(ast, 1.0, idf_of))
+        def idf_of(f, t):
+            return scoring.idf(model, n, idf_map.get((f, t), 0))
+        qn = 1.0 if model == "bm25" else scoring.query_norm(
+            scoring.tfidf_sum_sq_weights(ast, 1.0, idf_of))
 
         # ONE decode serves both the scorer and the per-clause join: the
         # query's decoded rows are small (bounded by the terms' postings),
@@ -1375,44 +1379,33 @@ class SearchEngine:
         return self._decode_blocks(scan, idf_map, with_positions)
 
     def _decode_blocks(self, scan: DataFrame, idf_map, with_positions: bool) -> DataFrame:
+        """Blocks -> one scored row per posting, a batch at a time through
+        ``blocks.decode`` and ``scoring.score_freq``."""
         cfg = self.config
-        n_docs = self.stats.n_docs
-        avgdl = self.stats.avgdl
-        model = cfg.scoring_model
-        k1, b, quantize = cfg.k1, cfg.b, cfg.quantize_norms
+        model, score = cfg.scoring_model, _freq_scorer(cfg)
+        n_docs, avgdl = self.stats.n_docs, self.stats.avgdl
+        idf_of = {k: scoring.idf(model, n_docs, df) for k, df in idf_map.items()}
+        idf_absent = scoring.idf(model, n_docs, 0)
+        streams = ("docs", "tfs", "dls") + (("pos",) if with_positions else ())
 
         def decode(it):
             for pdf in it:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    nd = int(r.n_docs)
-                    docs = decode_deltas(r.docs_bin, nd)
-                    tfs = decode_varint(r.tfs_bin, nd).astype(np.int64)
-                    dls = decode_varint(r.dls_bin, nd).astype(np.int64)
-                    df_t = idf_map.get((r.field, r.term), 0)
-                    ad = avgdl.get(r.field, 1.0) or 1.0
-                    dlq = quantized_doc_length(dls) if quantize else dls.astype(np.float64)
-                    if model == "bm25":
-                        idf = scoring.bm25_idf(n_docs, df_t)
-                        sc = idf * (k1 + 1) * scoring.bm25_tf_norm(tfs, dlq, ad, k1, b)
-                    else:
-                        idf = scoring.tfidf_idf(n_docs, df_t)
-                        nrm = (decoded_tf_idf_norm(dls) if quantize
-                               else np.where(dls > 0, 1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-                        sc = np.sqrt(tfs.astype(np.float64)) * idf * idf * nrm
-                    if with_positions and r.pos_bin is not None:
-                        pos_all = decode_varint(r.pos_bin)
-                        offs = np.concatenate(([0], np.cumsum(tfs)))
-                        pos_col = [np.cumsum(pos_all[offs[i]:offs[i + 1]]
-                                             .astype(np.int64)).tobytes()
-                                   for i in range(nd)]
-                    else:
-                        pos_col = [None] * nd
-                    out.append(pd.DataFrame({
-                        "field": r.field, "term": r.term, "doc_id": docs,
-                        "score": sc, "tf": tfs, "dl": dls, "positions": pos_col}))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                p = blocks.decode(pdf, streams)
+                if not p.row.size:
+                    continue
+                fields = pdf["field"].to_numpy(dtype=object)
+                terms = pdf["term"].to_numpy(dtype=object)
+                idf = np.fromiter((idf_of.get(k, idf_absent)
+                                   for k in zip(fields, terms)),
+                                  dtype=np.float64, count=len(pdf))
+                ad = np.fromiter((avgdl.get(f, 1.0) or 1.0 for f in fields),
+                                 dtype=np.float64, count=len(pdf))
+                sc = score(p.tfs, p.dls, idf[p.row], ad[p.row])
+                yield pd.DataFrame({
+                    "field": fields[p.row], "term": terms[p.row],
+                    "doc_id": p.docs, "score": sc, "tf": p.tfs, "dl": p.dls,
+                    "positions": (blocks.position_blobs(p) if with_positions
+                                  else [None] * p.row.size)})
 
         return scan.mapInPandas(decode, schema=DECODED_SCHEMA)
 
@@ -1472,15 +1465,11 @@ class SearchEngine:
         n_docs = self.stats.n_docs
         avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
         df_t = idf_map.get((node.field, node.term), 0)
-        model, k1, b, quantize = (cfg.scoring_model, cfg.k1, cfg.b,
-                                  cfg.quantize_norms)
-        idf = (scoring.bm25_idf(n_docs, df_t) if model == "bm25"
-               else scoring.tfidf_idf(n_docs, df_t))
+        score = _freq_scorer(cfg)
+        idf = scoring.idf(cfg.scoring_model, n_docs, df_t)
         end = int(node.end)
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
                                           else 1.0)
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
 
         def score_partition(it):
             chunks = list(it)
@@ -1499,23 +1488,13 @@ class SearchEngine:
             keep = sf > 0
             if not keep.any():
                 return
-            sfk = sf[keep].astype(np.float64)
             dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            dlq = quantized_doc_length(dls) if quantize \
-                else dls.astype(np.float64)
-            if model == "bm25":
-                sc = idf * (k1 + 1) * scoring.bm25_tf_norm(sfk, dlq, avgdl,
-                                                           k1, b)
-            else:
-                nrm = (decoded_tf_idf_norm(dls) if quantize
-                       else np.where(dls > 0,
-                                     1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-                sc = np.sqrt(sfk) * idf * idf * nrm
+            sc = score(sf[keep], dls, idf, avgdl)
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
                 "score": sc * final_mult})
 
-        return cand.mapInPandas(score_partition, schema=out_schema)
+        return cand.mapInPandas(score_partition, schema=SCORE_SCHEMA)
 
     def search_span_first(self, term: str, end: int, field: str | None = None,
                           limit: int = 100) -> DataFrame:
@@ -1569,17 +1548,12 @@ class SearchEngine:
         avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
         df1 = idf_map.get((node.field, node.first), 0)
         df2 = idf_map.get((node.field, node.second), 0)
-        model, k1, b, quantize = (cfg.scoring_model, cfg.k1, cfg.b,
-                                  cfg.quantize_norms)
-        if model == "bm25":
-            idf = scoring.bm25_idf(n_docs, df1) + scoring.bm25_idf(n_docs, df2)
-        else:
-            idf = scoring.tfidf_idf(n_docs, df1) + scoring.tfidf_idf(n_docs, df2)
+        score = _freq_scorer(cfg)
+        idf = (scoring.idf(cfg.scoring_model, n_docs, df1)
+               + scoring.idf(cfg.scoring_model, n_docs, df2))
         slop = int(node.slop)
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
                                           else 1.0)
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
 
         def score_partition(it):
             chunks = list(it)
@@ -1613,23 +1587,13 @@ class SearchEngine:
             keep = sf > 0
             if not keep.any():
                 return
-            sfk = sf[keep]
             dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            dlq = quantized_doc_length(dls) if quantize \
-                else dls.astype(np.float64)
-            if model == "bm25":
-                sc = idf * (k1 + 1) * scoring.bm25_tf_norm(sfk, dlq, avgdl,
-                                                           k1, b)
-            else:
-                nrm = (decoded_tf_idf_norm(dls) if quantize
-                       else np.where(dls > 0,
-                                     1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-                sc = np.sqrt(sfk) * idf * idf * nrm
+            sc = score(sf[keep], dls, idf, avgdl)
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
                 "score": sc * final_mult})
 
-        return cand.mapInPandas(score_partition, schema=out_schema)
+        return cand.mapInPandas(score_partition, schema=SCORE_SCHEMA)
 
     def search_collapsed(self, query: str, group_field: str,
                          group_limit: int = 1,
@@ -1677,12 +1641,8 @@ class SearchEngine:
         """Score (doc_id, sf, dl) rows with the active similarity — the
         shared tail of every spans evaluator (frequency already computed).
         Python touches only the per-doc aggregate rows, never postings."""
-        cfg = self.config
         avgdl = self.stats.avgdl.get(field, 1.0) or 1.0
-        model, k1, b, quantize = (cfg.scoring_model, cfg.k1, cfg.b,
-                                  cfg.quantize_norms)
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
+        score = _freq_scorer(self.config)
 
         def score_partition(it):
             chunks = list(it)
@@ -1692,23 +1652,13 @@ class SearchEngine:
             pdf = pdf[pdf["sf"] > 0]
             if pdf.empty:
                 return
-            sfk = pdf["sf"].to_numpy(dtype=np.float64)
-            dls = pdf["dl"].to_numpy(dtype=np.int64)
-            dlq = quantized_doc_length(dls) if quantize \
-                else dls.astype(np.float64)
-            if model == "bm25":
-                sc = idf * (k1 + 1) * scoring.bm25_tf_norm(sfk, dlq, avgdl,
-                                                           k1, b)
-            else:
-                nrm = (decoded_tf_idf_norm(dls) if quantize
-                       else np.where(dls > 0,
-                                     1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-                sc = np.sqrt(sfk) * idf * idf * nrm
+            sc = score(pdf["sf"].to_numpy(dtype=np.float64),
+                       pdf["dl"].to_numpy(dtype=np.int64), idf, avgdl)
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
                 "score": sc * final_mult})
 
-        return rows.mapInPandas(score_partition, schema=out_schema)
+        return rows.mapInPandas(score_partition, schema=SCORE_SCHEMA)
 
     def _eval_span_or(self, node: SpanOrQuery, decoded, mult, idf_map,
                       tfidf_qn) -> DataFrame:
@@ -1718,12 +1668,9 @@ class SearchEngine:
         decode, no Python until the per-doc (sf, dl) rows."""
         cfg = self.config
         n_docs = self.stats.n_docs
-        if cfg.scoring_model == "bm25":
-            idf = sum(scoring.bm25_idf(n_docs, idf_map.get((node.field, t), 0))
-                      for t in node.terms)
-        else:
-            idf = sum(scoring.tfidf_idf(n_docs, idf_map.get((node.field, t), 0))
-                      for t in node.terms)
+        idf = sum(scoring.idf(cfg.scoring_model, n_docs,
+                              idf_map.get((node.field, t), 0))
+                  for t in node.terms)
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
                                           else 1.0)
         # duplicate clauses each contribute their spans (SpanOr unions
@@ -1763,16 +1710,12 @@ class SearchEngine:
         cfg = self.config
         n_docs = self.stats.n_docs
         df_i = idf_map.get((node.field, node.include), 0)
-        idf = (scoring.bm25_idf(n_docs, df_i) if cfg.scoring_model == "bm25"
-               else scoring.tfidf_idf(n_docs, df_i))
+        idf = scoring.idf(cfg.scoring_model, n_docs, df_i)
         pre, post = int(node.pre), int(node.post)
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
                                           else 1.0)
         avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        model, k1, b, quantize = (cfg.scoring_model, cfg.k1, cfg.b,
-                                  cfg.quantize_norms)
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
+        score = _freq_scorer(cfg)
 
         def score_surviving(it):
             # count + similarity in ONE kernel (like span_near) — no
@@ -1808,23 +1751,13 @@ class SearchEngine:
             keep = sf > 0
             if not keep.any():
                 return
-            sfk = sf[keep]
             dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            dlq = quantized_doc_length(dls) if quantize \
-                else dls.astype(np.float64)
-            if model == "bm25":
-                sc = idf * (k1 + 1) * scoring.bm25_tf_norm(sfk, dlq, avgdl,
-                                                           k1, b)
-            else:
-                nrm = (decoded_tf_idf_norm(dls) if quantize
-                       else np.where(dls > 0,
-                                     1.0 / np.sqrt(np.maximum(dls, 1)), 0.0))
-                sc = np.sqrt(sfk) * idf * idf * nrm
+            sc = score(sf[keep], dls, idf, avgdl)
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
                 "score": sc * final_mult})
 
-        return cand.mapInPandas(score_surviving, schema=out_schema)
+        return cand.mapInPandas(score_surviving, schema=SCORE_SCHEMA)
 
     def search_span_or(self, terms: list[str] | tuple[str, ...],
                        field: str | None = None,
@@ -1912,9 +1845,7 @@ class SearchEngine:
              * (F.col("_sm") - F.col("_mx"))).alias("score"))
 
     def _empty_scores(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], StructType([StructField("doc_id", LongType()),
-                            StructField("score", DoubleType())]))
+        return self.spark.createDataFrame([], SCORE_SCHEMA)
 
     def _eval_phrase(self, node: PhraseQuery, decoded, mult, idf_map, tfidf_qn):
         """Position-list intersection: ONE repartition(doc_id) of the phrase
@@ -1929,15 +1860,11 @@ class SearchEngine:
                 .select("doc_id", "term", "positions", "dl"))
         cfg = self.config
         n_docs, avgdl = self.stats.n_docs, self.stats.avgdl.get(node.field, 1.0) or 1.0
-        if cfg.scoring_model == "bm25":
-            idf = sum(scoring.bm25_idf(n_docs, idf_map.get((node.field, t), 0)) for t in terms)
-        else:
-            idf = sum(scoring.tfidf_idf(n_docs, idf_map.get((node.field, t), 0)) for t in terms)
-        k1, b, quantize, model = cfg.k1, cfg.b, cfg.quantize_norms, cfg.scoring_model
+        idf = sum(scoring.idf(cfg.scoring_model, n_docs,
+                              idf_map.get((node.field, t), 0)) for t in terms)
+        score = _freq_scorer(cfg)
         slop = node.slop
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None else 1.0)
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
 
         def score_partition(it):
             # Vectorized across ALL candidate docs in the partition — no
@@ -2021,16 +1948,7 @@ class SearchEngine:
             hit = pf_per_doc > 0
             if not hit.any():
                 return
-            pf_arr = pf_per_doc[hit]
-            dl_arr = dl_all[hit]
-            dlq = quantized_doc_length(dl_arr) if quantize else dl_arr.astype(np.float64)
-            if model == "bm25":
-                sc = final_mult * idf * (k1 + 1) * pf_arr / (
-                    pf_arr + k1 * (1 - b + b * dlq / avgdl))
-            else:
-                nrm = (decoded_tf_idf_norm(dl_arr) if quantize
-                       else np.where(dl_arr > 0, 1.0 / np.sqrt(np.maximum(dl_arr, 1)), 0.0))
-                sc = final_mult * np.sqrt(pf_arr) * idf * idf * nrm
+            sc = final_mult * score(pf_per_doc[hit], dl_all[hit], idf, avgdl)
             yield pd.DataFrame({"doc_id": duniq[hit].astype(np.int64), "score": sc})
 
         # keyed repartition WITHOUT an explicit partition count: an explicit
@@ -2039,7 +1957,7 @@ class SearchEngine:
         # tiny phrase shuffles to one task and leaves big ones at
         # spark.sql.shuffle.partitions
         return (cand.repartition("doc_id")
-                .mapInPandas(score_partition, schema=out_schema))
+                .mapInPandas(score_partition, schema=SCORE_SCHEMA))
 
     def _eval_multi_phrase(self, node: MultiPhraseQuery, decoded, mult,
                            idf_map, tfidf_qn):
@@ -2068,25 +1986,17 @@ class SearchEngine:
         cfg = self.config
         n_docs = self.stats.n_docs
         avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        if cfg.scoring_model == "bm25":
-            idf = sum(scoring.bm25_idf(n_docs, idf_map.get((node.field, t), 0))
-                      for t, _ in node.terms)
-            idf += sum(scoring.bm25_idf(n_docs, idf_map.get((node.field, t), 0))
-                       for t in node.expansions)
-        else:
-            idf = sum(scoring.tfidf_idf(n_docs, idf_map.get((node.field, t), 0))
-                      for t, _ in node.terms)
-            idf += sum(scoring.tfidf_idf(n_docs, idf_map.get((node.field, t), 0))
-                       for t in node.expansions)
-        k1, b, quantize, model = cfg.k1, cfg.b, cfg.quantize_norms, cfg.scoring_model
+        def idf_sum(ts):
+            return sum(scoring.idf(cfg.scoring_model, n_docs,
+                                   idf_map.get((node.field, t), 0)) for t in ts)
+        idf = idf_sum(t for t, _ in node.terms) + idf_sum(node.expansions)
+        score = _freq_scorer(cfg)
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
                                           else 1.0)
         slot_of: dict[str, list[tuple[int, int]]] = {}
         for si, (ts, off) in enumerate(slots):
             for t in ts:
                 slot_of.setdefault(t, []).append((si, off))
-        out_schema = StructType([StructField("doc_id", LongType()),
-                                 StructField("score", DoubleType())])
 
         def score_partition(it):
             chunks = list(it)
@@ -2138,25 +2048,13 @@ class SearchEngine:
             hit = pf_per_doc > 0
             if not hit.any():
                 return
-            pf_arr = pf_per_doc[hit]
-            dl_arr = dl_all[hit]
-            dlq = quantized_doc_length(dl_arr) if quantize \
-                else dl_arr.astype(np.float64)
-            if model == "bm25":
-                sc = final_mult * idf * (k1 + 1) * pf_arr / (
-                    pf_arr + k1 * (1 - b + b * dlq / avgdl))
-            else:
-                nrm = (decoded_tf_idf_norm(dl_arr) if quantize
-                       else np.where(dl_arr > 0,
-                                     1.0 / np.sqrt(np.maximum(dl_arr, 1)),
-                                     0.0))
-                sc = final_mult * np.sqrt(pf_arr) * idf * idf * nrm
+            sc = final_mult * score(pf_per_doc[hit], dl_all[hit], idf, avgdl)
             yield pd.DataFrame({"doc_id": duniq[hit].astype(np.int64),
                                 "score": sc})
 
         # AQE-coalescible keyed repartition — same rationale as _eval_phrase
         return (cand.repartition("doc_id")
-                .mapInPandas(score_partition, schema=out_schema))
+                .mapInPandas(score_partition, schema=SCORE_SCHEMA))
 
     def search_phrase_prefix(self, phrase: str, field: str | None = None,
                              limit: int = 100,

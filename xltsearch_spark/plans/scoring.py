@@ -11,6 +11,7 @@ import math
 
 import numpy as np
 
+from xltsearch_spark.functions.norms import decoded_tf_idf_norm, quantized_doc_length
 from xltsearch_spark.plans.parser import (BooleanQuery, DisMaxQuery, MatchAllQuery, MUST_NOT,
                                           MultiPhraseQuery,
                                           PhraseQuery, SpanFirstQuery,
@@ -29,10 +30,38 @@ def tfidf_idf(n_docs: int, df: int) -> float:
     return 1 + math.log(n_docs / (df + 1))
 
 
+def idf(model: str, n_docs: int, df: int) -> float:
+    """The configured similarity's idf: BM25's or DefaultSimilarity's."""
+    return bm25_idf(n_docs, df) if model == "bm25" else tfidf_idf(n_docs, df)
+
+
 def bm25_tf_norm(tf, dl_q, avgdl: float, k1: float, b: float):
     """tf/(tf + k1*(1-b+b*dl_q/avgdl)) — numpy-broadcastable."""
     tf = np.asarray(tf, dtype=np.float64)
     return tf / (tf + k1 * (1 - b + b * np.asarray(dl_q, dtype=np.float64) / avgdl))
+
+
+def score_freq(model: str, freq, dl, idf, avgdl, k1: float, b: float,
+               quantize: bool):
+    """The one freq -> score expression: a term's tf (or a phrase/span
+    frequency) in a doc of raw field length ``dl`` under the configured
+    similarity. BM25 in BM25Similarity's own association, weight * freq /
+    (freq + k1*(1-b+b*dl/avgdl)) with weight = idf*(k1+1) — the order the
+    pyoracle's phrase and span scorers use, so a sloppy frequency that is
+    an ulp off a neighbour's ranks as the oracle ranks it; DefaultSimilarity:
+    sqrt(freq) * idf * idf * norm(dl). ``quantize`` routes dl through
+    Lucene's 8-bit norm. numpy-broadcastable: ``idf``/``avgdl`` may be
+    scalars or per-posting arrays with the same result bits, which keeps
+    the build's stored block bounds equal to the scores the engine
+    decodes."""
+    dl = np.asarray(dl, dtype=np.int64)
+    freq = np.asarray(freq, dtype=np.float64)
+    if model == "bm25":
+        dlq = quantized_doc_length(dl) if quantize else dl.astype(np.float64)
+        return idf * (k1 + 1) * freq / (freq + k1 * (1 - b + b * dlq / avgdl))
+    nrm = (decoded_tf_idf_norm(dl) if quantize
+           else np.where(dl > 0, 1.0 / np.sqrt(np.maximum(dl, 1)), 0.0))
+    return np.sqrt(freq) * idf * idf * nrm
 
 
 def tfidf_sum_sq_weights(node, mult: float, idf_of) -> float:
