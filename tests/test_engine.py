@@ -243,7 +243,8 @@ def test_search_many_flat_path_breadth(bm25_setup):
     """The r6 single-pass flat batch scorer must agree with one-at-a-time
     search across occurs (MUST/SHOULD/NOT), boosts, predicates
     (prefix/range), and mixed flat + non-flat (phrase/span-shaped)
-    batches — incl. queries with zero hits."""
+    batches — incl. queries with zero hits. A flat query's batch scores
+    equal its single-query scores bit for bit (one clause compiler)."""
     engine, oracle, _ = bm25_setup
     batch = {
         "t": "graded",
@@ -267,6 +268,11 @@ def test_search_many_flat_path_breadth(bm25_setup):
         assert [g[:2] for g in got] == [e[:2] for e in exp], (qid, got[:4], exp[:4])
         for g, e in zip(got, exp):
             assert g[2] == pytest.approx(e[2], rel=1e-6), qid
+        # flat queries score through the same compiler alone and in a batch
+        if qid != "phrase":
+            single = [(r["doc_id"], r["score"])
+                      for r in engine.search_scores(q, 15).collect()]
+            assert [(d, s) for _, d, s in got] == single, qid
 
 
 def test_wildcard_and_keyword_field_queries(bm25_setup):
@@ -296,36 +302,51 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
     """With exact stats (single segment) the WAND block skip is a plain
     `block_max_score >= const` comparison that reaches the parquet reader
     (PushedFilters); with stats_exact=False the recomputed (max_tf, min_dl)
-    bound path must return the identical top-k."""
+    bound path must return the identical top-k. WAND scores through the
+    general path's scorer, so its top-k scores EQUAL the general path's,
+    bit for bit, under both similarities."""
     import io
     from contextlib import redirect_stdout
     from xltsearch_spark.catalog import IndexCatalog
-    cfg = IndexConfig(doc_range_size=16, block_size=8, term_buckets=8)
-    cat = IndexCatalog(spark, str(tmp_path / "wh"), cfg)
-    cat.build(spark.createDataFrame(small_corpus), fingerprint="v1")
-    eng = cat.engine()
-    assert eng.stats_exact
-    eng.wand_min_df = 1
-    exact = [(r["doc_id"], r["score"])
-             for r in eng.search_scores("common_token OR graded", 5).collect()]
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        eng._last_wand_scan.explain(mode="formatted")
-    plan = buf.getvalue()
-    assert "GreaterThanOrEqual(block_max_score" in plan, plan[-2000:]
-    # stale-stats fallback: recomputed bounds, identical results
-    eng.stats_exact = False
-    stale = [(r["doc_id"], r["score"])
-             for r in eng.search_scores("common_token OR graded", 5).collect()]
-    assert [d for d, _ in exact] == [d for d, _ in stale]
-    for (_, a), (_, b) in zip(exact, stale):
-        assert a == pytest.approx(b, rel=1e-9)
-    # and the general (non-WAND) path agrees
-    eng.stats_exact = True
-    eng.wand_enabled = False
-    brute = [(r["doc_id"], r["score"]) for r in
-             eng.search_scores("common_token OR graded", 5).collect()]
-    assert [d for d, _ in exact] == [d for d, _ in brute]
+    for model in ("bm25", "default"):
+        cfg = IndexConfig(scoring_model=model, doc_range_size=16, block_size=8,
+                          term_buckets=8)
+        cat = IndexCatalog(spark, str(tmp_path / model), cfg)
+        cat.build(spark.createDataFrame(small_corpus), fingerprint="v1")
+        eng = cat.engine()
+        assert eng.stats_exact
+        eng.wand_min_df = 1
+
+        def top(q, k=5):
+            return [(r["doc_id"], r["score"])
+                    for r in eng.search_scores(q, k).collect()]
+
+        exact = top("common_token OR graded")
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            eng._last_wand_scan.explain(mode="formatted")
+        plan = buf.getvalue()
+        assert "GreaterThanOrEqual(block_max_score" in plan, plan[-2000:]
+        if model == "bm25":
+            # stale-stats fallback: recomputed bounds, identical results
+            eng.stats_exact = False
+            stale = top("common_token OR graded")
+            assert [d for d, _ in exact] == [d for d, _ in stale]
+            for (_, a), (_, b) in zip(exact, stale):
+                assert a == pytest.approx(b, rel=1e-9)
+            eng.stats_exact = True
+        # and the general (non-WAND) path agrees to the bit
+        queries = ["common_token OR graded", "alpha OR beta OR graded",
+                   "alpha^2 OR beta^0.5 OR graded^3", "indexe~1"]
+        wand = {}
+        for q in queries:
+            wand[q] = top(q, 10)
+            assert eng._last_wand_scan is not None, q
+            eng._last_wand_scan = None
+        eng.wand_enabled = False
+        for q in queries:
+            assert wand[q] == top(q, 10), (model, q)
+            assert eng._last_wand_scan is None, q
 
 
 def test_term_scan_plan_pruning_regression(spark, small_corpus, tmp_path):
@@ -397,7 +418,8 @@ def test_phrase_vectorized_random_stress(spark):
     oracle = OracleIndex(corpus, cfg)
     assert_rank_identical(engine, oracle,
                           ['"pa pb"', '"pa pb"~1', '"pa pb pc"~2', '"pa pa"',
-                           '"pa pb pa"~3', '"pd pc pb pa"', '"pb pc"~0'])
+                           '"pa pb pa"~3', '"pd pc pb pa"', '"pb pc"~0',
+                           '"pa pb pa"', '"pa pa pa"'])
 
 
 def test_wand_zero_boost_term_does_not_crash(spark, small_corpus, tmp_path):

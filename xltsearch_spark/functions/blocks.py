@@ -103,6 +103,16 @@ def position_blobs(p: Postings) -> list:
             for s, e in zip(starts.tolist(), ends.tolist())]
 
 
+def blob_positions(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """The inverse of ``position_blobs`` over a column of blobs: (every
+    blob's positions concatenated, the count per blob); None reads as a
+    blob without positions."""
+    bufs = [b if b is not None else b"" for b in blobs]
+    counts = np.fromiter((len(b) >> 3 for b in bufs), dtype=np.int64,
+                         count=len(bufs))
+    return np.frombuffer(b"".join(bufs), dtype=np.int64), counts
+
+
 def _group_bounds(raw: bytes, sizes: np.ndarray | None) -> np.ndarray:
     """Byte offsets of consecutive groups of a varint stream (``sizes[i]``
     values each; one value per group when None), with the end offset."""

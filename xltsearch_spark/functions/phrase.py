@@ -1,4 +1,4 @@
-"""Phrase-frequency matcher shared by the Spark scorer and the oracle.
+"""Per-document phrase-frequency matcher of the pyoracle.
 
 Exact phrases (slop=0) reproduce Lucene's ExactPhraseScorer semantics: a
 match is a document position ``p`` such that every phrase term ``t_i`` with
@@ -12,9 +12,12 @@ of the first term anchors a candidate; every other term contributes the
 occurrence closest to its expected position; the candidate matches if the
 summed displacement <= slop and adds ``1/(1+displacement)`` to the freq
 (the shape of Lucene's SloppyPhraseScorer ``sloppyFreq``; exact 4.6
-tie-handling for repeated terms is approximated — both engine and oracle
-share THIS implementation, so rank identity between them is by
-construction).
+tie-handling for repeated terms is approximated).
+
+The engine (``operators/search.py:_eval_phrase``) applies the same two
+rules batch-wide in its own vectorized kernels — exact phrases as a
+(doc, slot, anchor) group count, sloppy ones as a nearest-position
+searchsorted — and the oracle tests hold the two to rank identity.
 """
 
 from __future__ import annotations

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from xltsearch_spark.analyzers import analyze_text
 from xltsearch_spark.config import IndexConfig
 from xltsearch_spark.functions import blocks
 from xltsearch_spark.operators.build import BuildStats, term_bucket
@@ -110,6 +111,93 @@ class ConstScorePred:
         if hi is not None:
             c = c & ((t <= hi) if ihi else (t < hi))
         return c
+
+
+_FLAT_LEAVES = (TermQuery, ConstScoreTerms, ConstScorePred)
+
+
+class FlatBooleans:
+    """The one scorer of flat booleans: a term or constant-score leaf, or a
+    BooleanQuery whose clauses are all such leaves (MUST / SHOULD /
+    MUST_NOT, boosts, ``msm``, queryNorm, DefaultSimilarity coord).
+
+    Every distinct leaf becomes shared doc-keyed aggregate columns over the
+    decoded postings — a conditional score sum per term leaf, a match flag
+    per leaf — so any number of queries score off ONE ``groupBy(doc_id)``
+    (``aggs``), each as a (score, gate) column pair over it (``query``).
+    Clause contributions add in clause order, so a query scores to the
+    same bits alone, in a ``search_many`` batch and under WAND."""
+
+    def __init__(self, bm25: bool):
+        self.bm25 = bm25
+        self.aggs: list = []
+        self._cols: dict = {}   # leaf key -> (score-sum alias | None, match alias)
+
+    @staticmethod
+    def clauses(ast):
+        """[(occ, leaf)] when ``ast`` has the flat shape; None otherwise."""
+        if isinstance(ast, _FLAT_LEAVES):
+            return [(SHOULD, ast)]
+        if isinstance(ast, BooleanQuery) and all(
+                isinstance(sub, _FLAT_LEAVES) for _, sub in ast.clauses):
+            return list(ast.clauses)
+        return None
+
+    def _leaf_cols(self, sub):
+        in_field = F.col("field") == sub.field
+        if isinstance(sub, TermQuery):
+            key, cond = ("t", sub.field, sub.term), in_field & (F.col("term") == sub.term)
+        elif isinstance(sub, ConstScoreTerms):
+            key = ("ct", sub.field, tuple(sub.terms))
+            cond = (in_field & F.col("term").isin(list(sub.terms))
+                    if sub.terms else F.lit(False))
+        else:
+            key, cond = ("cp", sub.field, sub.kind, sub.payload), in_field & sub.term_cond()
+        if key not in self._cols:
+            i = len(self._cols)
+            s_alias = None
+            if isinstance(sub, TermQuery):
+                s_alias = f"s{i}"
+                self.aggs.append(F.sum(F.when(cond, F.col("score"))
+                                       .otherwise(0.0)).alias(s_alias))
+            self.aggs.append(F.max(F.when(cond, 1).otherwise(0)).alias(f"m{i}"))
+            self._cols[key] = (s_alias, f"m{i}")
+        return self._cols[key]
+
+    def query(self, ast, mult: float = 1.0, tfidf_qn: float | None = None):
+        """(score, gate) columns of flat ``ast`` over ``aggs``; None when
+        it matches nothing (no scoring clause, or msm > optional count)."""
+        qn = tfidf_qn if tfidf_qn is not None else 1.0
+        is_bq = isinstance(ast, BooleanQuery)
+        m2 = mult * ast.boost if is_bq else mult
+        msm = ast.msm if is_bq else 0
+        score, gate = F.lit(0.0), F.lit(True)
+        n_must, scoring_m, should_m = 0, [], []
+        for occ, sub in self.clauses(ast):
+            s_alias, m_alias = self._leaf_cols(sub)
+            hit = F.col(m_alias) == 1
+            if occ == MUST_NOT:
+                gate &= ~hit
+                continue
+            w = m2 * sub.boost * qn
+            if occ == MUST:
+                n_must += 1
+                gate &= hit
+            scoring_m.append(m_alias)
+            if occ == SHOULD:
+                should_m.append(m_alias)
+            score = score + ((F.col(s_alias) * F.lit(w)) if s_alias is not None
+                             else F.when(hit, F.lit(w)).otherwise(0.0))
+        if not scoring_m or msm > len(should_m):
+            return None  # Lucene: no scoring clause / msm > optionals -> no hits
+        if msm > 0:
+            gate &= sum(F.col(m) for m in should_m) >= msm
+        if n_must == 0:
+            gate &= sum(F.col(m) for m in scoring_m) >= 1
+        if not self.bm25:
+            score = (score * sum(F.col(m) for m in scoring_m)
+                     / F.lit(float(len(scoring_m))))
+        return score, gate
 
 
 def collapse_top_groups(hits: DataFrame, group_col: str, group_limit: int,
@@ -321,16 +409,6 @@ class SearchEngine:
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
 
     # --------------------- block-max WAND top-k ----------------------------
-    def _wand_terms(self, ast) -> list[TermQuery] | None:
-        """[(TermQuery, ...)] if the AST is a term or pure SHOULD-of-terms."""
-        if isinstance(ast, TermQuery):
-            return [ast]
-        if isinstance(ast, BooleanQuery) and ast.boost == 1.0 and all(
-                occ == SHOULD and isinstance(sub, TermQuery)
-                for occ, sub in ast.clauses):
-            return [sub for _, sub in ast.clauses]
-        return None
-
     def _wand_topk(self, query: str, limit: int) -> tuple[DataFrame | None, dict | None]:
         """(top-k DataFrame | None, idf_map | None).
 
@@ -352,7 +430,12 @@ class SearchEngine:
         competitive only if qn * (w_t*bmax_t + sum_other_ceilings) >= tau.
         The TF-IDF path requires blocks_exact (stored scores exact under
         current stats AND built under this model/quantization); BM25 keeps
-        its stale-stats (max_tf, min_dl) recompute fallback."""
+        its stale-stats (max_tf, min_dl) recompute fallback.
+
+        The shape is a term or a SHOULD-only flat boolean of terms; the
+        probe and the final scan score through ``_eval`` like the general
+        path, so a WAND top-k carries the general path's scores bit for
+        bit."""
         model = self.config.scoring_model
         if self.has_tombstones or not self.wand_enabled:
             return None, None
@@ -362,8 +445,14 @@ class SearchEngine:
         if model != "bm25" and not blocks_exact:
             return None, None
         ast = self._rewrite(self.parser.parse(query))
-        leaves = self._wand_terms(ast)
-        if leaves is None or len({(t.field, t.term) for t in leaves}) != len(leaves):
+        clauses = FlatBooleans.clauses(ast)
+        if (clauses is None
+                or (isinstance(ast, BooleanQuery) and ast.boost != 1.0)
+                or any(occ != SHOULD or not isinstance(sub, TermQuery)
+                       for occ, sub in clauses)):
+            return None, None
+        leaves = [sub for _, sub in clauses]
+        if len({(t.field, t.term) for t in leaves}) != len(leaves):
             return None, None  # duplicate terms w/ separate boosts -> general path
         terms = sorted({(t.field, t.term) for t in leaves})
         boost = {(t.field, t.term): t.boost for t in leaves}
@@ -403,12 +492,14 @@ class SearchEngine:
         for t in terms:  # absent terms: df 0 (keeps score_all reuse exact)
             idf_map.setdefault(t, 0)
         # DefaultSimilarity query constants (identities under BM25)
-        if model == "bm25":
-            qn, n_scoring = 1.0, len(terms)
-        else:
-            ssw = sum((scoring.tfidf_idf(self.stats.n_docs, idf_map.get(t, 0))
-                       * boost.get(t, 1.0)) ** 2 for t in terms)
-            qn, n_scoring = scoring.query_norm(ssw), len(terms)
+        tfidf_qn = self._tfidf_qn(ast, idf_map)
+        qn, n_scoring = tfidf_qn or 1.0, len(terms)
+
+        def score(blocks_scan):
+            decoded = self._decode_blocks(self._scan_coalesce(blocks_scan, terms, []),
+                                          idf_map, with_positions=False)
+            return self._eval(ast, decoded, 1.0, idf_map, tfidf_qn)
+
         tau = None  # threshold in FINAL-score units (qn/coord included)
         self._last_wand_tau_source = None  # introspection for tests/audits
         if blocks_exact and has_bmin:
@@ -462,10 +553,7 @@ class SearchEngine:
                 c = (F.col("field") == f) & (F.col("term") == t) & \
                     (F.col("block_max_score") == m)
                 probe_cond = c if probe_cond is None else (probe_cond | c)
-            probe_scores = self._wand_score(
-                self._scan_coalesce(
-                    self.postings.filter(cond).filter(probe_cond), terms, []),
-                idf_map, boost, limit, qn=qn, n_scoring=n_scoring)
+            probe_scores = score(self.postings.filter(cond).filter(probe_cond))
             rows = probe_scores.orderBy(F.desc("score"), F.asc("doc_id")) \
                                .limit(limit).collect()
             if len(rows) == limit:
@@ -514,51 +602,8 @@ class SearchEngine:
                 prune = c if prune is None else (prune | c)
             scan = scan.filter(prune)
         self._last_wand_scan = scan
-        out = self._wand_score(self._scan_coalesce(scan, terms, []),
-                               idf_map, boost, limit, qn=qn,
-                               n_scoring=n_scoring)
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit), idf_map
-
-    def _wand_score(self, blocks: DataFrame, idf_map, boost, limit: int,
-                    qn: float = 1.0, n_scoring: int | None = None) -> DataFrame:
-        """Decode + per-doc disjunctive score over a block subset.
-
-        BM25: weighted sum. DefaultSimilarity: the sum picks up queryNorm
-        and coord = matched/n_scoring — matched counts rows per doc, which
-        equals distinct matched terms (a doc sits in exactly one block per
-        term), computed in the SAME aggregate."""
-        decoded = self._decode_blocks(blocks, idf_map, with_positions=False)
-        if len(boost) == 1:
-            # single term: every doc contributes exactly ONE decoded row, so
-            # the per-doc aggregate is the identity — skip the groupBy
-            # exchange entirely (one less shuffle + one less job per query).
-            # DefaultSimilarity folds qn and coord = 1/n_scoring statically.
-            w = next(iter(boost.values()))
-            if self.config.scoring_model == "bm25":
-                mult = w
-            else:
-                mult = w * qn / float(n_scoring or 1)
-            return decoded.select(
-                "doc_id", (F.col("score") * F.lit(mult)).alias("score"))
-        if len(set(boost.values())) == 1:
-            w = next(iter(boost.values()))
-            weighted = decoded.withColumn("score", F.col("score") * F.lit(w))
-        else:
-            wexpr = None
-            for (f, t), w in boost.items():
-                c = F.when((F.col("field") == f) & (F.col("term") == t), F.lit(w))
-                wexpr = c if wexpr is None else wexpr.when(
-                    (F.col("field") == f) & (F.col("term") == t), F.lit(w))
-            weighted = decoded.withColumn(
-                "score", F.col("score") * F.coalesce(wexpr, F.lit(1.0)))
-        if self.config.scoring_model == "bm25":
-            return weighted.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        n = float(n_scoring or len(boost) or 1)
-        agg = weighted.groupBy("doc_id").agg(
-            F.sum("score").alias("_s"), F.count("*").alias("_m"))
-        return agg.select(
-            "doc_id",
-            (F.col("_s") * F.lit(qn) * F.col("_m") / F.lit(n)).alias("score"))
+        return (score(scan).orderBy(F.desc("score"), F.asc("doc_id")).limit(limit),
+                idf_map)
 
     def search_many(self, queries: dict[str, str], limit: int = 100,
                     materialize: bool = True) -> DataFrame:
@@ -569,7 +614,7 @@ class SearchEngine:
         is a term / flat boolean of simple leaves — the overwhelming batch
         workload — are then scored in ONE pass: a single doc-keyed
         aggregate computes every distinct clause's conditional sum/match
-        flag (the exact expressions ``_eval_boolean_flat`` uses, shared
+        flag (``FlatBooleans``, the scorer of single flat queries, shared
         across queries that touch the same term), one projection explodes
         per-query (score, gate) structs, and ONE window ranks everything.
         The whole flat batch is 2 shuffles + 1 Python decode stage instead
@@ -601,17 +646,17 @@ class SearchEngine:
         idf_map = self._doc_freqs(terms)
         any_pos = any(needs_positions(a) for a in parsed.values())
 
-        def qn_of(ast):
-            if self.config.scoring_model == "bm25":
-                return None
-            ssw = scoring.tfidf_sum_sq_weights(
-                ast, 1.0, lambda f, t: scoring.tfidf_idf(
-                    self.stats.n_docs, idf_map.get((f, t), 0)))
-            return scoring.query_norm(ssw)
-
-        flat = {qid: ast for qid, ast in parsed.items()
-                if self._flat_query_clauses(ast) is not None}
-        general = {qid: ast for qid, ast in parsed.items() if qid not in flat}
+        fb = FlatBooleans(self.config.scoring_model == "bm25")
+        flat, general = [], {}
+        for qid, ast in parsed.items():
+            if FlatBooleans.clauses(ast) is None:
+                general[qid] = ast
+                continue
+            compiled = fb.query(ast, 1.0, self._tfidf_qn(ast, idf_map))
+            if compiled is not None:
+                flat.append(F.struct(F.lit(qid).alias("query_id"),
+                                     compiled[0].alias("score"),
+                                     compiled[1].alias("gate")))
         decoded = self._decode_postings(terms, all_preds, idf_map, any_pos)
         if general:
             decoded = decoded.persist()
@@ -622,12 +667,16 @@ class SearchEngine:
                 decoded.count()
         out = None
         if flat:
+            ex = (decoded.groupBy("doc_id").agg(*fb.aggs)
+                  .select("doc_id", F.explode(F.array(*flat)).alias("_q")))
             out = self._filter_tombstones(
-                self._eval_many_flat(flat, decoded, qn_of))
+                ex.filter(F.col("_q.gate"))
+                .select(F.col("_q.query_id").alias("query_id"), "doc_id",
+                        F.col("_q.score").alias("score")))
         gen_out = None
         for qid, ast in general.items():
             scored = self._eval(ast, decoded, 1.0, idf_map,
-                                tfidf_qn=qn_of(ast))
+                                tfidf_qn=self._tfidf_qn(ast, idf_map))
             scored = self._filter_tombstones(scored)
             topk = (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
                     .select(F.lit(qid).alias("query_id"), "doc_id", "score"))
@@ -637,114 +686,12 @@ class SearchEngine:
                 gen_out = gen_out.localCheckpoint(eager=True)  # <= Q*k rows
                 decoded.unpersist()
             out = gen_out if out is None else out.unionByName(gen_out)
+        if out is None:  # no query can match
+            out = self.spark.createDataFrame(
+                [], "query_id string, doc_id long, score double")
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (out.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= limit))
-
-    def _flat_query_clauses(self, ast):
-        """[(occ, leaf)] when ``ast`` is a term / simple leaf / flat boolean
-        of simple leaves (the single-pass batch shape); None otherwise."""
-        if isinstance(ast, (TermQuery, ConstScoreTerms, ConstScorePred)):
-            return [(SHOULD, ast)]
-        if isinstance(ast, BooleanQuery) and all(
-                isinstance(sub, (TermQuery, ConstScoreTerms, ConstScorePred))
-                for _, sub in ast.clauses):
-            return list(ast.clauses)
-        return None
-
-    def _eval_many_flat(self, flat: dict, decoded: DataFrame,
-                        qn_of) -> DataFrame:
-        """Single-pass scorer for a batch of flat queries: one shared
-        doc-keyed aggregate (distinct clause conditions become shared agg
-        columns — float-identical to ``_eval_boolean_flat``'s per-clause
-        conditional sums), then a per-query (score, gate) struct explode.
-        Returns (query_id, doc_id, score) FULL hit sets; the caller's
-        WindowGroupLimit rank filter does the k-cut."""
-        # shared agg columns keyed by the leaf's scan condition
-        agg_keys: dict = {}   # key -> (s_alias | None, m_alias)
-        aggs = []
-
-        def col_key(sub):
-            if isinstance(sub, TermQuery):
-                return ("t", sub.field, sub.term)
-            if isinstance(sub, ConstScoreTerms):
-                return ("ct", sub.field, tuple(sub.terms))
-            return ("cp", sub.field, sub.kind, sub.payload)
-
-        def cond_of(sub):
-            if isinstance(sub, TermQuery):
-                return (F.col("field") == sub.field) & \
-                    (F.col("term") == sub.term)
-            if isinstance(sub, ConstScoreTerms):
-                return ((F.col("field") == sub.field) &
-                        F.col("term").isin(list(sub.terms))) \
-                    if sub.terms else F.lit(False)
-            return (F.col("field") == sub.field) & sub.term_cond()
-
-        for ast in flat.values():
-            for _, sub in self._flat_query_clauses(ast):
-                k = col_key(sub)
-                if k in agg_keys:
-                    continue
-                i = len(agg_keys)
-                cond = cond_of(sub)
-                s_alias = None
-                if isinstance(sub, TermQuery):
-                    s_alias = f"s{i}"
-                    aggs.append(F.sum(F.when(cond, F.col("score"))
-                                      .otherwise(0.0)).alias(s_alias))
-                m_alias = f"m{i}"
-                aggs.append(F.max(F.when(cond, 1).otherwise(0)).alias(m_alias))
-                agg_keys[k] = (s_alias, m_alias)
-
-        agg = decoded.groupBy("doc_id").agg(*aggs)
-        structs = []
-        for qid, ast in flat.items():
-            clauses = self._flat_query_clauses(ast)
-            bq_boost = ast.boost if isinstance(ast, BooleanQuery) else 1.0
-            msm = ast.msm if isinstance(ast, BooleanQuery) else 0
-            qn = qn_of(ast) or 1.0
-            score = F.lit(0.0)
-            gate = F.lit(True)
-            n_must = 0
-            scoring_m, should_m = [], []
-            for occ, sub in clauses:
-                s_alias, m_alias = agg_keys[col_key(sub)]
-                hit = F.col(m_alias) == 1
-                if occ == MUST_NOT:
-                    gate &= ~hit
-                    continue
-                w = bq_boost * sub.boost * qn if isinstance(ast, BooleanQuery) \
-                    else sub.boost * qn
-                if occ == MUST:
-                    n_must += 1
-                    gate &= hit
-                scoring_m.append(m_alias)
-                if occ == SHOULD:
-                    should_m.append(m_alias)
-                contrib = (F.col(s_alias) * F.lit(w)) if s_alias is not None \
-                    else F.when(hit, F.lit(w)).otherwise(0.0)
-                score = score + contrib
-            if not scoring_m or (msm > 0 and msm > len(should_m)):
-                continue  # Lucene: no scoring clause / msm > optionals -> no hits
-            if msm > 0:
-                gate &= sum(F.col(m) for m in should_m) >= msm
-            if n_must == 0:
-                gate &= sum(F.col(m) for m in scoring_m) >= 1
-            if self.config.scoring_model != "bm25":
-                overlap = sum(F.col(m) for m in scoring_m)
-                score = score * overlap / F.lit(float(len(scoring_m)))
-            structs.append(F.struct(F.lit(qid).alias("query_id"),
-                                    score.alias("score"),
-                                    gate.alias("gate")))
-        if not structs:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double")
-        ex = agg.select("doc_id",
-                        F.explode(F.array(*structs)).alias("_q"))
-        return (ex.filter(F.col("_q.gate"))
-                .select(F.col("_q.query_id").alias("query_id"), "doc_id",
-                        F.col("_q.score").alias("score")))
 
     def hit_count(self, query: str, limit: int | None = None) -> tuple[int, str]:
         """(total matching docs, status message).
@@ -808,18 +755,13 @@ class SearchEngine:
         full-corpus pass."""
         from pyspark.sql.window import Window
         ast = self._rewrite(self.parser.parse(query))
-        if isinstance(ast, TermQuery):
-            clauses = [(SHOULD, ast)]
-            bq_boost = 1.0
-        elif isinstance(ast, BooleanQuery) and all(
-                occ != MUST_NOT and isinstance(sub, TermQuery)
-                for occ, sub in ast.clauses):
-            clauses = list(ast.clauses)
-            bq_boost = ast.boost
-        else:
+        clauses = FlatBooleans.clauses(ast)
+        if clauses is None or any(occ == MUST_NOT or not isinstance(sub, TermQuery)
+                                  for occ, sub in clauses):
             raise ValueError(
                 "explain() decomposes term and flat AND/OR-of-term "
                 "queries; got a clause it cannot attribute")
+        bq_boost = ast.boost if isinstance(ast, BooleanQuery) else 1.0
         n_scoring = len(clauses)
         terms = [(sub.field, sub.term) for _, sub in clauses]
         idf_map = self._doc_freqs(terms)
@@ -827,8 +769,8 @@ class SearchEngine:
         n, k1 = self.stats.n_docs, self.config.k1
         def idf_of(f, t):
             return scoring.idf(model, n, idf_map.get((f, t), 0))
-        qn = 1.0 if model == "bm25" else scoring.query_norm(
-            scoring.tfidf_sum_sq_weights(ast, 1.0, idf_of))
+        tfidf_qn = self._tfidf_qn(ast, idf_map)
+        qn = tfidf_qn or 1.0
 
         # ONE decode serves both the scorer and the per-clause join: the
         # query's decoded rows are small (bounded by the terms' postings),
@@ -838,8 +780,7 @@ class SearchEngine:
         decoded = self._decode_postings(terms, [], idf_map, False) \
             .localCheckpoint(eager=True)
         scored = self._filter_tombstones(self._eval(
-            ast, decoded, 1.0, idf_map,
-            tfidf_qn=None if model == "bm25" else qn))
+            ast, decoded, 1.0, idf_map, tfidf_qn))
         if doc_ids is not None:
             hits = scored.filter(F.col("doc_id").isin([int(i) for i in
                                                        doc_ids]))
@@ -969,14 +910,16 @@ class SearchEngine:
         extra = self._conjunction_extra_cond(ast, idf_map)
         decoded = self._decode_postings(terms, preds, idf_map,
                                         needs_positions(ast), extra_cond=extra)
+        return self._filter_tombstones(self._eval(
+            ast, decoded, 1.0, idf_map, self._tfidf_qn(ast, idf_map)))
+
+    def _tfidf_qn(self, ast, idf_map) -> float | None:
+        """DefaultSimilarity queryNorm of ``ast`` (None under BM25)."""
         if self.config.scoring_model == "bm25":
-            out = self._eval(ast, decoded, 1.0, idf_map, tfidf_qn=None)
-        else:
-            ssw = scoring.tfidf_sum_sq_weights(
-                ast, 1.0,
-                lambda f, t: scoring.tfidf_idf(self.stats.n_docs, idf_map.get((f, t), 0)))
-            out = self._eval(ast, decoded, 1.0, idf_map, tfidf_qn=scoring.query_norm(ssw))
-        return self._filter_tombstones(out)
+            return None
+        return scoring.query_norm(scoring.tfidf_sum_sq_weights(
+            ast, 1.0, lambda f, t: scoring.tfidf_idf(self.stats.n_docs,
+                                                     idf_map.get((f, t), 0))))
 
     def more_like_this(self, doc_id: int, field: str = "content",
                        max_terms: int = 10, min_tf: int = 1, min_df: int = 2,
@@ -1418,25 +1361,19 @@ class SearchEngine:
                                    (F.col("term") == node.term))
                     .select("doc_id", (F.col("score") * F.lit(mult * node.boost * qn))
                             .alias("score")))
-        if isinstance(node, ConstScoreTerms):
-            if not node.terms:
+        if FlatBooleans.clauses(node) is not None:
+            fb = FlatBooleans(self.config.scoring_model == "bm25")
+            compiled = fb.query(node, mult, tfidf_qn)
+            if compiled is None:
                 return self._empty_scores()
-            return (decoded.filter((F.col("field") == node.field) &
-                                   F.col("term").isin(list(node.terms)))
-                    .select("doc_id").distinct()
-                    .withColumn("score", F.lit(mult * node.boost * qn)))
-        if isinstance(node, ConstScorePred):
-            return (decoded.filter((F.col("field") == node.field) & node.term_cond())
-                    .select("doc_id").distinct()
-                    .withColumn("score", F.lit(mult * node.boost * qn)))
+            score, gate = compiled
+            return (decoded.groupBy("doc_id").agg(*fb.aggs).filter(gate)
+                    .select("doc_id", score.alias("score")))
         if isinstance(node, MatchAllQuery):
             return self.docs.select("doc_id").withColumn(
                 "score", F.lit(mult * node.boost * qn))
-        if isinstance(node, PhraseQuery):
+        if isinstance(node, (PhraseQuery, MultiPhraseQuery)):
             return self._eval_phrase(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, MultiPhraseQuery):
-            return self._eval_multi_phrase(node, decoded, mult, idf_map,
-                                           tfidf_qn)
         if isinstance(node, BooleanQuery):
             return self._eval_boolean(node, decoded, mult, idf_map, tfidf_qn)
         if isinstance(node, DisMaxQuery):
@@ -1461,40 +1398,15 @@ class SearchEngine:
         cand = (decoded.filter((F.col("field") == node.field) &
                                (F.col("term") == node.term))
                 .select("doc_id", "positions", "dl"))
-        cfg = self.config
-        n_docs = self.stats.n_docs
-        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        df_t = idf_map.get((node.field, node.term), 0)
-        score = _freq_scorer(cfg)
-        idf = scoring.idf(cfg.scoring_model, n_docs, df_t)
         end = int(node.end)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
 
-        def score_partition(it):
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["positions"].notna()]
-            if pdf.empty:
-                return
-            bufs = pdf["positions"].tolist()
-            counts = np.fromiter((len(b_) // 8 for b_ in bufs),
-                                 dtype=np.int64, count=len(bufs))
-            allpos = np.frombuffer(b"".join(bufs), dtype="<i8")
+        def freq(pdf):
+            pos, counts = blocks.blob_positions(pdf["positions"])
             offs = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            sf = np.add.reduceat((allpos < end).astype(np.int64), offs)
-            keep = sf > 0
-            if not keep.any():
-                return
-            dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            sc = score(sf[keep], dls, idf, avgdl)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
-                "score": sc * final_mult})
+            return np.add.reduceat((pos < end).astype(np.int64), offs)
 
-        return cand.mapInPandas(score_partition, schema=SCORE_SCHEMA)
+        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
+                                 [node.term], freq, ("positions",))
 
     def search_span_first(self, term: str, end: int, field: str | None = None,
                           limit: int = 100) -> DataFrame:
@@ -1506,12 +1418,8 @@ class SearchEngine:
         if end < 1:
             raise ValueError("end must be >= 1")
         field = field or self.parser.default_field
-        from xltsearch_spark.analyzers import analyze_text
-        toks = analyze_text(term, self.config.analyzer)
-        if len(toks) != 1:
-            raise ValueError("span_first takes a single analyzed term")
-        ast = SpanFirstQuery(field, toks[0][0], int(end))
-        scored = self._score_ast(ast)
+        [tok] = self._single_terms("span_first", term)
+        scored = self._score_ast(SpanFirstQuery(field, tok, int(end)))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
 
     def _eval_span_near(self, node: SpanNearQuery, decoded, mult, idf_map,
@@ -1543,34 +1451,11 @@ class SearchEngine:
                     F.max("dl").alias("dl")))
         cand = agg.filter(F.col("pos_a").isNotNull()
                           & F.col("pos_b").isNotNull())
-        cfg = self.config
-        n_docs = self.stats.n_docs
-        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        df1 = idf_map.get((node.field, node.first), 0)
-        df2 = idf_map.get((node.field, node.second), 0)
-        score = _freq_scorer(cfg)
-        idf = (scoring.idf(cfg.scoring_model, n_docs, df1)
-               + scoring.idf(cfg.scoring_model, n_docs, df2))
         slop = int(node.slop)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
 
-        def score_partition(it):
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["pos_a"].notna() & pdf["pos_b"].notna()]
-            if pdf.empty:
-                return
-            bufs_a = pdf["pos_a"].tolist()
-            bufs_b = pdf["pos_b"].tolist()
-            cnt_a = np.fromiter((len(x) >> 3 for x in bufs_a),
-                                dtype=np.int64, count=len(bufs_a))
-            cnt_b = np.fromiter((len(x) >> 3 for x in bufs_b),
-                                dtype=np.int64, count=len(bufs_b))
-            pa = np.frombuffer(b"".join(bufs_a), dtype="<i8")
-            pb = np.frombuffer(b"".join(bufs_b), dtype="<i8")
+        def freq(pdf):
+            pa, cnt_a = blocks.blob_positions(pdf["pos_a"])
+            pb, cnt_b = blocks.blob_positions(pdf["pos_b"])
             n = len(pdf)
             base = np.arange(n, dtype=np.int64) << 32  # positions < 2^32
             pa_adj = pa + np.repeat(base, cnt_a)
@@ -1583,17 +1468,11 @@ class SearchEngine:
             gap = np.where(valid, pb_adj - pa_adj[np.maximum(idx, 0)] - 1,
                            np.int64(slop) + 1)
             contrib = np.where(gap <= slop, 1.0 / (1.0 + gap), 0.0)
-            sf = np.add.reduceat(contrib, starts_b)
-            keep = sf > 0
-            if not keep.any():
-                return
-            dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            sc = score(sf[keep], dls, idf, avgdl)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
-                "score": sc * final_mult})
+            return np.add.reduceat(contrib, starts_b)
 
-        return cand.mapInPandas(score_partition, schema=SCORE_SCHEMA)
+        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
+                                 [node.first, node.second], freq,
+                                 ("pos_a", "pos_b"))
 
     def search_collapsed(self, query: str, group_field: str,
                          group_limit: int = 1,
@@ -1636,26 +1515,39 @@ class SearchEngine:
         scored = self.score_all(query)
         return paginate_after(scored, after_score, after_doc_id, limit)
 
-    def _span_score_kernel(self, rows: DataFrame, field: str, idf: float,
-                           final_mult: float) -> DataFrame:
-        """Score (doc_id, sf, dl) rows with the active similarity — the
-        shared tail of every spans evaluator (frequency already computed).
-        Python touches only the per-doc aggregate rows, never postings."""
-        avgdl = self.stats.avgdl.get(field, 1.0) or 1.0
-        score = _freq_scorer(self.config)
+    def _span_kernel(self, rows: DataFrame, node, mult, idf_map, tfidf_qn,
+                     idf_terms, freq, required=()) -> DataFrame:
+        """The shared frame of every spans evaluator, ONE mapInPandas over
+        per-doc rows: a partition's batches concatenated, rows with a null
+        ``required`` column dropped, ``freq(pdf)`` -> the span frequency of
+        each row (the evaluator's count, run in the same kernel), then the
+        rows with frequency > 0 scored with the active similarity. idf
+        sums the ``idf_terms``' idfs."""
+        cfg = self.config
+        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
+        idf = sum(scoring.idf(cfg.scoring_model, self.stats.n_docs,
+                              idf_map.get((node.field, t), 0)) for t in idf_terms)
+        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
+                                          else 1.0)
+        score = _freq_scorer(cfg)
 
         def score_partition(it):
             chunks = list(it)
             if not chunks:
                 return
             pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["sf"] > 0]
+            if required:
+                pdf = pdf.dropna(subset=list(required))
             if pdf.empty:
                 return
-            sc = score(pdf["sf"].to_numpy(dtype=np.float64),
-                       pdf["dl"].to_numpy(dtype=np.int64), idf, avgdl)
+            sf = freq(pdf)
+            keep = sf > 0
+            if not keep.any():
+                return
+            sc = score(sf[keep], pdf["dl"].to_numpy(dtype=np.int64)[keep],
+                       idf, avgdl)
             yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
+                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
                 "score": sc * final_mult})
 
         return rows.mapInPandas(score_partition, schema=SCORE_SCHEMA)
@@ -1666,13 +1558,6 @@ class SearchEngine:
         tf, idf = summed clause idf. The frequency is ONE JVM aggregate
         over the shared decoded frame (map-side partials) — no positions
         decode, no Python until the per-doc (sf, dl) rows."""
-        cfg = self.config
-        n_docs = self.stats.n_docs
-        idf = sum(scoring.idf(cfg.scoring_model, n_docs,
-                              idf_map.get((node.field, t), 0))
-                  for t in node.terms)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
         # duplicate clauses each contribute their spans (SpanOr unions
         # clause span streams): weight tf by clause multiplicity
         counts = Counter(node.terms)
@@ -1684,7 +1569,9 @@ class SearchEngine:
                 .groupBy("doc_id")
                 .agg(F.sum(F.col("tf") * w).cast("double").alias("sf"),
                      F.max("dl").alias("dl")))
-        return self._span_score_kernel(rows, node.field, idf, final_mult)
+        return self._span_kernel(rows, node, mult, idf_map, tfidf_qn,
+                                 node.terms,
+                                 lambda pdf: pdf["sf"].to_numpy(dtype=np.float64))
 
     def _eval_span_not(self, node: SpanNotQuery, decoded, mult, idf_map,
                        tfidf_qn) -> DataFrame:
@@ -1707,38 +1594,12 @@ class SearchEngine:
                     F.max(F.when(F.col("term") == node.include,
                                  F.col("dl"))).alias("dl")))
         cand = agg.filter(F.col("pos_i").isNotNull())
-        cfg = self.config
-        n_docs = self.stats.n_docs
-        df_i = idf_map.get((node.field, node.include), 0)
-        idf = scoring.idf(cfg.scoring_model, n_docs, df_i)
         pre, post = int(node.pre), int(node.post)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
-        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        score = _freq_scorer(cfg)
 
-        def score_surviving(it):
-            # count + similarity in ONE kernel (like span_near) — no
-            # intermediate Arrow round-trip through a second Python stage
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["pos_i"].notna()]
-            if pdf.empty:
-                return
-            empty = b""
-            bufs_i = pdf["pos_i"].tolist()
-            bufs_e = [x if x is not None else empty
-                      for x in pdf["pos_e"].tolist()]
-            cnt_i = np.fromiter((len(x) >> 3 for x in bufs_i),
-                                dtype=np.int64, count=len(bufs_i))
-            cnt_e = np.fromiter((len(x) >> 3 for x in bufs_e),
-                                dtype=np.int64, count=len(bufs_e))
-            pi = np.frombuffer(b"".join(bufs_i), dtype="<i8")
-            pe = np.frombuffer(b"".join(bufs_e), dtype="<i8")
-            n = len(pdf)
-            base = np.arange(n, dtype=np.int64) << 32
+        def freq(pdf):
+            pi, cnt_i = blocks.blob_positions(pdf["pos_i"])
+            pe, cnt_e = blocks.blob_positions(pdf["pos_e"])
+            base = np.arange(len(pdf), dtype=np.int64) << 32
             pi_adj = pi + np.repeat(base, cnt_i)
             pe_adj = pe + np.repeat(base, cnt_e)
             # pre/post < 2^31 (validated in search_span_not) so the
@@ -1747,17 +1608,10 @@ class SearchEngine:
             hi = np.searchsorted(pe_adj, pi_adj + post, side="right")
             survive = (hi == lo).astype(np.float64)
             starts_i = np.concatenate(([0], np.cumsum(cnt_i)[:-1]))
-            sf = np.add.reduceat(survive, starts_i)
-            keep = sf > 0
-            if not keep.any():
-                return
-            dls = pdf["dl"].to_numpy(dtype=np.int64)[keep]
-            sc = score(sf[keep], dls, idf, avgdl)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
-                "score": sc * final_mult})
+            return np.add.reduceat(survive, starts_i)
 
-        return cand.mapInPandas(score_surviving, schema=SCORE_SCHEMA)
+        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
+                                 [node.include], freq, ("pos_i",))
 
     def search_span_or(self, terms: list[str] | tuple[str, ...],
                        field: str | None = None,
@@ -1766,15 +1620,7 @@ class SearchEngine:
         if not terms:
             raise ValueError("span_or needs at least one term")
         field = field or self.parser.default_field
-        from xltsearch_spark.analyzers import analyze_text
-        toks = []
-        for t in terms:
-            a = analyze_text(t, self.config.analyzer)
-            if len(a) != 1:
-                raise ValueError("span_or clauses must each analyze to a "
-                                 "single term")
-            toks.append(a[0][0])
-        ast = SpanOrQuery(field, tuple(toks))
+        ast = SpanOrQuery(field, tuple(self._single_terms("span_or", *terms)))
         scored = self._score_ast(ast)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
 
@@ -1792,15 +1638,8 @@ class SearchEngine:
             # neighboring row's block and corrupt the exclusion count
             raise ValueError("pre and post must be < 2^31")
         field = field or self.parser.default_field
-        from xltsearch_spark.analyzers import analyze_text
-        toks = []
-        for t in (include, exclude):
-            a = analyze_text(t, self.config.analyzer)
-            if len(a) != 1:
-                raise ValueError("span_not clauses must each analyze to a "
-                                 "single term")
-            toks.append(a[0][0])
-        ast = SpanNotQuery(field, toks[0], toks[1], int(pre), int(post))
+        inc, exc = self._single_terms("span_not", include, exclude)
+        ast = SpanNotQuery(field, inc, exc, int(pre), int(post))
         scored = self._score_ast(ast)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
 
@@ -1813,17 +1652,21 @@ class SearchEngine:
         if slop < 0:
             raise ValueError("slop must be >= 0")
         field = field or self.parser.default_field
-        from xltsearch_spark.analyzers import analyze_text
-        toks = []
-        for t in (first, second):
-            a = analyze_text(t, self.config.analyzer)
-            if len(a) != 1:
-                raise ValueError("span_near clauses must each analyze to a "
-                                 "single term")
-            toks.append(a[0][0])
-        ast = SpanNearQuery(field, toks[0], toks[1], int(slop))
-        scored = self._score_ast(ast)
+        a, b = self._single_terms("span_near", first, second)
+        scored = self._score_ast(SpanNearQuery(field, a, b, int(slop)))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+
+    def _single_terms(self, api: str, *texts: str) -> list[str]:
+        """Each text through the index analyzer to its one term (the span
+        APIs take single-term clauses)."""
+        out = []
+        for text in texts:
+            toks = analyze_text(text, self.config.analyzer)
+            if len(toks) != 1:
+                raise ValueError(f"{api} clauses must each analyze to a "
+                                 f"single term; {text!r} gives {len(toks)}")
+            out.append(toks[0][0])
+        return out
 
     def _eval_dismax(self, node: DisMaxQuery, decoded, mult, idf_map,
                      tfidf_qn) -> DataFrame:
@@ -1847,33 +1690,90 @@ class SearchEngine:
     def _empty_scores(self) -> DataFrame:
         return self.spark.createDataFrame([], SCORE_SCHEMA)
 
-    def _eval_phrase(self, node: PhraseQuery, decoded, mult, idf_map, tfidf_qn):
-        """Position-list intersection: ONE repartition(doc_id) of the phrase
-        terms' decoded rows, then a partition-level mapInPandas that
-        intersects candidates with pandas/numpy kernels. (A per-doc-group
-        applyInPandas would pay Arrow batch overhead per document.)"""
-        terms = [t for t, _ in node.terms]
-        offsets = [o for _, o in node.terms]
-        n_terms_distinct = len(set(terms))
+    def _eval_phrase(self, node, decoded, mult, idf_map, tfidf_qn):
+        """PhraseQuery and MultiPhraseQuery: ONE repartition(doc_id) of the
+        slot terms' decoded rows, then a partition-level mapInPandas
+        vectorized across every candidate doc (a per-doc-group
+        applyInPandas would pay Arrow batch overhead per document, and
+        pandas groupby iteration ~1 ms per group).
+
+        A slot is a set of terms at a relative offset: one term per slot
+        for an exact phrase, plus — in the phrase-prefix form — a slot at
+        ``prefix_offset`` matched by ANY expansion term. The slot kernel
+        turns every slot-term position into a (doc, slot, anchor =
+        position - offset) triple, dedupes the triples (two expansion
+        terms at one position are ONE slot match: ExactPhraseScorer over
+        the union postings enum counts each position once) and counts the
+        (doc, anchor) groups holding every slot: phraseFreq. Sloppy phrases
+        score with ``functions/phrase.py:phrase_freq``'s anchor-distance
+        rule applied batch-wide (nearest-position searchsorted on a (doc,
+        position) composite key). idf sums every slot term's idf
+        (MultiPhraseWeight allTermStats)."""
+        if isinstance(node, MultiPhraseQuery):
+            if not node.expansions:
+                return self._empty_scores()
+            slots = ([((t,), o) for t, o in node.terms]
+                     + [(tuple(node.expansions), node.prefix_offset)])
+            slop = 0
+        else:
+            slots, slop = [((t,), o) for t, o in node.terms], node.slop
+        slot_terms = sorted({t for ts, _ in slots for t in ts})
         cand = (decoded.filter((F.col("field") == node.field) &
-                               F.col("term").isin(terms))
+                               F.col("term").isin(slot_terms))
                 .select("doc_id", "term", "positions", "dl"))
         cfg = self.config
         n_docs, avgdl = self.stats.n_docs, self.stats.avgdl.get(node.field, 1.0) or 1.0
-        idf = sum(scoring.idf(cfg.scoring_model, n_docs,
-                              idf_map.get((node.field, t), 0)) for t in terms)
+        idf = sum(sum(scoring.idf(cfg.scoring_model, n_docs,
+                                  idf_map.get((node.field, t), 0)) for t in ts)
+                  for ts, _ in slots)
         score = _freq_scorer(cfg)
-        slop = node.slop
         final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None else 1.0)
 
+        def slot_freq(tpos, tdoc, ndocs):
+            parts = [(tdoc[t], np.full(tdoc[t].size, si), tpos[t] - off)
+                     for si, (ts, off) in enumerate(slots) for t in ts]
+            gd, gs, ga = (np.concatenate(c) for c in zip(*parts))
+            order = np.lexsort((gs, ga, gd))
+            gd, gs, ga = gd[order], gs[order], ga[order]
+            fresh = np.concatenate(([True], (gd[1:] != gd[:-1])
+                                    | (ga[1:] != ga[:-1])
+                                    | (gs[1:] != gs[:-1])))
+            gd, ga = gd[fresh], ga[fresh]
+            bnd = np.flatnonzero(np.concatenate((
+                [True], (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1]))))
+            sizes = np.diff(np.concatenate((bnd, [gd.size])))
+            full = sizes == len(slots)  # deduped: <= 1 entry per slot
+            return np.bincount(gd[bnd[full]], minlength=ndocs).astype(np.float64)
+
+        def sloppy_freq(tpos, tdoc, ndocs):
+            terms = [ts[0] for ts, _ in slots]
+            offsets = [o for _, o in slots]
+            a_doc = tdoc[terms[0]]
+            a_pos = tpos[terms[0]] - offsets[0]
+            total = np.zeros(a_doc.size, dtype=np.float64)
+            for i in range(1, len(terms)):
+                fp, fd = tpos[terms[i]], tdoc[terms[i]]
+                expected = a_pos + offsets[i]
+                if fp.size == 0 or a_doc.size == 0:
+                    total[:] = np.inf
+                    break
+                lo = min(int(fp.min()), int(expected.min()))
+                span = max(int(fp.max()), int(expected.max())) - lo + 2
+                comp = fd * span + (fp - lo)
+                j = np.searchsorted(comp, a_doc * span + (expected - lo))
+                jr = np.minimum(j, comp.size - 1)
+                ok_r = (j < comp.size) & (fd[jr] == a_doc)
+                dist = np.where(ok_r, np.abs(fp[jr] - expected), np.inf)
+                jl = np.maximum(j - 1, 0)
+                ok_l = (j > 0) & (fd[jl] == a_doc)
+                dist = np.minimum(dist, np.where(
+                    ok_l, np.abs(fp[jl] - expected), np.inf))
+                total += dist
+            ok = total <= slop
+            return np.bincount(a_doc[ok], weights=1.0 / (1.0 + total[ok]),
+                               minlength=ndocs)
+
         def score_partition(it):
-            # Vectorized across ALL candidate docs in the partition — no
-            # per-doc Python loop (pandas groupby iteration costs ~1 ms/group;
-            # a conjunctive candidate set of 10^7 docs would burn hours).
-            # Same kernel semantics as functions/phrase.py:phrase_freq,
-            # applied batch-wide: exact phrase = group-count over
-            # (doc, position - slot_offset); sloppy = nearest-position
-            # searchsorted on a (doc, position) composite key.
             chunks = list(it)
             if not chunks:
                 return
@@ -1881,70 +1781,21 @@ class SearchEngine:
             pdf = pdf[pdf["positions"].notna()]
             if pdf.empty:
                 return
-            # keep only docs containing every distinct phrase term
-            nuniq = pdf.groupby("doc_id")["term"].nunique()
-            live = nuniq[nuniq >= n_terms_distinct].index
-            pdf = pdf[pdf["doc_id"].isin(live)]
-            if pdf.empty:
-                return
             dcode, duniq = pd.factorize(pdf["doc_id"].to_numpy())
             ndocs = len(duniq)
             dl_all = np.zeros(ndocs, dtype=np.int64)
             dl_all[dcode] = pdf["dl"].to_numpy(dtype=np.int64)
-            # decode every term's position blobs with ONE frombuffer each,
-            # doc-major order (positions are stored ascending within a doc)
+            # every term's positions with ONE frombuffer, doc-major order
+            # (positions are stored ascending within a doc)
             term_arr = pdf["term"].to_numpy()
             blob_arr = pdf["positions"].to_numpy()
             tpos, tdoc = {}, {}
-            for t in set(terms):
+            for t in slot_terms:
                 sub = np.flatnonzero(term_arr == t)
                 sub = sub[np.argsort(dcode[sub], kind="stable")]
-                blobs = blob_arr[sub]
-                cnts = np.fromiter((len(bb) >> 3 for bb in blobs),
-                                   dtype=np.int64, count=len(blobs))
-                tpos[t] = (np.frombuffer(b"".join(blobs), dtype=np.int64)
-                           if len(blobs) else np.zeros(0, np.int64))
+                tpos[t], cnts = blocks.blob_positions(blob_arr[sub])
                 tdoc[t] = np.repeat(dcode[sub], cnts)
-            if slop == 0:
-                gd = np.concatenate([tdoc[t] for t in terms])
-                ga = np.concatenate([tpos[t] - offsets[i]
-                                     for i, t in enumerate(terms)])
-                order = np.lexsort((ga, gd))
-                gd, ga = gd[order], ga[order]
-                bnd = np.flatnonzero(np.concatenate((
-                    [True], (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1]))))
-                sizes = np.diff(np.concatenate((bnd, [gd.size])))
-                # a (doc, anchor) group holds one entry per matched slot;
-                # full groups are phrase occurrences
-                full = sizes == len(terms)
-                pf_per_doc = np.bincount(gd[bnd[full]],
-                                         minlength=ndocs).astype(np.float64)
-            else:
-                a_doc = tdoc[terms[0]]
-                a_pos = tpos[terms[0]] - offsets[0]
-                total = np.zeros(a_doc.size, dtype=np.float64)
-                for i in range(1, len(terms)):
-                    fp, fd = tpos[terms[i]], tdoc[terms[i]]
-                    expected = a_pos + offsets[i]
-                    if fp.size == 0 or a_doc.size == 0:
-                        total[:] = np.inf
-                        break
-                    lo = min(int(fp.min()), int(expected.min()))
-                    span = max(int(fp.max()), int(expected.max())) - lo + 2
-                    comp = fd * span + (fp - lo)
-                    j = np.searchsorted(comp, a_doc * span + (expected - lo))
-                    jr = np.minimum(j, comp.size - 1)
-                    ok_r = (j < comp.size) & (fd[jr] == a_doc)
-                    dist = np.where(ok_r, np.abs(fp[jr] - expected), np.inf)
-                    jl = np.maximum(j - 1, 0)
-                    ok_l = (j > 0) & (fd[jl] == a_doc)
-                    dist = np.minimum(dist, np.where(
-                        ok_l, np.abs(fp[jl] - expected), np.inf))
-                    total += dist
-                ok = total <= slop
-                pf_per_doc = np.bincount(a_doc[ok],
-                                         weights=1.0 / (1.0 + total[ok]),
-                                         minlength=ndocs)
+            pf_per_doc = (slot_freq if slop == 0 else sloppy_freq)(tpos, tdoc, ndocs)
             hit = pf_per_doc > 0
             if not hit.any():
                 return
@@ -1956,103 +1807,6 @@ class SearchEngine:
         # pay N mostly-empty Python tasks; letting AQE size it collapses
         # tiny phrase shuffles to one task and leaves big ones at
         # spark.sql.shuffle.partitions
-        return (cand.repartition("doc_id")
-                .mapInPandas(score_partition, schema=SCORE_SCHEMA))
-
-    def _eval_multi_phrase(self, node: MultiPhraseQuery, decoded, mult,
-                           idf_map, tfidf_qn):
-        """MultiPhraseQuery (phrase-prefix form): exact slots from
-        ``node.terms`` plus one slot at ``node.prefix_offset`` matched by
-        ANY expansion term. phraseFreq = count of anchor positions where
-        every slot matches; duplicate expansion hits at one (doc, anchor)
-        collapse to ONE slot entry (ExactPhraseScorer over the union
-        postings enum counts each position once). idf sums every slot
-        term's idf (MultiPhraseWeight allTermStats).
-
-        Same distributed shape as ``_eval_phrase``: ONE
-        repartition(doc_id) of the involved terms' decoded rows, then a
-        batch-vectorized kernel — (doc, slot, anchor) triples are deduped
-        and group-counted with numpy lexsort, no per-doc Python loop."""
-        if not node.expansions:
-            return self._empty_scores()
-        slots: list[tuple[frozenset, int]] = (
-            [(frozenset((t,)), o) for t, o in node.terms]
-            + [(frozenset(node.expansions), node.prefix_offset)])
-        n_slots = len(slots)
-        all_terms = sorted({t for ts, _ in slots for t in ts})
-        cand = (decoded.filter((F.col("field") == node.field) &
-                               F.col("term").isin(all_terms))
-                .select("doc_id", "term", "positions", "dl"))
-        cfg = self.config
-        n_docs = self.stats.n_docs
-        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        def idf_sum(ts):
-            return sum(scoring.idf(cfg.scoring_model, n_docs,
-                                   idf_map.get((node.field, t), 0)) for t in ts)
-        idf = idf_sum(t for t, _ in node.terms) + idf_sum(node.expansions)
-        score = _freq_scorer(cfg)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
-        slot_of: dict[str, list[tuple[int, int]]] = {}
-        for si, (ts, off) in enumerate(slots):
-            for t in ts:
-                slot_of.setdefault(t, []).append((si, off))
-
-        def score_partition(it):
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["positions"].notna()]
-            if pdf.empty:
-                return
-            dcode, duniq = pd.factorize(pdf["doc_id"].to_numpy())
-            ndocs = len(duniq)
-            dl_all = np.zeros(ndocs, dtype=np.int64)
-            dl_all[dcode] = pdf["dl"].to_numpy(dtype=np.int64)
-            term_arr = pdf["term"].to_numpy()
-            blob_arr = pdf["positions"].to_numpy()
-            d_parts, s_parts, a_parts = [], [], []
-            for t, assignments in slot_of.items():
-                sub = np.flatnonzero(term_arr == t)
-                if sub.size == 0:
-                    continue
-                blobs = blob_arr[sub]
-                cnts = np.fromiter((len(bb) >> 3 for bb in blobs),
-                                   dtype=np.int64, count=len(blobs))
-                pos = np.frombuffer(b"".join(blobs), dtype=np.int64)
-                docs_rep = np.repeat(dcode[sub], cnts)
-                for si, off in assignments:
-                    d_parts.append(docs_rep)
-                    s_parts.append(np.full(pos.size, si, dtype=np.int64))
-                    a_parts.append(pos - off)
-            if not d_parts:
-                return
-            gd = np.concatenate(d_parts)
-            gs = np.concatenate(s_parts)
-            ga = np.concatenate(a_parts)
-            order = np.lexsort((gs, ga, gd))
-            gd, gs, ga = gd[order], gs[order], ga[order]
-            # dedupe exact (doc, anchor, slot) triples: two expansion terms
-            # at one position are ONE slot match
-            fresh = np.concatenate(([True], (gd[1:] != gd[:-1])
-                                    | (ga[1:] != ga[:-1])
-                                    | (gs[1:] != gs[:-1])))
-            gd, gs, ga = gd[fresh], gs[fresh], ga[fresh]
-            bnd = np.flatnonzero(np.concatenate((
-                [True], (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1]))))
-            sizes = np.diff(np.concatenate((bnd, [gd.size])))
-            full = sizes == n_slots  # deduped: <=1 entry per slot
-            pf_per_doc = np.bincount(gd[bnd[full]],
-                                     minlength=ndocs).astype(np.float64)
-            hit = pf_per_doc > 0
-            if not hit.any():
-                return
-            sc = final_mult * score(pf_per_doc[hit], dl_all[hit], idf, avgdl)
-            yield pd.DataFrame({"doc_id": duniq[hit].astype(np.int64),
-                                "score": sc})
-
-        # AQE-coalescible keyed repartition — same rationale as _eval_phrase
         return (cand.repartition("doc_id")
                 .mapInPandas(score_partition, schema=SCORE_SCHEMA))
 
@@ -2072,7 +1826,6 @@ class SearchEngine:
         phrase pipeline — pruned postings scan over the expanded term set,
         one repartition(doc_id), one vectorized kernel."""
         field = field or self.parser.default_field
-        from xltsearch_spark.analyzers import analyze_text
         toks = analyze_text(phrase, self.config.analyzer)
         if len(toks) < 2:
             raise ValueError("phrase prefix needs at least two analyzed "
@@ -2097,72 +1850,11 @@ class SearchEngine:
         scored = self._score_ast(ast)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
 
-    def _eval_boolean_flat(self, node: BooleanQuery, decoded, mult, tfidf_qn):
-        """Fast path for booleans whose clauses are all simple leaves
-        (term / const-score): ONE pass over the decoded frame, conditional
-        aggregation per clause — the postings are scanned and decoded once
-        for the whole boolean instead of once per leaf."""
-        qn = tfidf_qn if tfidf_qn is not None else 1.0
-        m2 = mult * node.boost
-        aggs, post = [], []
-        n_must = 0
-        scoring_idx = []
-        should_idx = []
-        for i, (occ, sub) in enumerate(node.clauses):
-            if isinstance(sub, TermQuery):
-                cond = (F.col("field") == sub.field) & (F.col("term") == sub.term)
-                w = m2 * sub.boost * qn
-                aggs.append(F.sum(F.when(cond, F.col("score")).otherwise(0.0))
-                            .alias(f"s{i}"))
-                post.append(("term", i, occ, w))
-            elif isinstance(sub, ConstScoreTerms):
-                cond = (F.col("field") == sub.field) & F.col("term").isin(list(sub.terms)) \
-                    if sub.terms else F.lit(False)
-                post.append(("const", i, occ, m2 * sub.boost * qn))
-            elif isinstance(sub, ConstScorePred):
-                cond = (F.col("field") == sub.field) & sub.term_cond()
-                post.append(("const", i, occ, m2 * sub.boost * qn))
-            else:
-                return None  # phrase / nested boolean / match-all -> general path
-            aggs.append(F.max(F.when(cond, 1).otherwise(0)).alias(f"m{i}"))
-            if occ == MUST:
-                n_must += 1
-            if occ != MUST_NOT:
-                scoring_idx.append(i)
-            if occ == SHOULD:
-                should_idx.append(i)
-        if not scoring_idx:
-            return self._empty_scores()
-        if node.msm > len(should_idx):
-            return self._empty_scores()  # Lucene: msm > optional count -> no hits
-        agg = decoded.groupBy("doc_id").agg(*aggs)
-        score = F.lit(0.0)
-        gate = F.lit(True)
-        for kind, i, occ, w in post:
-            hit = F.col(f"m{i}") == 1
-            if occ == MUST_NOT:
-                gate &= ~hit
-                continue
-            if occ == MUST:
-                gate &= hit
-            contrib = (F.col(f"s{i}") * F.lit(w)) if kind == "term" \
-                else F.when(hit, F.lit(w)).otherwise(0.0)
-            score = score + contrib
-        if node.msm > 0:
-            gate &= sum(F.col(f"m{i}") for i in should_idx) >= node.msm
-        if n_must == 0:
-            gate &= sum(F.col(f"m{i}") for i in scoring_idx) >= 1
-        out = agg.filter(gate).withColumn("score", score)
-        if self.config.scoring_model != "bm25":
-            overlap = sum(F.col(f"m{i}") for i in scoring_idx)
-            out = out.withColumn("score", F.col("score") * overlap
-                                 / F.lit(float(len(scoring_idx))))
-        return out.select("doc_id", "score")
-
     def _eval_boolean(self, node: BooleanQuery, decoded, mult, idf_map, tfidf_qn):
-        flat = self._eval_boolean_flat(node, decoded, mult, tfidf_qn)
-        if flat is not None:
-            return flat
+        """Booleans with a nested or non-leaf clause (flat ones score in
+        ``FlatBooleans``): one union of the clause score frames, then one
+        doc-keyed aggregate of score, MUST/SHOULD hit counts and the
+        MUST_NOT flag."""
         m2 = mult * node.boost
         tagged = []
         n_must = 0

@@ -19,7 +19,7 @@ Scoring formulas (public Lucene 4.6 knowledge):
   ``queryNorm = 1/sqrt(sumOfSquaredWeights)``; BooleanQuery multiplies
   ``coord = overlap/maxOverlap``.
 * Multi-term queries: see ``plans/rewrite.py`` (shared with the engine).
-* Phrases: shared matcher ``functions/phrase.py``; phrase idf = sum of term
+* Phrases: the matcher ``functions/phrase.py``; phrase idf = sum of term
   idfs, tf = phraseFreq.
 """
 
@@ -162,9 +162,10 @@ class OracleIndex:
         out = {}
         qdl = self._qdl[field]
         for d, pos in posting.items():
+            # BM25Similarity's association, weight * tf / (tf + norm), as the
+            # phrase and span scorers below compute it
             tf = float(pos.size)
-            tfn = tf / (tf + k1 * (1 - b + b * qdl[d] / avgdl))
-            out[d] = mult * idf * (k1 + 1) * tfn
+            out[d] = mult * idf * (k1 + 1) * tf / (tf + k1 * (1 - b + b * qdl[d] / avgdl))
         return out
 
     def _phrase_docs(self, node: PhraseQuery) -> dict[int, float]:
