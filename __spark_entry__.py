@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from xltsearch_spark.analyzers import ENGLISH_STOP_WORDS
 from xltsearch_spark.config import IndexConfig
 from xltsearch_spark.operators import (dedup, domains, events, fusion,
-                                       multimodal, packing, parse, sampling,
+                                       packing, parse, sampling,
                                        scrub, selection, similarity,
                                        textstats)
 from xltsearch_spark.operators.build import IndexBuilder
@@ -171,8 +171,8 @@ def _get_engine(spark: SparkSession, sf_dir: str, model: str = "bm25",
     # block-max metadata for pruning — they score via decode-time
     # transforms, exactly how the reference swaps Similarity on one index
     engine = SearchEngine(spark, postings, docs, dictionary, stats, cfg,
-                          block_score_model=base_cfg.scoring_model,
-                          block_quantize=base_cfg.quantize_norms)
+                          blocks_exact=(cfg.scoring_model == base_cfg.scoring_model
+                                        and cfg.quantize_norms == base_cfg.quantize_norms))
     _ENGINE_CACHE[key] = engine
     return engine
 
@@ -1255,40 +1255,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return events.sessionize(ev, gap_minutes=30).orderBy("user_id")
     q["events_sessionize"] = ev_sessions
 
-    # ---- multimodal plumbing (opaque binary + typed metadata) ----
-    def _media_from_documents(docs):
-        kind = F.when(F.col("doc_id") % 2 == 0, F.lit("audio")).otherwise(F.lit("video"))
-        return docs.select(
-            F.col("doc_id").alias("media_id"), kind.alias("kind"),
-            F.col("text").cast("binary").alias("payload"),
-            F.concat(F.lit("application/x-fake-"), kind).alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            ((F.col("doc_id") % 30) * 1000).cast("long").alias("duration_ms"))
-
-    def mm_features(s, d):
-        """Arrow-batched feature extraction over binary payloads. The
-        audio/video kernel (sha256-digest features) is SQL-reproducible, so
-        the full mapInPandas plumbing gets a hard oracle; the image fake
-        decoder stays pytest-only (rng not expressible in SQL)."""
-        media = _media_from_documents(s.read.parquet(f"{d}/documents.parquet"))
-        out = multimodal.extract_features(media, fake=True, feature_dim=16)
-        return (out.select("media_id", "kind", "decode_ok",
-                           F.posexplode("feature").alias("feature_idx", "fv"))
-                .select("media_id", "kind",
-                        F.col("decode_ok").cast("long").alias("decode_ok"),
-                        F.col("feature_idx").cast("long").alias("feature_idx"),
-                        F.round("fv", 6).alias("feature_val"))
-                .orderBy("media_id", "feature_idx"))
-    q["multimodal_features"] = mm_features
-
-    def mm_frames(s, d):
-        media = _media_from_documents(s.read.parquet(f"{d}/documents.parquet"))
-        return (multimodal.frame_sample_plan(media, every_ms=1000)
-                .select("media_id", F.col("frame_ts_ms").cast("long").alias("frame_ts_ms"))
-                .orderBy("media_id", "frame_ts_ms"))
-    q["multimodal_frame_plan"] = mm_frames
-
     # ---- similarity search ----
     def ann_brute(s, d):
         emb = (s.read.parquet(f"{d}/embeddings.parquet")
@@ -1563,7 +1529,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # engages past 64 merges), text_quality/lang/gopher + pipeline_curate
     # + stream_curate (the parallelism floor no-ops below its byte
     # threshold at every test sf, so plans are unchanged), the analyzer
-    # entries (analyzers untouched), similarity/ann/multimodal/events/
+    # entries (analyzers untouched), similarity/ann/events/
     # eval/sampling/packing/scrub/parse (modules untouched this round).
     # Invariant (pinned by tests/test_entry_rotation.py): every entry
     # without ANY prior driver row sits inside the first 50, and nothing
@@ -2904,25 +2870,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT user_id, count(*) AS n_sessions, sum(c)::BIGINT AS n_events,
            max(c) AS max_session_events, sum(dur)::BIGINT AS total_dur_us
     FROM g GROUP BY user_id ORDER BY user_id"""
-
-    # multimodal: sha256-digest features byte-for-byte via a hex-pair lookup
-    hexmap = ", ".join(f"('{i:02x}', {i})" for i in range(256))
-    o["multimodal_features"] = f"""
-    WITH hx(h, v) AS (VALUES {hexmap}),
-    m AS (SELECT doc_id AS media_id,
-                 CASE WHEN doc_id % 2 = 0 THEN 'audio' ELSE 'video' END AS kind,
-                 sha256(text) AS dig
-          FROM documents),
-    f AS (SELECT media_id, kind, i, substr(dig, 2*i+1, 2) AS pair
-          FROM m, unnest(range(16)) AS t(i))
-    SELECT media_id, kind, 1::BIGINT AS decode_ok, i AS feature_idx,
-           round(hx.v / 255.0, 6) AS feature_val
-    FROM f JOIN hx ON f.pair = hx.h ORDER BY media_id, i"""
-
-    o["multimodal_frame_plan"] = """
-    SELECT doc_id AS media_id,
-           unnest(range(0, (doc_id % 30) * 1000 + 1, 1000)) AS frame_ts_ms
-    FROM documents WHERE doc_id % 2 = 1 ORDER BY 1, 2"""
 
     # exact-jaccard oracles: the LSH hash families are not SQL-expressible,
     # but the ENTRIES emit exact-verified pairs, so an all-pairs exact

@@ -1,6 +1,7 @@
-"""Measure catalog.merge() (posting copy) vs compact() (full rebuild) after
-an incremental update — the claim that matters at 100 TB: compaction cost
-should track POSTING BYTES, not re-tokenization CPU. Appends the result to
+"""Measure catalog.merge() (postings re-blocked, not re-analyzed) vs
+compact() (full rebuild) after an incremental update — the claim that
+matters at 100 TB: compaction cost should track POSTING BYTES, not
+re-tokenization CPU. Appends the result to
 stdout as one JSON line; paste into BENCH/BASELINE.md."""
 
 from __future__ import annotations

@@ -172,11 +172,11 @@ def test_wand_metadata_tau_skips_probe(spark):
     meta_hits = [(r["doc_id"], round(r["score"], 9)) for r in
                  engine.search_scores("common_token", 5).collect()]
     assert engine._last_wand_tau_source == "metadata"
-    engine.stats_exact = False  # stored per-doc scores no longer trusted
+    engine.blocks_exact = False  # stored per-doc scores no longer trusted
     probe_hits = [(r["doc_id"], round(r["score"], 9)) for r in
                   engine.search_scores("common_token", 5).collect()]
     assert engine._last_wand_tau_source == "probe"
-    engine.stats_exact = True
+    engine.blocks_exact = True
     engine.wand_enabled = False  # brute force
     brute = [(r["doc_id"], round(r["score"], 9)) for r in
              engine.search_scores("common_token", 5).collect()]
@@ -301,7 +301,7 @@ def test_details_pane_rendering(bm25_setup):
 def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
     """With exact stats (single segment) the WAND block skip is a plain
     `block_max_score >= const` comparison that reaches the parquet reader
-    (PushedFilters); with stats_exact=False the recomputed (max_tf, min_dl)
+    (PushedFilters); with blocks_exact=False the recomputed (max_tf, min_dl)
     bound path must return the identical top-k. WAND scores through the
     general path's scorer, so its top-k scores EQUAL the general path's,
     bit for bit, under both similarities."""
@@ -314,7 +314,7 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
         cat = IndexCatalog(spark, str(tmp_path / model), cfg)
         cat.build(spark.createDataFrame(small_corpus), fingerprint="v1")
         eng = cat.engine()
-        assert eng.stats_exact
+        assert eng.blocks_exact
         eng.wand_min_df = 1
 
         def top(q, k=5):
@@ -329,12 +329,12 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
         assert "GreaterThanOrEqual(block_max_score" in plan, plan[-2000:]
         if model == "bm25":
             # stale-stats fallback: recomputed bounds, identical results
-            eng.stats_exact = False
+            eng.blocks_exact = False
             stale = top("common_token OR graded")
             assert [d for d, _ in exact] == [d for d, _ in stale]
             for (_, a), (_, b) in zip(exact, stale):
                 assert a == pytest.approx(b, rel=1e-9)
-            eng.stats_exact = True
+            eng.blocks_exact = True
         # and the general (non-WAND) path agrees to the bit
         queries = ["common_token OR graded", "alpha OR beta OR graded",
                    "alpha^2 OR beta^0.5 OR graded^3", "indexe~1"]
@@ -509,7 +509,8 @@ def test_tfidf_wand_rank_identical_and_pushed_filter(spark, tmp_path):
 
 def test_wand_declines_on_block_provenance_mismatch(spark, tiny_corpus):
     """An engine whose scoring model / quantization differs from what the
-    blocks were BUILT under must not trust stored block metadata: the
+    blocks were BUILT under is told so (``blocks_exact=False``) and must
+    not trust stored block metadata: the
     quantized-norm engine over unquantized-built frames (and the TF-IDF
     engine over BM25-built frames) decline WAND and brute-force — results
     must still match the oracle."""
@@ -526,17 +527,14 @@ def test_wand_declines_on_block_provenance_mismatch(spark, tiny_corpus):
     for derived in (_replace(cfg, quantize_norms=True),
                     _replace(cfg, scoring_model="default")):
         eng = SearchEngine(spark, postings, docs, dictionary, stats, derived,
-                           block_score_model=cfg.scoring_model,
-                           block_quantize=cfg.quantize_norms)
+                           blocks_exact=False)
         eng.wand_min_df = 1
         wand_df, _ = eng._wand_topk("common_token", 5)
         assert wand_df is None  # declined: metadata provenance mismatch
         oracle = OracleIndex(tiny_corpus, derived)
         assert_rank_identical(eng, oracle, ["common_token", "graded OR beta"])
     # matching provenance keeps the fast path alive
-    eng_ok = SearchEngine(spark, postings, docs, dictionary, stats, cfg,
-                          block_score_model=cfg.scoring_model,
-                          block_quantize=cfg.quantize_norms)
+    eng_ok = SearchEngine(spark, postings, docs, dictionary, stats, cfg)
     eng_ok.wand_min_df = 1
     wand_df, _ = eng_ok._wand_topk("common_token", 5)
     assert wand_df is not None
@@ -627,7 +625,7 @@ def test_hit_count_fast_paths(bm25_setup, spark, tiny_corpus):
     dead = int(engine.score_all("common_token").collect()[0]["doc_id"])
     eng2 = SearchEngine(spark, builder.postings_stage(runs, st), docs,
                         builder.dictionary_stage(runs), st, cfg,
-                        tombstones=[dead])
+                        tombstones_df=spark.createDataFrame([(dead,)], "doc_id long"))
     n2, _ = eng2.hit_count("common_token")
     assert n2 == n_term - 1
 

@@ -1,10 +1,10 @@
-"""Training-pipeline operator tests: dedup, similarity, text stats, multimodal."""
+"""Training-pipeline operator tests: dedup, similarity, text stats."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from xltsearch_spark.operators import dedup, multimodal, similarity, textstats
+from xltsearch_spark.operators import dedup, similarity, textstats
 
 
 @pytest.fixture(scope="module")
@@ -134,29 +134,6 @@ def test_fingerprint_whitespace_insensitive(spark):
     rows = {r["doc_id"]: r["fingerprint"] for r in textstats.fingerprints(df).collect()}
     assert rows[0] == rows[1]
     assert rows[0] != rows[2]
-
-
-def test_multimodal_features_and_stub(spark):
-    media = multimodal.synthetic_media(spark, 12)
-    feats = multimodal.extract_features(media, fake=True, feature_dim=8).collect()
-    assert len(feats) == 12
-    assert all(len(r["feature"]) == 8 and r["decode_ok"] == 1 for r in feats)
-    # real decode path is an explicit stub
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"xx", fake=False)
-    # fake=False flows degrade to decode_ok=0 for images, never raise
-    degraded = multimodal.extract_features(media, fake=False).collect()
-    img = [r for r in degraded if r["kind"] == "image"]
-    assert img and all(r["decode_ok"] == 0 for r in img)
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synthetic_media(spark, 12)
-    plan = multimodal.frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    vids = media.filter("kind = 'video'").collect()
-    expected = sum(int(v["duration_ms"] // 1000) + 1 for v in vids)
-    assert len(rows) == expected
 
 
 def test_ngram_jaccard_hot_shingle_capped(spark):

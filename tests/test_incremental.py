@@ -158,33 +158,48 @@ def test_large_delete_batch_off_driver(spark, tmp_path):
     assert meta["n_tombstones"] == 32
     assert cat.tombstones_df().count() == 32
     eng = cat.engine()
-    assert eng.tombstones == [] and eng.tombstones_df is not None
+    assert eng.tombstones_df is not None
     # live doc count and query results reflect the deletes
     assert eng.docs.count() == 32
     assert eng.search_scores("common_token", 100).count() <= 32
 
 
-@pytest.mark.parametrize("recompute_bm", [False, True])
+@pytest.mark.parametrize("reopen", [False, True])
 def test_merge_without_retokenize_matches_fresh_build(spark, corpora, tmp_path,
-                                                      recompute_bm):
-    """catalog.merge() = Lucene forceMerge by posting COPY: after merging,
-    per-document scores equal a fresh build over the live corpus (live-only
-    stats), positions survive (phrase), and the max_doc watermark prevents
-    id collisions on the next update. Fast mode (default) keeps stale
-    block_max (engine falls back to recomputed WAND bounds);
-    recompute_block_max=True restores the exact pushed-filter path."""
-    import pandas as pd
+                                                      reopen):
+    """catalog.merge() = Lucene forceMerge without retokenization: after
+    merging, per-document scores equal a fresh build over the live corpus
+    (live-only stats), positions survive (phrase), and the max_doc
+    watermark prevents id collisions on the next update. The merged
+    segment is re-blocked under the merged stats, so its engine trusts the
+    stored bounds: WAND seeds tau from block metadata and pushes its block
+    filter to the parquet reader. reopen=True reads the merged index
+    through a newly opened catalog, so everything above must hold from the
+    persisted meta and stage tables alone."""
+    import io
+    import re
+    from contextlib import redirect_stdout
     v1, v2 = corpora
     cat = IndexCatalog(spark, str(tmp_path / "wh"), CFG)
     cat.build(spark.createDataFrame(v1), fingerprint="v1")
     cat.update(spark.createDataFrame(v2), fingerprint="v2")
     assert len(cat.read_meta()["segments"]) == 2
-    cat.merge(fingerprint="m1", recompute_block_max=recompute_bm)
+    cat.merge(fingerprint="m1")
+    if reopen:
+        cat = IndexCatalog(spark, str(tmp_path / "wh"), CFG)
     meta = cat.read_meta()
     assert len(meta["segments"]) == 1
     assert meta.get("tombstone_batches", []) == [] and cat.tombstones_df() is None
     eng = cat.engine()
-    assert eng.stats_exact == recompute_bm
+    assert eng.blocks_exact
+    eng.wand_min_df = 1
+    assert eng.search_scores("common_token OR graded", 5).count() == 5
+    assert eng._last_wand_tau_source == "metadata"
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        eng._last_wand_scan.explain(mode="formatted")
+    pushed = re.findall(r"PushedFilters: \[.*\]", buf.getvalue())
+    assert any("block_max_score" in f for f in pushed), buf.getvalue()[-2000:]
 
     fresh = IndexCatalog(spark, str(tmp_path / "wh_fresh"), CFG)
     fresh.build(spark.createDataFrame(v2), fingerprint="v2")
@@ -281,33 +296,6 @@ def test_three_round_updates_then_merge(spark, tmp_path):
             assert got[p] == pytest.approx(exp[p], rel=1e-9), f"{q} @ {p}"
 
 
-def test_merge_legacy_meta_without_max_doc(spark, corpora, tmp_path):
-    """A pre-round-2 meta (no max_doc key) must fall back to the PRE-merge
-    n_docs as the id watermark — falling back to the live count would hand
-    out colliding doc ids on the next update."""
-    import json, os
-    v1, v2 = corpora
-    cat = IndexCatalog(spark, str(tmp_path / "wh"), CFG)
-    cat.build(spark.createDataFrame(v1), fingerprint="v1")
-    cat.update(spark.createDataFrame(v2), fingerprint="v2")
-    mp = os.path.join(cat.root, "stats.json")
-    meta = json.load(open(mp))
-    meta.pop("max_doc", None)  # simulate a legacy index
-    json.dump(meta, open(mp, "w"))
-    cat.merge(fingerprint="m")
-    assert cat.read_meta()["max_doc"] == meta["n_docs"]  # pre-merge total
-    v3 = v2.copy()
-    extra = v2.iloc[[1]].copy()
-    extra["path"] = "zz/post_legacy_merge"
-    extra["content"] = "legacy_merge_probe common_token"
-    v3 = pd.concat([v3, extra], ignore_index=True)
-    cat.update(spark.createDataFrame(v3), fingerprint="v3")
-    eng = cat.engine()
-    n = eng.docs.count()
-    assert eng.docs.select("doc_id").distinct().count() == n == len(v3)
-    assert eng.search_scores("legacy_merge_probe", 5).count() == 1
-
-
 def test_merge_crash_between_meta_and_cleanup_leaves_readable_index(
         spark, corpora, tmp_path, monkeypatch):
     """merge() commits by writing the new meta BEFORE deleting the old
@@ -342,39 +330,6 @@ def test_merge_crash_between_meta_and_cleanup_leaves_readable_index(
     cat.update(spark.createDataFrame(pd.concat([v2, extra], ignore_index=True)),
                fingerprint="v3")
     assert cat.engine().search_scores("post_crash_token", 5).count() == 1
-
-
-def test_merge_and_search_survive_pre_block_min_segments(spark, corpora,
-                                                         tmp_path):
-    """Backward compatibility with indexes persisted before the
-    block_min_score column (r4): search and merge must both work when a
-    segment's postings lack the column (simulated by rewriting the stage
-    parquet without it)."""
-    v1, v2 = corpora
-    cat = IndexCatalog(spark, str(tmp_path / "wh"), CFG)
-    cat.build(spark.createDataFrame(v1), fingerprint="v1")
-    seg = cat.read_meta()["segments"][0]["name"]
-    pdir = cat._stage_dir(seg, "postings")
-    stripped = spark.read.parquet(pdir).drop("block_min_score").toPandas()
-    import shutil
-    shutil.rmtree(pdir.replace("file:", ""))
-    spark.createDataFrame(stripped).write.parquet(pdir)
-    # search over the pure-old index (engine guards the missing column)
-    hits = cat.engine().search("merge", 10).collect()
-    assert len(hits) > 0
-    # update mixes a NEW (16-col) segment with the OLD (15-col) one
-    cat.update(spark.createDataFrame(v2), fingerprint="v2")
-    assert len(cat.read_meta()["segments"]) == 2
-    # merge copies postings across both layouts without error
-    cat.merge(fingerprint="m")
-    assert len(cat.read_meta()["segments"]) == 1
-    eng = cat.engine()
-    fresh = IndexCatalog(spark, str(tmp_path / "wh_fresh"), CFG)
-    fresh.build(spark.createDataFrame(v2), fingerprint="v2")
-    feng = fresh.engine()
-    got = {r["path"]: r["score"] for r in eng.search("merge", 1000).collect()}
-    exp = {r["path"]: r["score"] for r in feng.search("merge", 1000).collect()}
-    assert got == exp
 
 
 def test_span_queries_respect_tombstones(spark, corpora, tmp_path):

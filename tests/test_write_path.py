@@ -23,7 +23,7 @@ from xltsearch_spark.sources.table_store import (ParquetFilesystemStore,
 N_DOCS = 200
 HOT = "flush"          # a filler word in about a third of the docs
 STAGES = ("docs", "runs", "dictionary", "doc_stats", "postings")
-# Spark jobs of the merge below: 34 on local[8]; 53 while every stage
+# Spark jobs of the merge below: 29 on local[4]; 53 while every stage
 # write re-read its table to count rows
 MERGE_JOBS = 36
 
@@ -135,6 +135,42 @@ def test_default_config_blocks_queries_and_merge(spark, corpora, tmp_path,
             assert got[p] == pytest.approx(s, rel=1e-6), f"{q} @ {p}"
 
 
+@pytest.mark.parametrize("model", ["bm25", "default"])
+def test_merged_block_bounds_equal_decoded_scores(spark, corpora, tmp_path, model):
+    """A merge re-blocks the live postings under the merged stats: after a
+    default-config build, update and merge, every merged block is strictly
+    increasing with span = min/max, and its stored block_max_score and
+    block_min_score EQUAL the max and min of the scores the engine decodes
+    for its docs, with no tolerance — the bounds a fresh build would
+    store."""
+    from pyspark.sql import functions as F
+    v1, v2 = corpora
+    cat = IndexCatalog(spark, str(tmp_path / "wh"), IndexConfig(scoring_model=model))
+    cat.build(spark.createDataFrame(v1), fingerprint="v1")
+    cat.update(spark.createDataFrame(v2), fingerprint="v2")
+    cat.merge(fingerprint="m")
+    assert not _bad_blocks(_stage_postings(spark, cat))
+    engine = cat.engine()
+    assert engine.blocks_exact
+    idf_map = {(r["field"], r["term"]): int(r["doc_freq"])
+               for r in engine.dictionary.collect()}
+    decoded = engine._decode_blocks(engine.postings, idf_map, with_positions=False)
+    blk = engine.postings.select("field", "term", "block_id", "skip_first_doc",
+                                 "skip_last_doc", "block_max_score",
+                                 "block_min_score")
+    rows = (decoded.join(blk, ["field", "term"])
+            .filter(F.col("doc_id").between(F.col("skip_first_doc"),
+                                            F.col("skip_last_doc")))
+            .groupBy("field", "term", "block_id")
+            .agg(F.max("score").alias("mx"), F.min("score").alias("mn"),
+                 F.first("block_max_score").alias("bmax"),
+                 F.first("block_min_score").alias("bmin"))).collect()
+    assert len(rows) == engine.postings.count() > 500
+    off = [(r["field"], r["term"], r["block_id"]) for r in rows
+           if r["mx"] != r["bmax"] or r["mn"] != r["bmin"]]
+    assert off == [], f"{len(off)} blocks, e.g. {off[:3]}"
+
+
 def _job_ids(sc) -> set[int]:
     """Ids of the session's jobs outside any job group (all of them here)."""
     return set(sc.statusTracker().getJobIdsForGroup(None))
@@ -193,8 +229,9 @@ def test_manifest_rows_equal_table_rows(spark, corpora, tmp_path, store_cls):
 
 
 def test_old_format_index_is_invalidated_and_rebuilt(spark, tmp_path):
-    """An index whose stats.json and manifests lack the format stamp
-    (written before posting blocks were doc-ordered) reports
+    """An index whose stats.json and manifests lack the current format
+    stamp (written before posting blocks were doc-ordered, or by a merge
+    that copied stale block bounds) reports
     INDEX_INVALIDATED, refuses queries and updates, and a build with the
     same fingerprint re-runs every stage instead of resuming."""
     corpus = spark.createDataFrame(generate_corpus(32))
@@ -202,12 +239,21 @@ def test_old_format_index_is_invalidated_and_rebuilt(spark, tmp_path):
     cat = IndexCatalog(spark, str(tmp_path / "wh"), cfg)
     cat.build(corpus, fingerprint="v1", build_time_ms=1)
     paths = [cat._meta_path()] + [cat._manifest_path("seg_000000", s) for s in STAGES]
-    for p in paths:
-        with open(p) as f:
-            m = json.load(f)
-        m.pop("format")
-        with open(p, "w") as f:
-            json.dump(m, f)
+
+    def stamp(fmt):
+        for p in paths:
+            with open(p) as f:
+                m = json.load(f)
+            m.pop("format")
+            if fmt is not None:
+                m["format"] = fmt
+            with open(p, "w") as f:
+                json.dump(m, f)
+
+    # format 2: a merge of that code left stale block bounds behind
+    stamp(2)
+    assert cat.status() == INDEX_INVALIDATED
+    stamp(None)
     assert cat.status() == INDEX_INVALIDATED
     with pytest.raises(RuntimeError, match="invalidated"):
         cat.engine()

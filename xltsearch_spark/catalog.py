@@ -15,8 +15,11 @@ Mirrors the reference's catalog/lifecycle machinery Spark-first:
   doc ids appended after maxDoc; replaced/deleted rows become tombstones.
   Collection stats (maxDoc, docFreq, sumTotalTermFreq) keep counting
   tombstoned docs until compaction — Lucene 4.6's exact pre-merge behavior.
-  ``compact()`` = forceMerge: full rebuild restoring the dense
-  (repo, path)-ordered docid layout.
+  ``merge()`` = forceMerge without retokenization: the segments' posting
+  blocks, minus the tombstoned docs, go back through the build's own
+  stats/dictionary/postings stages, so the merged segment equals a fresh
+  build over the live docs (doc ids kept). ``compact()`` = full rebuild
+  from the corpus, restoring the dense (repo, path)-ordered docid layout.
 * Build state machine follows ``Config.java:52-54,237-250`` /
   ``Catalog.java:104-122``: ``last_updated`` = UPDATE_FAILED(-1) while a
   build runs, the build-start timestamp only after every stage commits;
@@ -41,8 +44,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from xltsearch_spark.config import (INDEX_INVALIDATED, INDEX_NEVER_CREATED,
                                     INDEX_UPDATE_FAILED, IndexConfig)
-from xltsearch_spark.operators._parallel import sized_partition_count
-from xltsearch_spark.operators.build import BuildStats, IndexBuilder
+from xltsearch_spark.operators.build import (RUN_SCHEMA, BuildStats, IndexBuilder,
+                                             make_block_to_run_udf)
 from xltsearch_spark.operators.incremental import change_diff, diff_summary
 from xltsearch_spark.operators.search import SearchEngine
 
@@ -50,10 +53,15 @@ STAGES = ("docs", "runs", "dictionary", "doc_stats", "postings")
 CORPUS_COLS = ("repo", "path", "commit", "lang", "content", "title", "meta")
 # on-disk layout version, stamped into stats.json and every stage manifest.
 # 2: every posting block is strictly doc-id ordered and its skip span is
-# its min/max doc. Earlier builds could glue overlapping runs into one
+# its min/max doc (earlier builds could glue overlapping runs into one
 # block, which conjunction pruning and the merge's dirty-block locator
-# read wrongly, so an index without this stamp reports INDEX_INVALIDATED.
-INDEX_FORMAT = 2
+# read wrongly). 3: a merged segment is re-blocked under the merged stats,
+# so its stored block bounds are exact. A format-2 merge copied blocks and
+# left stale bounds that only its meta flag told the engine to distrust;
+# this code trusts every single-segment index's bounds (WAND's pushed
+# block filter), so an index without the current stamp reports
+# INDEX_INVALIDATED.
+INDEX_FORMAT = 3
 
 
 class IndexCatalog:
@@ -78,7 +86,7 @@ class IndexCatalog:
         p = self._meta_path()
         if not os.path.exists(p):
             return {"last_updated": INDEX_NEVER_CREATED, "config_hash": None,
-                    "segments": [], "tombstones": []}
+                    "segments": []}
         with open(p) as f:
             return json.load(f)
 
@@ -240,7 +248,6 @@ class IndexCatalog:
             "format": INDEX_FORMAT,
             "segments": [{"name": seg, "n_docs": seg_docs,
                           "fingerprint": fingerprint}],
-            "tombstones": [],
             "n_docs": stats.n_docs, "avgdl": stats.avgdl, "sum_ttf": stats.sum_ttf,
             "max_doc": stats.n_docs,  # id watermark (ids stay sparse post-merge)
         })
@@ -288,7 +295,7 @@ class IndexCatalog:
             seg = f"seg_{len(meta['segments']):06d}"
             # id watermark, NOT n_docs: after a merge dropped deleted docs,
             # n_docs < max assigned id and reusing it would collide
-            id_base = int(meta.get("max_doc", prior.n_docs))
+            id_base = int(meta["max_doc"])
             stats, seg_docs = self._build_segment(seg, changed, fingerprint,
                                                   id_base=id_base, prior=prior)
             meta["segments"].append({"name": seg, "n_docs": seg_docs,
@@ -314,30 +321,18 @@ class IndexCatalog:
         return self.build(corpus, fingerprint, build_time_ms)
 
     def merge(self, fingerprint: str | None = None,
-              build_time_ms: int | None = None,
-              recompute_block_max: bool = False) -> BuildStats:
-        """forceMerge WITHOUT retokenization — how Lucene actually merges:
-        posting data is COPIED (IndexWriter merge), deleted docs dropped,
-        never re-analyzed. All segments collapse into one; collection stats
-        recompute over LIVE docs (post-merge deleted docs stop counting in
-        N/df/avgdl, exactly Lucene's behavior); doc ids are PRESERVED
-        (sparse after deletes — ``max_doc`` watermarks future id blocks).
-
-        Two modes:
-        * default (fast): blocks COPY byte-for-byte; dirty blocks (the ones
-          a bucketized equi-join locates against the tombstones) drop their
-          dead docs and refresh span/max_tf/min_dl. Stored block_max_score
-          goes stale vs the new stats, so the meta flags block_max_exact=
-          False and WAND uses its recomputed (max_tf, min_dl) bounds. Cost
-          tracks index BYTES — one read + one write of the postings, no
-          re-blocking, no tokenization, no source-corpus scan (compact()
-          re-reads and re-analyzes the whole corpus).
-        * ``recompute_block_max=True``: additionally re-blocks through the
-          run path so block_max_score is exact for the merged stats,
-          restoring the pushed-filter WAND plan (stats_exact)."""
-        from xltsearch_spark.operators.build import (
-            IndexBuilder, POSTING_SCHEMA, RUN_SCHEMA, make_block_merge_udf,
-            make_block_to_run_udf, make_postings_summary_udf)
+              build_time_ms: int | None = None) -> BuildStats:
+        """forceMerge WITHOUT retokenization: all segments collapse into
+        one, deleted docs are dropped and nothing is re-analyzed. Posting
+        blocks become runs again (``make_block_to_run_udf``: clean blocks
+        byte for byte, the dirty blocks a bucketized equi-join locates
+        against the tombstones without their dead docs) and go through the
+        build's own stats, dictionary and postings stages, so the merged
+        segment is blocked and scored exactly like a fresh build over the
+        live docs: collection stats count LIVE docs only (Lucene's
+        post-merge N/df/avgdl) and every stored block bound is exact. Doc
+        ids are PRESERVED (sparse after deletes — ``max_doc`` watermarks
+        future id blocks)."""
         fingerprint = fingerprint or "merge-adhoc"
         meta = self.read_meta()
         if not meta["segments"]:
@@ -346,18 +341,6 @@ class IndexCatalog:
         start_ms = build_time_ms if build_time_ms is not None else int(time.time() * 1000)
         self._write_meta({**meta, "last_updated": INDEX_UPDATE_FAILED})
         p = self._read_all("postings", meta)
-        if "block_min_score" not in p.columns:
-            # segments written before the block_min_score column existed
-            # (r4): the merge copies postings as-is, so a NULL floor is
-            # correct — the engine treats it exactly like a stale floor
-            # (never seeds tau from it; unionByName already nulls the
-            # column when OLD and NEW segments mix, this covers an index
-            # whose segments are ALL pre-upgrade)
-            p = p.withColumn("block_min_score",
-                             F.lit(None).cast("double"))
-        # sized on the postings read, before the join below inflates the
-        # plan-stat estimate
-        n_parts = sized_partition_count(p)
         tomb = self.tombstones_df(meta)
         rs = self.config.doc_range_size
         if tomb is not None:
@@ -388,48 +371,17 @@ class IndexCatalog:
                 dead = F.broadcast(dead)
             p = p.join(dead, ["field", "term", "skip_first_doc"], "left")
         seg = f"seg_merged_{len(meta['segments']):06d}"
-        n_live = self._write_stage(seg, "docs", self.live_docs(meta), fingerprint)
+        live = self.live_docs(meta)
+        n_live = self._write_stage(seg, "docs", live, fingerprint)
+        self._write_stage(seg, "runs", p.mapInPandas(make_block_to_run_udf(),
+                                                     schema=RUN_SCHEMA), fingerprint)
+        runs = self._read_stage(seg, "runs")
         builder = IndexBuilder(self.spark, self.config)
-        if recompute_block_max:
-            runs = p.mapInPandas(make_block_to_run_udf(), schema=RUN_SCHEMA)
-            self._write_stage(seg, "runs", runs, fingerprint)
-            runs = self._read_stage(seg, "runs")
-            ttf_rows = (runs.filter(F.col("term").isNotNull())
-                        .groupBy("field").agg(F.sum("sum_tf").alias("ttf")).collect())
-            sum_ttf = {r["field"]: int(r["ttf"]) for r in ttf_rows}
-            stats = BuildStats(
-                n_docs=n_live, sum_ttf=sum_ttf,
-                avgdl={f: (v / n_live if n_live else 1.0) or 1.0
-                       for f, v in sum_ttf.items()})
-            self._write_stage(seg, "dictionary", builder.dictionary_stage(runs),
-                              fingerprint, partition_by=("bucket",))
-            self._write_stage(seg, "postings",
-                              builder.postings_stage(runs, stats),
-                              fingerprint, partition_by=("field", "bucket"))
-        else:
-            # one shuffle of the postings on the write's partition columns:
-            # each (field, bucket) directory is written by one task, so the
-            # merged segment keeps one file per directory
-            merged = (p.repartition(n_parts, "field", "bucket")
-                      .mapInPandas(make_block_merge_udf(), schema=POSTING_SCHEMA))
-            self._write_stage(seg, "postings", merged, fingerprint,
-                              partition_by=("field", "bucket"))
-            summ = make_postings_summary_udf()
-            srows = self._read_stage(seg, "postings").mapInPandas(
-                summ, schema=summ.schema)
-            # cached, so the summary's Python pass runs once for both the
-            # dictionary write and the per-field ttf
-            dictionary = builder.dictionary_stage(srows).persist()
-            self._write_stage(seg, "dictionary", dictionary, fingerprint,
-                              partition_by=("bucket",))
-            ttf_rows = (dictionary.groupBy("field")
-                        .agg(F.sum("total_term_freq").alias("ttf")).collect())
-            dictionary.unpersist()
-            sum_ttf = {r["field"]: int(r["ttf"]) for r in ttf_rows}
-            stats = BuildStats(
-                n_docs=n_live, sum_ttf=sum_ttf,
-                avgdl={f: (v / n_live if n_live else 1.0) or 1.0
-                       for f, v in sum_ttf.items()})
+        stats = builder.stats_stage(live, runs, n_docs=n_live)
+        self._write_stage(seg, "dictionary", builder.dictionary_stage(runs),
+                          fingerprint, partition_by=("bucket",))
+        self._write_stage(seg, "postings", builder.postings_stage(runs, stats),
+                          fingerprint, partition_by=("field", "bucket"))
         ds = self._read_all("doc_stats", meta)
         if tomb is not None:
             ds = ds.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -444,14 +396,8 @@ class IndexCatalog:
             "format": INDEX_FORMAT,
             "segments": [{"name": seg, "n_docs": n_live,
                           "fingerprint": fingerprint}],
-            "tombstones": [],
-            "block_max_exact": bool(recompute_block_max),
             "n_docs": stats.n_docs, "avgdl": stats.avgdl, "sum_ttf": stats.sum_ttf,
-            # id watermark: for legacy metas without max_doc, the PRE-merge
-            # n_docs (total ids ever assigned, tombstones included) is the
-            # safe fallback — the post-merge live count would hand out ids
-            # that collide with surviving sparse ids
-            "max_doc": int(meta.get("max_doc", meta["n_docs"])),
+            "max_doc": int(meta["max_doc"]),
         })
         for s in meta["segments"]:
             if s["name"] != seg and os.path.exists(self._seg_dir(s["name"])):
@@ -462,15 +408,11 @@ class IndexCatalog:
 
     # ------------------------------ open ------------------------------------
     def tombstones_df(self, meta: dict | None = None) -> DataFrame | None:
-        """Lazy union view over the persisted tombstone batches (plus any
-        legacy in-meta id list), or None when the index has no deletes."""
+        """Lazy union view over the persisted tombstone batches, or None
+        when the index has no deletes."""
         meta = meta or self.read_meta()
         dfs = [self.store.read(self.spark, os.path.join(self.root, "tombstones", b))
                for b in meta.get("tombstone_batches", [])]
-        legacy = meta.get("tombstones", [])
-        if legacy:
-            dfs.append(self.spark.createDataFrame(
-                [(int(t),) for t in legacy], "doc_id long"))
         if not dfs:
             return None
         out = dfs[0]
@@ -498,26 +440,20 @@ class IndexCatalog:
         self._require_valid()
         meta = self.read_meta()
         stats = self.load_stats()
-        # stored block_max_score is exact only while ONE segment exists:
-        # later segments shift N/df/avgdl and stale maxima stop being upper
+        # stored block bounds are exact only while ONE segment exists (a
+        # build, or a merge, which re-blocks under the merged stats): later
+        # segments shift N/df/avgdl and stale maxima stop being upper
         # bounds -> the engine falls back to recomputed (max_tf, min_dl) ones
-        exact = (len(meta["segments"]) == 1
-                 and not meta.get("tombstone_batches")
-                 and not meta.get("tombstones")
-                 and meta.get("block_max_exact", True))
-        # ONE tombstone view: tombstones_df already unions the legacy
-        # in-meta id list, so the engine gets only the df (passing the list
-        # too would anti-join the same ids twice per query), and the same
-        # instance backs the live-docs filter (one parquet listing)
         tomb = self.tombstones_df(meta)
+        exact = len(meta["segments"]) == 1 and tomb is None
+        # the same tombstone view backs the live-docs filter (one listing)
         docs = self._read_all("docs", meta)
         if tomb is not None:
             docs = docs.join(tomb.select("doc_id"), "doc_id", "left_anti")
         return SearchEngine(self.spark, self._read_all("postings", meta),
                             docs, self._read_all("dictionary", meta),
                             stats, self.config,
-                            tombstones=[], tombstones_df=tomb,
-                            stats_exact=exact)
+                            tombstones_df=tomb, blocks_exact=exact)
 
     # --------------------------- invariants ---------------------------------
     def verify_hashsums(self, manifest: DataFrame) -> int:

@@ -7,7 +7,7 @@ deltas restarting at an absolute id, ``tfs_bin`` one term frequency per doc
 per doc, and ``pos_bin`` ``tf`` within-doc position deltas per doc,
 restarting at each doc (NULL or empty when a row stores no positions).
 
-Every posting reader — the build's blocker, merge's block copy and summary,
+Every posting reader — the build's blocker, merge's block-to-run pass,
 the doc-norms stage and the engine's scorer — decodes through
 :func:`decode` one Arrow batch at a time: one ``b"".join`` and one
 :func:`decode_varint` per stream, then a segmented cumsum for absolute doc
@@ -156,9 +156,9 @@ def drop_dead(pdf: pd.DataFrame) -> pd.DataFrame:
     for a clean block) lists each block's dead doc ids; it is dropped. A
     clean block passes through byte for byte, an all-dead block is dropped,
     and a dirty block is re-encoded from its live docs with n_docs, skip
-    span, max_tf and min_dl refreshed. Stored block scores stay: the max
-    over a subset can only fall and the min only rise, so both remain valid
-    bounds."""
+    span, max_tf and min_dl refreshed. Stored block scores are carried
+    unchanged; merge re-blocks the result, which recomputes them under the
+    merged stats."""
     if "dead" not in pdf.columns:
         return pdf
     dead = pdf["dead"].to_numpy(dtype=object)

@@ -374,12 +374,13 @@ def _emit_runs(out_rows, field, terms, docs, pos, dl_per_row, rows,
 
 def make_block_to_run_udf():
     """Posting BLOCKS -> synthesized RUNS, for segment MERGING (Lucene
-    forceMerge without retokenization — IndexWriter merges by copying
-    postings, not re-analyzing). Blocks and runs share one delta/varint
-    format, so ``blocks.drop_dead`` yields the run payloads: clean blocks
+    forceMerge without retokenization — IndexWriter merges postings, it
+    does not re-analyze). Blocks and runs share one delta/varint format,
+    so ``blocks.drop_dead`` yields the run payloads: clean blocks
     byte-for-byte, dirty ones without their tombstoned docs.
-    ``range_id := skip_first_doc``; the block encoder orders each term's
-    postings by doc id itself."""
+    ``range_id := skip_first_doc``; the postings stage re-blocks them
+    (``make_block_udf`` orders each term's postings by doc id itself)
+    with exact bounds under the merged stats."""
 
     cols = [f.name for f in RUN_SCHEMA.fields]
 
@@ -394,47 +395,6 @@ def make_block_to_run_udf():
     return conv
 
 
-def make_block_merge_udf():
-    """Posting BLOCKS -> posting blocks for the FAST merge path:
-    ``blocks.drop_dead`` copies a clean block byte-for-byte and drops a
-    dirty block's tombstoned docs, refreshing n_docs / skip span / max_tf /
-    min_dl. The stored block_max_score is NOT recomputed — for the kept
-    subset the old value stays a valid (possibly loose) upper bound, and
-    the engine's stale-stats WAND bounds handle the rest (catalog marks
-    the index block_max_exact=False). This is Lucene's merge: postings are
-    copied, never re-scored or re-analyzed — cost tracks index bytes, not
-    CPU."""
-    cols = [f.name for f in POSTING_SCHEMA.fields]
-
-    def conv(it):
-        for pdf in it:
-            pdf = blocks.drop_dead(pdf)
-            if len(pdf):
-                yield pdf[cols]
-
-    return conv
-
-
-def make_postings_summary_udf():
-    """postings -> (field, term, bucket, n_docs, sum_tf) rows: the cheap
-    tfs-only decode pass that rebuilds dictionary/stats after a fast merge."""
-    schema = StructType([
-        StructField("field", StringType()), StructField("term", StringType()),
-        StructField("bucket", IntegerType()), StructField("n_docs", LongType()),
-        StructField("sum_tf", LongType()),
-    ])
-
-    def conv(it):
-        for pdf in it:
-            if len(pdf):
-                p = blocks.decode(pdf, ("tfs",))
-                pdf["sum_tf"] = blocks.row_sums(p.tfs, p.counts)
-                yield pdf[[f.name for f in schema.fields]]
-
-    conv.schema = schema
-    return conv
-
-
 def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
     """mapInPandas over bucket partitions: merge each term's runs into one
     doc-id-ordered posting list and emit fixed-size blocks with exact
@@ -446,8 +406,10 @@ def make_block_udf(config: IndexConfig, n_docs: int, avgdl: dict[str, float]):
     index-time norms (IndexTask.java:57): a ``scoring_model="default"``
     index stores TF-IDF per-term scores (sqrt(tf) * idf^2 * norm(dl)), a
     BM25 index stores BM25 ones, and quantize_norms participates either
-    way. The engine verifies this provenance (block_score_model /
-    block_quantize) before trusting the metadata for WAND pruning.
+    way. The catalog builds and queries under one config, so its engines
+    trust the metadata for WAND pruning (``SearchEngine(blocks_exact=)``)
+    while a single segment exists; an engine that scores frames built
+    under another model or quantization passes ``blocks_exact=False``.
 
     Fully batch-vectorized: ONE ``blocks.decode`` of the whole partition
     (one varint decode per stream, segmented cumsum for absolute doc ids;

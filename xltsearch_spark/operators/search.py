@@ -66,6 +66,9 @@ DECODED_SCHEMA = StructType([
 ])
 SCORE_SCHEMA = StructType([StructField("doc_id", LongType()),
                            StructField("score", DoubleType())])
+# conjunction pruning: cap on the coalesced doc-range disjuncts a pruned
+# scan carries (_block_ranges keeps the largest gaps)
+CONJ_PRUNE_MAX_RANGES = 64
 
 
 def _freq_scorer(cfg: IndexConfig):
@@ -243,11 +246,8 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, postings: DataFrame, docs: DataFrame,
                  dictionary: DataFrame, stats: BuildStats,
                  config: IndexConfig | None = None,
-                 tombstones: list[int] | None = None,
                  tombstones_df: DataFrame | None = None,
-                 stats_exact: bool = True,
-                 block_score_model: str | None = None,
-                 block_quantize: bool | None = None):
+                 blocks_exact: bool = True):
         self.spark = spark
         self.postings = postings
         self.docs = docs  # live docs only (tombstoned rows already excluded)
@@ -256,32 +256,23 @@ class SearchEngine:
         self.config = config or IndexConfig()
         # Lucene liveDocs: tombstoned docs are filtered from RESULTS but still
         # counted in collection stats until compaction (4.6 pre-merge behavior).
-        # Two forms: a small driver-side id list (ad-hoc deletes) or a lazy
-        # (doc_id) DataFrame (the catalog's persisted per-batch parquet —
-        # a 10^8-row delete batch never touches the driver).
-        self.tombstones = sorted(tombstones or [])
+        # A lazy (doc_id) DataFrame (the catalog's persisted per-batch
+        # parquet — a 10^8-row delete batch never touches the driver).
         self.tombstones_df = tombstones_df
-        # stats_exact: True iff the stored block_max_score values were
-        # computed with the CURRENT collection stats (single segment, no
-        # incremental drift). Enables the pushed-down WAND block filter —
-        # a plain `block_max_score >= const` comparison that reaches the
-        # parquet row-group stats, so pruned blocks are never even READ.
-        self.stats_exact = stats_exact
-        # PROVENANCE of the stored block_max/min_score values: the model
-        # and quantization the blocks were BUILT under (make_block_udf is
-        # model-aware, mirroring Lucene's index-time Similarity,
-        # IndexTask.java:57). An engine whose query-time config differs —
-        # e.g. a quantized-norm engine sharing frames built unquantized —
-        # must not trust the stored metadata: quantization only RAISES the
-        # effective dl (floatToByte315 truncates toward zero norm), so a
-        # stored max can under-state and a stored min over-state the
-        # mismatched engine's scores, breaking both prune and tau-seed
-        # directions. Defaults assume blocks match this engine's config
-        # (the catalog path, where build and query share one config).
-        self._block_score_model = self.config.scoring_model \
-            if block_score_model is None else block_score_model
-        self._block_quantize = self.config.quantize_norms \
-            if block_quantize is None else block_quantize
+        # blocks_exact: True iff every stored block_max/min_score is a score
+        # THIS engine decodes — computed with the CURRENT collection stats
+        # (single segment, no incremental drift) under this engine's model
+        # and quantization (make_block_udf is model-aware, mirroring
+        # Lucene's index-time Similarity, IndexTask.java:57). Enables the
+        # pushed-down WAND block filter — a plain `block_max_score >= const`
+        # comparison that reaches the parquet row-group stats, so pruned
+        # blocks are never even READ — and the metadata tau seed. Frames
+        # built under another config must pass False: quantization only
+        # RAISES the effective dl (floatToByte315 truncates toward zero
+        # norm), so a stored max can under-state and a stored min
+        # over-state the mismatched engine's scores, breaking both prune
+        # and tau-seed directions.
+        self.blocks_exact = blocks_exact
         self._last_wand_scan: DataFrame | None = None  # plan-audit hook
         # wand_enabled=False forces the brute-force path (tests/A-B runs).
         # wand_min_df gates only the PROBE fallback: metadata-seeded tau
@@ -311,7 +302,6 @@ class SearchEngine:
         # Ranges are cached per (field, term) per index generation.
         self.conj_prune_enabled = True
         self.conj_prune_ratio = 4.0
-        self.conj_prune_max_ranges = 64      # coalesced disjunct cap
         self._range_cache: dict[tuple[str, str], list[tuple[int, int]]] = {}
         self._last_conj_ranges: list[tuple[int, int]] | None = None
         # fuzzy expansion: candidate count above which the exact Damerau
@@ -340,29 +330,20 @@ class SearchEngine:
         # than buckets (a big segment) skip this automatically — there a
         # hot bucket spans many row-groups and coalescing would serialize
         # its decode.
-        self.scan_coalesce_enabled = True
         self._postings_nparts: int | None = None
         from xltsearch_spark.operators.build import KEYWORD_FIELDS
         self.parser = QueryParser(self.config.analyzer, keyword_fields=KEYWORD_FIELDS)
 
     @property
     def has_tombstones(self) -> bool:
-        return bool(self.tombstones) or self.tombstones_df is not None
+        return self.tombstones_df is not None
 
     def _filter_tombstones(self, scored: DataFrame) -> DataFrame:
-        out = scored
-        if self.tombstones_df is not None:
-            # lazy anti-join against the persisted tombstone table; AQE picks
-            # broadcast when the table is small, shuffle-join when it isn't
-            out = out.join(self.tombstones_df.select("doc_id"), "doc_id", "left_anti")
-        if not self.tombstones:
-            return out
-        if len(self.tombstones) <= 1000:
-            return out.filter(~F.col("doc_id").isin(self.tombstones))
-        # large driver-side lists: broadcast anti-join instead of a giant IN-list
-        tomb = self.spark.createDataFrame(
-            [(int(t),) for t in self.tombstones], "doc_id long")
-        return out.join(F.broadcast(tomb), "doc_id", "left_anti")
+        if self.tombstones_df is None:
+            return scored
+        # lazy anti-join against the persisted tombstone table; AQE picks
+        # broadcast when the table is small, shuffle-join when it isn't
+        return scored.join(self.tombstones_df.select("doc_id"), "doc_id", "left_anti")
 
     # ------------------------- public API ----------------------------------
     def search(self, query: str, limit: int = 100,
@@ -439,10 +420,7 @@ class SearchEngine:
         model = self.config.scoring_model
         if self.has_tombstones or not self.wand_enabled:
             return None, None
-        blocks_exact = (self.stats_exact
-                        and self._block_score_model == model
-                        and self._block_quantize == self.config.quantize_norms)
-        if model != "bm25" and not blocks_exact:
+        if model != "bm25" and not self.blocks_exact:
             return None, None
         ast = self._rewrite(self.parser.parse(query))
         clauses = FlatBooleans.clauses(ast)
@@ -462,26 +440,24 @@ class SearchEngine:
         # are cached per (field, term, limit) — limit enters the key
         # because bmin_full conditions on n_docs >= limit — so repeat
         # queries skip this job too (immutable per index generation).
-        has_bmin = "block_min_score" in self.postings.columns
         missing = [t for t in terms if (t[0], t[1], limit) not in self._meta_cache]
         if missing:
             cond_m = self._terms_cond(missing, [])
             aggs = [F.max("block_max_score").alias("bm"),
                     F.max("max_tf").alias("mtf"), F.min("min_dl").alias("mdl"),
-                    F.sum("n_docs").alias("nd")]
-            if has_bmin:
-                # a block with n_docs >= limit proves >= limit distinct docs
-                # each scoring >= its block_min_score -> a tau floor, no probe
-                aggs.append(F.max(F.when(F.col("n_docs") >= limit,
-                                         F.col("block_min_score")))
-                            .alias("bmin_full"))
+                    F.sum("n_docs").alias("nd"),
+                    # a block with n_docs >= limit proves >= limit distinct
+                    # docs each scoring >= its block_min_score -> a tau
+                    # floor, no probe
+                    F.max(F.when(F.col("n_docs") >= limit,
+                                 F.col("block_min_score"))).alias("bmin_full")]
             rows = (self.postings.filter(cond_m)
                     .groupBy("field", "term").agg(*aggs).collect())
             found = {}
             for r in rows:
                 d = {"field": r["field"], "term": r["term"], "bm": r["bm"],
                      "mtf": r["mtf"], "mdl": r["mdl"], "nd": r["nd"],
-                     "bmin_full": r["bmin_full"] if has_bmin else None}
+                     "bmin_full": r["bmin_full"]}
                 found[(r["field"], r["term"])] = d
             for t in missing:
                 self._meta_cache[(t[0], t[1], limit)] = found.get(t)
@@ -502,7 +478,7 @@ class SearchEngine:
 
         tau = None  # threshold in FINAL-score units (qn/coord included)
         self._last_wand_tau_source = None  # introspection for tests/audits
-        if blocks_exact and has_bmin:
+        if self.blocks_exact:
             # tau seeded from metadata alone: any full block's min score is
             # a floor on the k-th best final score (other terms contribute
             # >= 0 in a disjunction; boost scales the whole block
@@ -577,7 +553,7 @@ class SearchEngine:
             for (f, t), u in ub.items():
                 other = total_ub - u
                 w = boost.get((f, t), 1.0)
-                if blocks_exact and w > 0:
+                if self.blocks_exact and w > 0:
                     # exact stored block-max: plain column >= constant —
                     # pushable to the parquet reader (PushedFilters), so
                     # non-competitive blocks are skipped via row-group
@@ -585,7 +561,7 @@ class SearchEngine:
                     # division flips/explodes for zero/negative boosts —
                     # those rare queries take the multiply-form below.)
                     cond_blk = F.col("block_max_score") >= F.lit((tau_sum - other) / w)
-                elif blocks_exact:
+                elif self.blocks_exact:
                     cond_blk = (F.col("block_max_score") * F.lit(w)
                                 >= F.lit(tau_sum - other))
                 else:
@@ -1152,7 +1128,7 @@ class SearchEngine:
         more than 4096 blocks collapses to its envelope via a 1-row
         aggregate (the collect stays bounded no matter the dictionary);
         otherwise the block rows collect (column-pruned, no binaries) and
-        merge down to <= conj_prune_max_ranges intervals by preserving the
+        merge down to <= CONJ_PRUNE_MAX_RANGES intervals by preserving the
         largest inter-block gaps."""
         key = (field, term)
         if key in self._range_cache:
@@ -1175,7 +1151,7 @@ class SearchEngine:
                     merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
                 else:
                     merged.append((lo, hi))
-            cap = self.conj_prune_max_ranges
+            cap = CONJ_PRUNE_MAX_RANGES
             if len(merged) > cap:
                 starts = np.array([m[0] for m in merged], dtype=np.int64)
                 ends = np.array([m[1] for m in merged], dtype=np.int64)
@@ -1290,7 +1266,7 @@ class SearchEngine:
         (see __init__: only when the frame is the (field, bucket)-hash
         layout; predicate scans keep full parallelism — their match volume
         is unknown and may span every bucket)."""
-        if not self.scan_coalesce_enabled or preds or not terms:
+        if preds or not terms:
             return scan
         if self._postings_nparts is None:
             try:
