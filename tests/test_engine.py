@@ -194,6 +194,7 @@ def test_fuzzy_distributed_path_matches_driver(spark, tiny_corpus):
               engine.search_scores("gradd~2", 100).collect()]
     assert engine._last_fuzzy_distributed is False
     engine.fuzzy_driver_cap = 1  # force the distributed rerank
+    engine.clear_stats_cache()   # the expansion is cached per generation
     dist = [(r["doc_id"], r["score"]) for r in
             engine.search_scores("gradd~2", 100).collect()]
     assert engine._last_fuzzy_distributed is True
@@ -352,7 +353,9 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
 def test_term_scan_plan_pruning_regression(spark, small_corpus, tmp_path):
     """Regression guard on the physical plan: term queries must keep
     (field, bucket) PartitionFilters and a term IN-list in PushedFilters —
-    losing either silently turns the pruned scan into a full index read."""
+    losing either silently turns the pruned scan into a full index read.
+    A small scan is collected and decoded in the driver, so the plan read
+    is the pruned scan's own (``_last_scan``)."""
     import io
     from contextlib import redirect_stdout
     from xltsearch_spark.catalog import IndexCatalog
@@ -361,8 +364,9 @@ def test_term_scan_plan_pruning_regression(spark, small_corpus, tmp_path):
     cat.build(spark.createDataFrame(small_corpus), fingerprint="v1")
     eng = cat.engine()
     buf = io.StringIO()
+    eng.score_all("common_token AND graded")
     with redirect_stdout(buf):
-        eng.score_all("common_token AND graded").explain(mode="formatted")
+        eng._last_scan.explain(mode="formatted")
     plan = buf.getvalue()
     import re
     assert "PartitionFilters" in plan

@@ -152,13 +152,14 @@ def encode_docs(docs: np.ndarray, starts: np.ndarray) -> np.ndarray:
 
 
 def drop_dead(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Blocks without their tombstoned docs. The ``dead`` array column (NULL
-    for a clean block) lists each block's dead doc ids; it is dropped. A
-    clean block passes through byte for byte, an all-dead block is dropped,
-    and a dirty block is re-encoded from its live docs with n_docs, skip
-    span, max_tf and min_dl refreshed. Stored block scores are carried
-    unchanged; merge re-blocks the result, which recomputes them under the
-    merged stats."""
+    """Blocks without their tombstoned docs, as runs. The ``dead`` array
+    column (NULL for a clean block) lists each block's dead doc ids; it is
+    dropped. A clean block passes through byte for byte, an all-dead block
+    is dropped, and a dirty block is re-encoded from its live docs with
+    n_docs and skip_first_doc (the run's range id) refreshed. Its other
+    block metadata (skip_last_doc, max_tf, min_dl, stored scores) is
+    carried unchanged and stale: merge keeps only the run columns and
+    re-blocks them, which recomputes every bound under the merged stats."""
     if "dead" not in pdf.columns:
         return pdf
     dead = pdf["dead"].to_numpy(dtype=object)
@@ -191,10 +192,7 @@ def drop_dead(pdf: pd.DataFrame) -> pd.DataFrame:
                            row_sums(pos_counts[kept], counts))
     refreshed = {
         "n_docs": counts,
-        "skip_first_doc": np.minimum.reduceat(docs, starts),
-        "skip_last_doc": np.maximum.reduceat(docs, starts),
-        "max_tf": np.maximum.reduceat(p.tfs[kept], starts),
-        "min_dl": np.minimum.reduceat(p.dls[kept], starts),
+        "skip_first_doc": docs[starts],  # blocks are doc-ordered
         "docs_bin": encode_docs(docs, starts),
         "tfs_bin": split_groups(gather(p.raw["tfs"], kept), counts),
         "dls_bin": split_groups(gather(p.raw["dls"], kept), counts),

@@ -10,8 +10,9 @@ Physical shape (shuffle-light; SURVEY.md §4):
 1. ONE pruned scan of the ``postings`` table covering every term the query
    touches — partition pruning on (field, bucket) directories plus a term
    IN-list that reaches the parquet row-group stats. Blocks are decoded and
-   scored inside a single ``mapInPandas`` (numpy varint decode + BM25/TF-IDF
-   kernels, Arrow in/out).
+   scored a batch at a time (numpy varint decode + BM25/TF-IDF kernels): in
+   the driver after one bounded Arrow collect when the scan holds at most
+   ``DRIVER_MAX_BLOCKS`` blocks, else inside a single ``mapInPandas``.
 2. Boolean algebra = one unionByName + groupBy(doc_id) per BooleanQuery
    level (map-side partial agg; AQE handles skew). Conjunctions filter on
    matched-MUST counts; MUST_NOT is a flag aggregated in the same pass — no
@@ -69,6 +70,10 @@ SCORE_SCHEMA = StructType([StructField("doc_id", LongType()),
 # conjunction pruning: cap on the coalesced doc-range disjuncts a pruned
 # scan carries (_block_ranges keeps the largest gaps)
 CONJ_PRUNE_MAX_RANGES = 64
+# cap on the posting blocks one driver-side collect carries: a pruned scan
+# of at most this many blocks decodes in the driver (_decode_blocks), and
+# _block_ranges collects a term's block spans up to it
+DRIVER_MAX_BLOCKS = 4096
 
 
 def _freq_scorer(cfg: IndexConfig):
@@ -312,9 +317,11 @@ class SearchEngine:
         # — but a short query term over a 10^8-term dictionary can defeat
         # the prefilter, so the collect is hard-capped here.
         self.fuzzy_driver_cap = 10_000
-        # prefix -> expansion terms, immutable per index generation (same
-        # contract as _df_cache/_meta_cache; cleared by clear_stats_cache)
+        # prefix -> expansion terms and (field, term, max_edits) -> fuzzy
+        # expansion, immutable per index generation (same contract as
+        # _df_cache/_meta_cache; cleared by clear_stats_cache)
         self._prefix_cache: dict[tuple[str, str, int], list[str]] = {}
+        self._fuzzy_cache: dict[tuple[str, str, int], list[tuple[str, float]]] = {}
         self._last_fuzzy_distributed = False   # introspection for tests
         self._last_wand_tau_source: str | None = None
         # scan-task coalescing for exact-term queries: when the postings
@@ -322,10 +329,10 @@ class SearchEngine:
         # count <= max(term_buckets, defaultParallelism): the builder sizes
         # its task count from defaultParallelism up), ALL rows for a
         # query's terms live in at most |touched (field, bucket) pairs|
-        # partitions — the remaining tasks of the decode stage are empty
-        # Python round-trips (~10 ms
-        # each of pure protocol overhead). Coalescing the filtered scan to
-        # the touched-pair count drops those empty tasks without losing
+        # partitions — the remaining tasks of the scan are empty (in an
+        # executor decode above DRIVER_MAX_BLOCKS, empty Python round-trips
+        # of ~10 ms protocol overhead each). Coalescing the filtered scan
+        # to the touched-pair count drops those empty tasks without losing
         # any real parallelism. Parquet-backed frames with more splits
         # than buckets (a big segment) skip this automatically — there a
         # hot bucket spans many row-groups and coalescing would serialize
@@ -473,7 +480,8 @@ class SearchEngine:
 
         def score(blocks_scan):
             decoded = self._decode_blocks(self._scan_coalesce(blocks_scan, terms, []),
-                                          idf_map, with_positions=False)
+                                          idf_map, with_positions=False,
+                                          max_blocks=self._max_blocks(terms, idf_map))
             return self._eval(ast, decoded, 1.0, idf_map, tfidf_qn)
 
         tau = None  # threshold in FINAL-score units (qn/coord included)
@@ -593,8 +601,9 @@ class SearchEngine:
         flag (``FlatBooleans``, the scorer of single flat queries, shared
         across queries that touch the same term), one projection explodes
         per-query (score, gate) structs, and ONE window ranks everything.
-        The whole flat batch is 2 shuffles + 1 Python decode stage instead
-        of a job per query.
+        The whole flat batch is 2 shuffles + 1 decode (in the driver below
+        DRIVER_MAX_BLOCKS, else one Python stage) instead of a job per
+        query.
 
         Top-k shape: the rank filter plans as WindowGroupLimit (per-group
         bounded heaps) — a hot term matching 10^8 docs stays O(k) per query
@@ -751,8 +760,8 @@ class SearchEngine:
         # ONE decode serves both the scorer and the per-clause join: the
         # query's decoded rows are small (bounded by the terms' postings),
         # so an eager localCheckpoint materializes them once instead of
-        # running the scan + Python decode stage twice (halves the Python
-        # stages and jobs of every explain() call)
+        # running the scan + decode twice (halves the decode work and jobs
+        # of every explain() call)
         decoded = self._decode_postings(terms, [], idf_map, False) \
             .localCheckpoint(eager=True)
         scored = self._filter_tombstones(self._eval(
@@ -1046,7 +1055,17 @@ class SearchEngine:
           ``orderBy(sim desc, term).limit(50)`` (TakeOrderedAndProject), so
           the driver only ever sees <= 50 rows regardless of dictionary
           size. The probe itself is a LIMIT cap+1 collect — one job, bounded
-          rows, and its output is reused by the driver path."""
+          rows, and its output is reused by the driver path.
+
+        Expansions are cached per (field, term, max_edits): the dictionary
+        is immutable per index generation, so a repeated fuzzy term runs
+        neither job."""
+        key = (ast.field, ast.term, ast.max_edits)
+        if key not in self._fuzzy_cache:
+            self._fuzzy_cache[key] = self._expand_fuzzy(ast)
+        return self._fuzzy_cache[key]
+
+    def _expand_fuzzy(self, ast: FuzzyQuery) -> list[tuple[str, float]]:
         qterm, cap, qlen = ast.term, ast.max_edits, len(ast.term)
         cands_df = self._fuzzy_candidates_df(ast)
         probe = cands_df.limit(self.fuzzy_driver_cap + 1).collect()
@@ -1118,24 +1137,24 @@ class SearchEngine:
         self._meta_cache.clear()
         self._range_cache.clear()
         self._prefix_cache.clear()
+        self._fuzzy_cache.clear()
 
     # ---------------- conjunction (rarest-first) block pruning -------------
     def _block_ranges(self, field: str, term: str,
                       df: int) -> list[tuple[int, int]]:
         """Coalesced doc-id intervals covered by a term's posting blocks,
         from the (skip_first_doc, skip_last_doc) metadata — the driver-side
-        state Lucene's leapfrog keeps in its skip lists. A term implying
-        more than 4096 blocks collapses to its envelope via a 1-row
-        aggregate (the collect stays bounded no matter the dictionary);
-        otherwise the block rows collect (column-pruned, no binaries) and
-        merge down to <= CONJ_PRUNE_MAX_RANGES intervals by preserving the
-        largest inter-block gaps."""
+        state Lucene's leapfrog keeps in its skip lists. A term that may
+        hold more than DRIVER_MAX_BLOCKS blocks collapses to its envelope
+        via a 1-row aggregate (the collect stays bounded no matter the
+        dictionary); otherwise the block rows collect (column-pruned, no
+        binaries) and merge down to <= CONJ_PRUNE_MAX_RANGES intervals by
+        preserving the largest inter-block gaps."""
         key = (field, term)
         if key in self._range_cache:
             return self._range_cache[key]
         cond = self._terms_cond([key], [])
-        est_blocks = -(-max(df, 1) // self.config.block_size)
-        if est_blocks > 4096:
+        if self._max_blocks([key], {key: df}) > DRIVER_MAX_BLOCKS:
             row = (self.postings.filter(cond)
                    .agg(F.min("skip_first_doc").alias("lo"),
                         F.max("skip_last_doc").alias("hi")).collect()[0])
@@ -1283,11 +1302,21 @@ class SearchEngine:
         k = min(nparts, max(1, len(touched)))
         return scan.coalesce(k) if k < nparts else scan
 
+    def _max_blocks(self, terms, idf_map) -> int | None:
+        """Upper bound on the posting blocks of the exact ``terms``, from
+        their doc freqs and no job: each segment cuts a term's postings
+        into ceil(df_s / block_size) blocks, so a term holds at most
+        ceil(df / block_size) + segments - 1. None when a df is unknown."""
+        if any(t not in idf_map for t in terms):
+            return None
+        bs, extra = self.config.block_size, self.stats.segments - 1
+        return sum(-(-idf_map[t] // bs) + extra for t in terms)
+
     def _decode_postings(self, terms, preds, idf_map, with_positions: bool,
                          extra_cond=None) -> DataFrame:
-        """One scan + mapInPandas decode of all query-term blocks.
-        ``extra_cond`` layers a pushed block-level predicate onto the scan
-        (conjunction doc-range pruning)."""
+        """One scan + decode of all query-term blocks. ``extra_cond``
+        layers a pushed block-level predicate onto the scan (conjunction
+        doc-range pruning)."""
         if not terms and not preds:
             return self.spark.createDataFrame([], DECODED_SCHEMA)
         scan = self.postings.filter(self._terms_cond(terms, preds))
@@ -1295,11 +1324,24 @@ class SearchEngine:
             scan = scan.filter(extra_cond)
         self._last_scan = scan  # plan-audit hook
         scan = self._scan_coalesce(scan, terms, preds)
-        return self._decode_blocks(scan, idf_map, with_positions)
+        return self._decode_blocks(
+            scan, idf_map, with_positions,
+            max_blocks=None if preds else self._max_blocks(terms, idf_map))
 
-    def _decode_blocks(self, scan: DataFrame, idf_map, with_positions: bool) -> DataFrame:
+    def _decode_blocks(self, scan: DataFrame, idf_map, with_positions: bool,
+                       max_blocks: int | None = None) -> DataFrame:
         """Blocks -> one scored row per posting, a batch at a time through
-        ``blocks.decode`` and ``scoring.score_freq``."""
+        ``blocks.decode`` and ``scoring.score_freq``.
+
+        A scan of at most DRIVER_MAX_BLOCKS blocks decodes in the driver:
+        one Arrow collect (a JVM-only job) and one batch, whose rows become
+        a DataFrame again (``_task_side_frame``) — no Python-worker stage,
+        whose start-up alone costs more than decoding hundreds of blocks. ``max_blocks`` is an
+        upper bound on the scan's blocks when the caller knows one (exact
+        terms: ``_max_blocks``); without one, a ``limit(cap + 1)`` probe
+        collects the scan and its rows are reused when they fit. A larger
+        scan decodes on the executors in one ``mapInPandas``, so driver
+        memory stays bounded at any corpus size."""
         cfg = self.config
         model, score = cfg.scoring_model, _freq_scorer(cfg)
         n_docs, avgdl = self.stats.n_docs, self.stats.avgdl
@@ -1307,26 +1349,60 @@ class SearchEngine:
         idf_absent = scoring.idf(model, n_docs, 0)
         streams = ("docs", "tfs", "dls") + (("pos",) if with_positions else ())
 
+        def decode_batch(pdf):
+            """One batch of blocks -> its scored postings (None if none)."""
+            p = blocks.decode(pdf, streams)
+            if not p.row.size:
+                return None
+            fields = pdf["field"].to_numpy(dtype=object)
+            terms = pdf["term"].to_numpy(dtype=object)
+            idf = np.fromiter((idf_of.get(k, idf_absent)
+                               for k in zip(fields, terms)),
+                              dtype=np.float64, count=len(pdf))
+            ad = np.fromiter((avgdl.get(f, 1.0) or 1.0 for f in fields),
+                             dtype=np.float64, count=len(pdf))
+            sc = score(p.tfs, p.dls, idf[p.row], ad[p.row])
+            return pd.DataFrame({
+                "field": fields[p.row], "term": terms[p.row],
+                "doc_id": p.docs, "score": sc, "tf": p.tfs, "dl": p.dls,
+                "positions": (blocks.position_blobs(p) if with_positions
+                              else [None] * p.row.size)})
+
+        scan = scan.select("field", "term", "n_docs", "docs_bin", "tfs_bin",
+                           "dls_bin", *(("pos_bin",) if with_positions else ()))
+        if max_blocks is None or max_blocks <= DRIVER_MAX_BLOCKS:
+            probe = scan if max_blocks is not None else scan.limit(DRIVER_MAX_BLOCKS + 1)
+            table = probe.toArrow()
+            if table.num_rows <= DRIVER_MAX_BLOCKS:
+                out = decode_batch(table.to_pandas())
+                if out is None:
+                    return self.spark.createDataFrame([], DECODED_SCHEMA)
+                return self._task_side_frame(out)
+
         def decode(it):
             for pdf in it:
-                p = blocks.decode(pdf, streams)
-                if not p.row.size:
-                    continue
-                fields = pdf["field"].to_numpy(dtype=object)
-                terms = pdf["term"].to_numpy(dtype=object)
-                idf = np.fromiter((idf_of.get(k, idf_absent)
-                                   for k in zip(fields, terms)),
-                                  dtype=np.float64, count=len(pdf))
-                ad = np.fromiter((avgdl.get(f, 1.0) or 1.0 for f in fields),
-                                 dtype=np.float64, count=len(pdf))
-                sc = score(p.tfs, p.dls, idf[p.row], ad[p.row])
-                yield pd.DataFrame({
-                    "field": fields[p.row], "term": terms[p.row],
-                    "doc_id": p.docs, "score": sc, "tf": p.tfs, "dl": p.dls,
-                    "positions": (blocks.position_blobs(p) if with_positions
-                                  else [None] * p.row.size)})
+                out = decode_batch(pdf)
+                if out is not None:
+                    yield out
 
         return scan.mapInPandas(decode, schema=DECODED_SCHEMA)
+
+    def _task_side_frame(self, pdf: pd.DataFrame) -> DataFrame:
+        """``pdf`` as a DataFrame whose Arrow batches turn into rows in the
+        tasks that read them. Spark's default keeps an Arrow frame under
+        48 MB as a LocalRelation in the plan instead, which every query
+        over it plans and ships from the driver: for 10^5 decoded postings
+        that costs more than the decode it replaces."""
+        key, conf = "spark.sql.execution.arrow.localRelationThreshold", self.spark.conf
+        old = conf.get(key, None)
+        conf.set(key, "0")
+        try:
+            return self.spark.createDataFrame(pdf, DECODED_SCHEMA)
+        finally:
+            if old is None:
+                conf.unset(key)
+            else:
+                conf.set(key, old)
 
     # --------------------------- evaluation --------------------------------
     def _eval(self, node, decoded: DataFrame, mult: float, idf_map, tfidf_qn) -> DataFrame:
