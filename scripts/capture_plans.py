@@ -1,6 +1,10 @@
-"""Capture physical-plan evidence for BENCH/plans.md (round-2 paths):
-fuzzy expansion pruning, search_many per-query TakeOrdered, tombstone
-anti-join. Appends sections to BENCH/plans.md."""
+"""Capture physical-plan evidence for BENCH/plans.md: pruned posting
+scans, fuzzy expansion pruning, search_many in both placements (driver
+and above the decode cap), the tombstone anti-join and the surface
+operators. Rewrites BENCH/plans.md (or the path given as argv[1]).
+
+    python scripts/capture_plans.py [out.md]
+"""
 
 from __future__ import annotations
 
@@ -14,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from xltsearch_spark.catalog import IndexCatalog  # noqa: E402
 from xltsearch_spark.config import IndexConfig  # noqa: E402
+from xltsearch_spark.operators import search  # noqa: E402
 from xltsearch_spark.plans.parser import FuzzyQuery  # noqa: E402
 from xltsearch_spark.session import get_spark  # noqa: E402
 from xltsearch_spark.sources.corpus import generate_corpus  # noqa: E402
@@ -52,23 +57,30 @@ def main(out_path: str | None = None) -> int:
     eng = cat.engine()
     sections = []
 
+    def scan_of(call):
+        """The pruned postings scan a call decodes (a capped scan is
+        collected, so the answer's own plan is a LocalTableScan)."""
+        call()
+        return explain_str(eng._last_scan)
+
     # 0) core scans: pruned term lookup, single-pass conjunction, pushed
     #    prefix predicate — the plans SCALE.md's query-side claims cite
     eng.wand_enabled = False  # capture the general-path scan shape
     sections.append(("single term: score_all('graded')",
                      "Expected: (field, bucket) PartitionFilters + term "
-                     "IN-list in PushedFilters on the postings scan; top-k "
-                     "via TakeOrderedAndProject downstream.",
-                     explain_str(eng.score_all("graded"))))
+                     "IN-list in PushedFilters on the postings scan.",
+                     scan_of(lambda: eng.score_all("graded"))))
     sections.append(("conjunction: score_all('common_token AND graded')",
                      "Expected: ONE pruned scan + decode for the whole "
-                     "boolean (conditional aggregation per clause), no "
+                     "boolean (the evaluator gates clauses per doc), no "
                      "per-leaf rescan.",
-                     explain_str(eng.score_all("common_token AND graded"))))
+                     scan_of(lambda: eng.score_all("common_token AND graded"))))
     sections.append(("prefix (pushed predicate): score_all('need*')",
                      "Expected: StartsWith(term, ...) reaches PushedFilters "
                      "— constant-score expansion never builds driver "
-                     "IN-lists.", explain_str(eng.score_all("need*"))))
+                     "IN-lists; the same predicate is projected as the "
+                     "leaf's membership column.",
+                     scan_of(lambda: eng.score_all("need*"))))
     sections.append(("regexp (pushed predicate): "
                      "score_all('/needle_[0-9]+/')",
                      "Expected (r5 Q7b): `field = content` partition "
@@ -77,7 +89,7 @@ def main(out_path: str | None = None) -> int:
                      "parquet row-group stats, and bucket = hash(term) is "
                      "unknowable for a pattern — all buckets of ONE field "
                      "scan, no driver expansion, constant-score).",
-                     explain_str(eng.score_all("/needle_[0-9]+/"))))
+                     scan_of(lambda: eng.score_all("/needle_[0-9]+/"))))
     eng.wand_enabled = True
 
     # 1) fuzzy candidates: length-window filter BEFORE levenshtein reaches
@@ -89,18 +101,28 @@ def main(out_path: str | None = None) -> int:
                      "(before any levenshtein evaluation), final top-50 is "
                      "TakeOrderedAndProject.", explain_str(exp)))
 
-    # 2) search_many: flat queries share ONE doc-keyed aggregate + struct
-    #    explode; the rank filter is WindowGroupLimit (bounded per-group
-    #    heaps), never a full sort of the match set
-    many = eng.search_many({"q1": "graded", "q2": "alpha OR beta"}, limit=10,
-                           materialize=False)
-    sections.append(("search_many (2 flat queries, k=10): single-pass agg + "
-                     "WindowGroupLimit",
-                     "Expected: ONE HashAggregate(doc_id) with shared "
-                     "per-clause conditional sums feeding a Generate "
-                     "(explode of per-query structs); the rank cut is "
-                     "WindowGroupLimit — the raw match set is never "
-                     "globally sorted.",
+    # 2) search_many: every query evaluates over ONE shared decode, in the
+    #    driver for a capped scan; above the cap after one doc-id exchange,
+    #    ranked by WindowGroupLimit (bounded per-group heaps)
+    batch = {"q1": "graded", "q2": "alpha OR beta", "q3": '"alpha beta"'}
+    sections.append(("search_many (3 queries, k=10), capped scan: driver "
+                     "evaluation",
+                     "Expected: a LocalTableScan of the ranked rows — the "
+                     "scan was collected by one Arrow job and every query "
+                     "evaluated and ranked in the driver; no Exchange, no "
+                     "Python stage.",
+                     explain_str(eng.search_many(batch, limit=10), mode="simple")))
+    cap, search.DRIVER_MAX_BLOCKS = search.DRIVER_MAX_BLOCKS, 0
+    try:
+        many = eng.search_many(batch, limit=10)
+    finally:
+        search.DRIVER_MAX_BLOCKS = cap
+    sections.append(("search_many (3 queries, k=10) above the decode cap",
+                     "Expected: the pruned scan, MapInPandas (decode), ONE "
+                     "Exchange hashpartitioning(doc_id), MapInPandas "
+                     "(every query evaluated per partition, top-k per "
+                     "query), then the rank cut as WindowGroupLimit — the "
+                     "raw match set is never globally sorted.",
                      explain_str(many, mode="simple")))
 
     # 2b) WAND with exact stats: the block skip is a PUSHED parquet filter;
@@ -194,11 +216,14 @@ def main(out_path: str | None = None) -> int:
     v2 = corpus.iloc[: len(corpus) - 40]
     cat.update(spark.createDataFrame(v2), fingerprint="v2")
     eng2 = cat.engine()
-    scored = eng2.score_all("common_token")
-    sections.append(("tombstone filter: score_all over an index with deletes",
-                     "Expected: LEFT ANTI join against the tombstones parquet "
-                     "(no driver-side id list in the plan).",
-                     explain_str(scored, mode="simple")))
+    sections.append(("tombstone filter: search_scores('common_token', 10) "
+                     "over an index with deletes",
+                     "Expected: the driver's top k + n_tombstones "
+                     "candidates (a LocalTableScan) LEFT ANTI joined "
+                     "against the tombstones parquet (no driver-side id "
+                     "list in the plan), then TakeOrderedAndProject.",
+                     explain_str(eng2.search_scores("common_token", 10),
+                                 mode="simple")))
 
     # 4) B3 parse stage: pure projection — no exchange, no Python eval
     # (reads parquet so the optimizer can't fold the chain into a local
@@ -242,10 +267,11 @@ def main(out_path: str | None = None) -> int:
 
     # 6) r5 surface ops: explain / facets / search_sorted / weighted_sample
     sections.append(("explain('alpha OR beta', limit=10): broadcast hit join",
-                     "Expected: the SAME pruned postings scan the scorer "
-                     "uses, BroadcastHashJoin against the <= limit hit ids "
-                     "and the n_clauses metadata LocalTableScan — no second "
-                     "corpus-wide pass, no shuffle of the decoded frame.",
+                     "Expected: the decoded rows the scorer used (a "
+                     "LocalTableScan for a capped scan), BroadcastHashJoin "
+                     "against the <= limit hit ids and the n_clauses "
+                     "metadata LocalTableScan — no second corpus-wide pass, "
+                     "no shuffle of the decoded frame.",
                      explain_str(eng.explain("alpha OR beta", limit=10),
                                  mode="simple")))
     sections.append(("facets('graded', [lang, repo]): partial-agg counts",
@@ -261,38 +287,24 @@ def main(out_path: str | None = None) -> int:
                      explain_str(eng.search_sorted("graded", ["lang", "repo"],
                                                    7), mode="simple")))
     sections.append(("span_near('alpha', 'beta', slop=3, k=10): pruned "
-                     "scan + vectorized span kernel",
-                     "Expected (r5 spans family): the SAME (field, bucket) "
+                     "position scan",
+                     "Expected (spans family): the SAME (field, bucket) "
                      "PartitionFilters + two-term IN-list PushedFilters as "
                      "a boolean scan (a span clause IS a term for the "
-                     "pushdown), ONE doc_id join of the two clauses' "
-                     "decoded rows, the closest-predecessor pairing inside "
-                     "a single MapInPandas (batch-global searchsorted — no "
-                     "per-doc Python loop), top-k via "
-                     "TakeOrderedAndProject.",
-                     explain_str(eng.search_span_near("alpha", "beta", 3,
-                                                      limit=10))))
-    sections.append(("span_not('alpha', 'beta', 2, 2, k=10): fused "
-                     "exclusion kernel",
-                     "Expected (r5): pruned two-term scan, LEFT join of "
-                     "exclude positions onto include docs, then ONE "
-                     "MapInPandas that counts surviving spans AND applies "
-                     "the similarity — no second Python stage, no "
-                     "intermediate Arrow round-trip between counting and "
-                     "scoring.",
-                     explain_str(eng.search_span_not("alpha", "beta", 2, 2,
-                                                     limit=10))))
+                     "pushdown), with pos_bin in the ReadSchema; the "
+                     "closest-predecessor pairing runs in the evaluator "
+                     "(batch-global searchsorted — no per-doc Python loop).",
+                     scan_of(lambda: eng.search_span_near("alpha", "beta", 3,
+                                                          limit=10))))
     sections.append(("search_phrase_prefix('alpha bet', k=10): expanded "
                      "IN-list pushdown",
-                     "Expected (r5 MultiPhraseQuery): the dictionary "
+                     "Expected (MultiPhraseQuery): the dictionary "
                      "expansion resolves driver-side (<= max_expansions "
                      "rows), then the postings scan carries the exact slot "
                      "PLUS every expansion in ONE pushed term IN-list — "
-                     "blocks of non-matching terms are never read; one "
-                     "repartition(doc_id) + one vectorized kernel, top-k "
-                     "TakeOrderedAndProject.",
-                     explain_str(eng.search_phrase_prefix("alpha bet",
-                                                          limit=10))))
+                     "blocks of non-matching terms are never read.",
+                     scan_of(lambda: eng.search_phrase_prefix("alpha bet",
+                                                              limit=10))))
     sections.append(("search_after('alpha OR beta', cursor, k=10): "
                      "cursor-filter pagination",
                      "Expected (r5 searchAfter): the cursor predicate is a "

@@ -57,7 +57,7 @@ def test_tfidf_rank_identical(spark, tiny_corpus):
                       term_buckets=8)
     engine, _ = build_engine(spark, tiny_corpus, cfg)
     oracle = OracleIndex(tiny_corpus, cfg)
-    assert_rank_identical(engine, oracle, QUERIES[:10])
+    assert_rank_identical(engine, oracle, QUERIES)
 
 
 def test_english_analyzer_end_to_end(spark, tiny_corpus):
@@ -142,7 +142,8 @@ def test_block_bounds_equal_decoded_scores(spark, model):
     engine, _ = build_engine(spark, generate_corpus(600, 0, 1), cfg)
     idf_map = {(r["field"], r["term"]): int(r["doc_freq"])
                for r in engine.dictionary.collect()}
-    decoded = engine._decode_blocks(engine.postings, idf_map, with_positions=False)
+    decoded = engine._as_frame(
+        engine._decode_blocks(engine.postings, idf_map, with_positions=False))
     blk = engine.postings.select("field", "term", "block_id", "skip_first_doc",
                                  "skip_last_doc", "block_max_score",
                                  "block_min_score")

@@ -1,14 +1,15 @@
 """Plan-shape pin: the Spark work one query costs, counted per public call.
 
-For four query shapes — a hot term, a three-term OR with WAND on and off,
-a 16-query ``search_many`` batch of the benchmark's eight query classes
-and a two-term phrase — count the jobs the call starts
-(``statusTracker``) and, over every SQL execution it runs, the Exchange,
-Python (``MapInPandas``/``ArrowEvalPython``) and ``HashAggregate`` nodes
-of the executed (final adaptive) plans. The bounds are the exact counts of
-the current design: each posting scan here is small enough to decode in
-the driver, so its decode is one JVM-only Arrow collect (a job) and no
-Python stage; the Python nodes left are the phrase slot kernels; and a
+For eight query shapes — a hot term, a three-term OR with WAND on and
+off, AND, NOT, a prefix, a two-term phrase and a 16-query ``search_many``
+batch of the benchmark's eight query classes — count the jobs the call
+starts (``statusTracker``) and, over every SQL execution it runs, the
+Exchange, Python (``MapInPandas``/``ArrowEvalPython``) and
+``HashAggregate`` nodes of the executed (final adaptive) plans. The
+bounds are the exact counts of the current design: each posting scan here
+is small enough to decode in the driver, so its decode is one JVM-only
+Arrow collect (a job), the query evaluates in the driver on the decoded
+rows and answers with a local frame, whose collect starts no job; and a
 repeated fuzzy term reuses its cached expansion. A change that adds a
 shuffle, a Python stage, an aggregate or a job to one of these shapes
 fails here.
@@ -37,11 +38,14 @@ BATCH = {  # two queries of each of the eight benchmark classes
 
 # shape -> upper bounds (jobs, Exchange, Python, HashAggregate)
 BOUNDS = {
-    "term_hot": (2, 0, 0, 0),
-    "or_wand": (3, 1, 0, 2),
-    "or_general": (3, 1, 0, 2),
-    "batch_16": (10, 5, 2, 4),
-    "phrase": (3, 1, 1, 0),
+    "term_hot": (1, 0, 0, 0),
+    "or_wand": (1, 0, 0, 0),
+    "or_general": (1, 0, 0, 0),
+    "and": (1, 0, 0, 0),
+    "not": (1, 0, 0, 0),
+    "prefix": (1, 0, 0, 0),
+    "phrase": (1, 0, 0, 0),
+    "batch_16": (1, 0, 0, 0),
 }
 
 
@@ -91,6 +95,9 @@ def test_plan_shape_at_or_below_bounds(spark, engine):
         "term_hot": scores("common_token"),
         "or_wand": scores("alpha OR beta OR graded"),
         "or_general": scores("alpha OR beta OR graded", wand=False),
+        "and": scores("alpha AND beta"),
+        "not": scores("alpha NOT beta"),
+        "prefix": scores("ind*"),
         "batch_16": lambda: engine.search_many(BATCH, 10).collect(),
         "phrase": scores('"alpha beta"'),
     }

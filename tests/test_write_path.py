@@ -154,7 +154,8 @@ def test_merged_block_bounds_equal_decoded_scores(spark, corpora, tmp_path, mode
     assert engine.blocks_exact
     idf_map = {(r["field"], r["term"]): int(r["doc_freq"])
                for r in engine.dictionary.collect()}
-    decoded = engine._decode_blocks(engine.postings, idf_map, with_positions=False)
+    decoded = engine._as_frame(
+        engine._decode_blocks(engine.postings, idf_map, with_positions=False))
     blk = engine.postings.select("field", "term", "block_id", "skip_first_doc",
                                  "skip_last_doc", "block_max_score",
                                  "block_min_score")

@@ -454,7 +454,8 @@ class IndexCatalog:
         return SearchEngine(self.spark, self._read_all("postings", meta),
                             docs, self._read_all("dictionary", meta),
                             stats, self.config,
-                            tombstones_df=tomb, blocks_exact=exact)
+                            tombstones_df=tomb, blocks_exact=exact,
+                            n_tombstones=int(meta.get("n_tombstones", 0) or 0))
 
     # --------------------------- invariants ---------------------------------
     def verify_hashsums(self, manifest: DataFrame) -> int:

@@ -14,7 +14,7 @@ summed displacement <= slop and adds ``1/(1+displacement)`` to the freq
 (the shape of Lucene's SloppyPhraseScorer ``sloppyFreq``; exact 4.6
 tie-handling for repeated terms is approximated).
 
-The engine (``operators/search.py:_eval_phrase``) applies the same two
+The engine (``functions/evaluate.py:Evaluator.phrase``) applies the same two
 rules batch-wide in its own vectorized kernels — exact phrases as a
 (doc, slot, anchor) group count, sloppy ones as a nearest-position
 searchsorted — and the oracle tests hold the two to rank identity.

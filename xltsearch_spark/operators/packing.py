@@ -119,8 +119,7 @@ def _ordered_exclusive_cumsum(df: DataFrame, value_col: str, id_col: str,
     RETURNED frame reads it lazily on every action — releasing it here
     would re-shuffle per action. Callers running many packing calls in
     one long-lived session should materialize/write the result and then
-    ``spark.catalog.clearCache()`` (or track and unpersist) — the same
-    contract as ``SearchEngine.search_many``'s shared decode cache.
+    ``spark.catalog.clearCache()`` (or track and unpersist).
     """
     n_buckets = _resolve_buckets(df, n_buckets)
     sorted_df = _hash_bucketed_sort(df, id_col, salt, n_buckets).persist()

@@ -13,12 +13,15 @@ Physical shape (shuffle-light; SURVEY.md §4):
    scored a batch at a time (numpy varint decode + BM25/TF-IDF kernels): in
    the driver after one bounded Arrow collect when the scan holds at most
    ``DRIVER_MAX_BLOCKS`` blocks, else inside a single ``mapInPandas``.
-2. Boolean algebra = one unionByName + groupBy(doc_id) per BooleanQuery
-   level (map-side partial agg; AQE handles skew). Conjunctions filter on
-   matched-MUST counts; MUST_NOT is a flag aggregated in the same pass — no
-   extra anti-join shuffle.
-3. Top-k via ``orderBy(score desc, doc_id asc).limit(k)`` — Spark's
-   TakeOrderedAndProject, a distributed heap, never a full sort.
+2. The whole query — booleans, dismax, phrases, spans — is ONE numpy
+   function over the decoded rows (``functions/evaluate.py``), run where
+   the rows were decoded: in the driver for a capped scan, else on the
+   executors after one ``repartition("doc_id")`` (evaluation is
+   doc-local, so each partition's answer is exact).
+3. Top-k: ``np.lexsort`` on (score desc, doc_id asc) in the driver — the
+   answer is a local frame, whose collect starts no job — or a per-
+   partition top-k and then TakeOrderedAndProject above the cap. A
+   tombstoned engine cuts to k + n_tombstones before the anti-join.
 4. Stored-field fetch = broadcast join of the k result rows against ``docs``.
 
 Multi-term expansion (wildcard/fuzzy/range) filters the ``dictionary``
@@ -28,19 +31,20 @@ rewrite semantics of ``plans/rewrite.py``.
 
 from __future__ import annotations
 
-from collections import Counter
 from dataclasses import dataclass, replace as dc_replace
-from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
+from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
+                               IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from xltsearch_spark.analyzers import analyze_text
 from xltsearch_spark.config import IndexConfig
 from xltsearch_spark.functions import blocks
+from xltsearch_spark.functions.evaluate import (MATCH_ALL, Evaluator, freq_scorer,
+                                                member_column)
 from xltsearch_spark.operators.build import BuildStats, term_bucket
 from xltsearch_spark.plans import scoring
 from xltsearch_spark.plans.parser import (BooleanQuery, DisMaxQuery, MatchAllQuery, MUST,
@@ -67,6 +71,10 @@ DECODED_SCHEMA = StructType([
 ])
 SCORE_SCHEMA = StructType([StructField("doc_id", LongType()),
                            StructField("score", DoubleType())])
+HIT_SCHEMA = StructType([StructField("query_id", StringType()), *SCORE_SCHEMA.fields])
+RANKED_SCHEMA = StructType([*HIT_SCHEMA.fields, StructField("rank", IntegerType())])
+_DTYPES = {"string": object, "binary": object, "long": np.int64,
+           "double": np.float64, "boolean": bool}  # of _decoded_schema's types
 # conjunction pruning: cap on the coalesced doc-range disjuncts a pruned
 # scan carries (_block_ranges keeps the largest gaps)
 CONJ_PRUNE_MAX_RANGES = 64
@@ -76,11 +84,10 @@ CONJ_PRUNE_MAX_RANGES = 64
 DRIVER_MAX_BLOCKS = 4096
 
 
-def _freq_scorer(cfg: IndexConfig):
-    """``scoring.score_freq`` under the configured similarity:
-    (freq, dl, idf, avgdl) -> per-doc scores."""
-    return partial(scoring.score_freq, cfg.scoring_model, k1=cfg.k1, b=cfg.b,
-                   quantize=cfg.quantize_norms)
+def _decoded_schema(members) -> StructType:
+    """DECODED_SCHEMA plus the constant-score membership columns."""
+    return StructType(DECODED_SCHEMA.fields
+                      + [StructField(m, BooleanType()) for m in members])
 
 
 @dataclass
@@ -93,119 +100,15 @@ class SearchResult:
     score: float
 
 
-@dataclass(frozen=True)
-class ConstScorePred:
-    """Engine-side constant-score multi-term node: instead of materializing
-    the (possibly huge) term expansion on the driver, the predicate itself
-    is pushed into the postings scan (term LIKE/rlike/range reach the
-    parquet reader). Semantically identical to plans.rewrite.ConstScoreTerms
-    — every matching doc scores `boost` (CONSTANT_SCORE rewrite) — but O(1)
-    driver state and no giant IN-lists in the plan."""
-    field: str
-    kind: str               # 'prefix' | 'regex' | 'range'
-    payload: tuple
-    boost: float = 1.0
-
-    def term_cond(self):
-        t = F.col("term")
-        if self.kind == "prefix":
-            return t.startswith(self.payload[0])
-        if self.kind == "regex":
-            return t.rlike(self.payload[0])
-        lo, hi, ilo, ihi = self.payload
-        c = F.lit(True)
-        if lo is not None:
-            c = c & ((t >= lo) if ilo else (t > lo))
-        if hi is not None:
-            c = c & ((t <= hi) if ihi else (t < hi))
-        return c
-
-
-_FLAT_LEAVES = (TermQuery, ConstScoreTerms, ConstScorePred)
-
-
-class FlatBooleans:
-    """The one scorer of flat booleans: a term or constant-score leaf, or a
-    BooleanQuery whose clauses are all such leaves (MUST / SHOULD /
-    MUST_NOT, boosts, ``msm``, queryNorm, DefaultSimilarity coord).
-
-    Every distinct leaf becomes shared doc-keyed aggregate columns over the
-    decoded postings — a conditional score sum per term leaf, a match flag
-    per leaf — so any number of queries score off ONE ``groupBy(doc_id)``
-    (``aggs``), each as a (score, gate) column pair over it (``query``).
-    Clause contributions add in clause order, so a query scores to the
-    same bits alone, in a ``search_many`` batch and under WAND."""
-
-    def __init__(self, bm25: bool):
-        self.bm25 = bm25
-        self.aggs: list = []
-        self._cols: dict = {}   # leaf key -> (score-sum alias | None, match alias)
-
-    @staticmethod
-    def clauses(ast):
-        """[(occ, leaf)] when ``ast`` has the flat shape; None otherwise."""
-        if isinstance(ast, _FLAT_LEAVES):
-            return [(SHOULD, ast)]
-        if isinstance(ast, BooleanQuery) and all(
-                isinstance(sub, _FLAT_LEAVES) for _, sub in ast.clauses):
-            return list(ast.clauses)
-        return None
-
-    def _leaf_cols(self, sub):
-        in_field = F.col("field") == sub.field
-        if isinstance(sub, TermQuery):
-            key, cond = ("t", sub.field, sub.term), in_field & (F.col("term") == sub.term)
-        elif isinstance(sub, ConstScoreTerms):
-            key = ("ct", sub.field, tuple(sub.terms))
-            cond = (in_field & F.col("term").isin(list(sub.terms))
-                    if sub.terms else F.lit(False))
-        else:
-            key, cond = ("cp", sub.field, sub.kind, sub.payload), in_field & sub.term_cond()
-        if key not in self._cols:
-            i = len(self._cols)
-            s_alias = None
-            if isinstance(sub, TermQuery):
-                s_alias = f"s{i}"
-                self.aggs.append(F.sum(F.when(cond, F.col("score"))
-                                       .otherwise(0.0)).alias(s_alias))
-            self.aggs.append(F.max(F.when(cond, 1).otherwise(0)).alias(f"m{i}"))
-            self._cols[key] = (s_alias, f"m{i}")
-        return self._cols[key]
-
-    def query(self, ast, mult: float = 1.0, tfidf_qn: float | None = None):
-        """(score, gate) columns of flat ``ast`` over ``aggs``; None when
-        it matches nothing (no scoring clause, or msm > optional count)."""
-        qn = tfidf_qn if tfidf_qn is not None else 1.0
-        is_bq = isinstance(ast, BooleanQuery)
-        m2 = mult * ast.boost if is_bq else mult
-        msm = ast.msm if is_bq else 0
-        score, gate = F.lit(0.0), F.lit(True)
-        n_must, scoring_m, should_m = 0, [], []
-        for occ, sub in self.clauses(ast):
-            s_alias, m_alias = self._leaf_cols(sub)
-            hit = F.col(m_alias) == 1
-            if occ == MUST_NOT:
-                gate &= ~hit
-                continue
-            w = m2 * sub.boost * qn
-            if occ == MUST:
-                n_must += 1
-                gate &= hit
-            scoring_m.append(m_alias)
-            if occ == SHOULD:
-                should_m.append(m_alias)
-            score = score + ((F.col(s_alias) * F.lit(w)) if s_alias is not None
-                             else F.when(hit, F.lit(w)).otherwise(0.0))
-        if not scoring_m or msm > len(should_m):
-            return None  # Lucene: no scoring clause / msm > optionals -> no hits
-        if msm > 0:
-            gate &= sum(F.col(m) for m in should_m) >= msm
-        if n_must == 0:
-            gate &= sum(F.col(m) for m in scoring_m) >= 1
-        if not self.bm25:
-            score = (score * sum(F.col(m) for m in scoring_m)
-                     / F.lit(float(len(scoring_m))))
-        return score, gate
+def _term_clauses(ast):
+    """[(occ, TermQuery)] of a term or a boolean of term clauses; None
+    for any other shape."""
+    if isinstance(ast, TermQuery):
+        return [(SHOULD, ast)]
+    if isinstance(ast, BooleanQuery) and all(
+            isinstance(sub, TermQuery) for _, sub in ast.clauses):
+        return list(ast.clauses)
+    return None
 
 
 def collapse_top_groups(hits: DataFrame, group_col: str, group_limit: int,
@@ -252,7 +155,7 @@ class SearchEngine:
                  dictionary: DataFrame, stats: BuildStats,
                  config: IndexConfig | None = None,
                  tombstones_df: DataFrame | None = None,
-                 blocks_exact: bool = True):
+                 blocks_exact: bool = True, n_tombstones: int | None = None):
         self.spark = spark
         self.postings = postings
         self.docs = docs  # live docs only (tombstoned rows already excluded)
@@ -264,6 +167,10 @@ class SearchEngine:
         # A lazy (doc_id) DataFrame (the catalog's persisted per-batch
         # parquet — a 10^8-row delete batch never touches the driver).
         self.tombstones_df = tombstones_df
+        # an upper bound on the dead docs (the catalog meta's count): a
+        # top-k keeps k + n_tombstones candidates for the anti-join, so a
+        # dead doc never pushes a live one out (None: keep every hit)
+        self.n_tombstones = n_tombstones
         # blocks_exact: True iff every stored block_max/min_score is a score
         # THIS engine decodes — computed with the CURRENT collection stats
         # (single segment, no incremental drift) under this engine's model
@@ -322,6 +229,7 @@ class SearchEngine:
         # _df_cache/_meta_cache; cleared by clear_stats_cache)
         self._prefix_cache: dict[tuple[str, str, int], list[str]] = {}
         self._fuzzy_cache: dict[tuple[str, str, int], list[tuple[str, float]]] = {}
+        self._live_ids: np.ndarray | None = None   # MatchAll's live doc ids
         self._last_fuzzy_distributed = False   # introspection for tests
         self._last_wand_tau_source: str | None = None
         # scan-task coalescing for exact-term queries: when the postings
@@ -393,8 +301,7 @@ class SearchEngine:
                 return wand
         else:
             idf_map = None
-        scored = self.score_all(query, _idf_map=idf_map, msm=msm)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+        return self._score_ast(self._parse(query, msm), idf_map, limit)
 
     # --------------------- block-max WAND top-k ----------------------------
     def _wand_topk(self, query: str, limit: int) -> tuple[DataFrame | None, dict | None]:
@@ -421,20 +328,19 @@ class SearchEngine:
         its stale-stats (max_tf, min_dl) recompute fallback.
 
         The shape is a term or a SHOULD-only flat boolean of terms; the
-        probe and the final scan score through ``_eval`` like the general
-        path, so a WAND top-k carries the general path's scores bit for
-        bit."""
+        probe and the final scan score through the evaluator like the
+        general path, so a WAND top-k carries the general path's scores
+        bit for bit."""
         model = self.config.scoring_model
         if self.has_tombstones or not self.wand_enabled:
             return None, None
         if model != "bm25" and not self.blocks_exact:
             return None, None
         ast = self._rewrite(self.parser.parse(query))
-        clauses = FlatBooleans.clauses(ast)
+        clauses = _term_clauses(ast)
         if (clauses is None
                 or (isinstance(ast, BooleanQuery) and ast.boost != 1.0)
-                or any(occ != SHOULD or not isinstance(sub, TermQuery)
-                       for occ, sub in clauses)):
+                or any(occ != SHOULD for occ, _ in clauses)):
             return None, None
         leaves = [sub for _, sub in clauses]
         if len({(t.field, t.term) for t in leaves}) != len(leaves):
@@ -478,11 +384,11 @@ class SearchEngine:
         tfidf_qn = self._tfidf_qn(ast, idf_map)
         qn, n_scoring = tfidf_qn or 1.0, len(terms)
 
-        def score(blocks_scan):
+        def top(blocks_scan):
             decoded = self._decode_blocks(self._scan_coalesce(blocks_scan, terms, []),
                                           idf_map, with_positions=False,
                                           max_blocks=self._max_blocks(terms, idf_map))
-            return self._eval(ast, decoded, 1.0, idf_map, tfidf_qn)
+            return self._scores(ast, decoded, idf_map, limit)
 
         tau = None  # threshold in FINAL-score units (qn/coord included)
         self._last_wand_tau_source = None  # introspection for tests/audits
@@ -537,9 +443,7 @@ class SearchEngine:
                 c = (F.col("field") == f) & (F.col("term") == t) & \
                     (F.col("block_max_score") == m)
                 probe_cond = c if probe_cond is None else (probe_cond | c)
-            probe_scores = score(self.postings.filter(cond).filter(probe_cond))
-            rows = probe_scores.orderBy(F.desc("score"), F.asc("doc_id")) \
-                               .limit(limit).collect()
+            rows = top(self.postings.filter(cond).filter(probe_cond)).collect()
             if len(rows) == limit:
                 tau = float(rows[-1]["score"])
                 self._last_wand_tau_source = "probe"
@@ -586,96 +490,40 @@ class SearchEngine:
                 prune = c if prune is None else (prune | c)
             scan = scan.filter(prune)
         self._last_wand_scan = scan
-        return (score(scan).orderBy(F.desc("score"), F.asc("doc_id")).limit(limit),
-                idf_map)
+        return top(scan), idf_map
 
-    def search_many(self, queries: dict[str, str], limit: int = 100,
-                    materialize: bool = True) -> DataFrame:
+    def search_many(self, queries: dict[str, str], limit: int = 100) -> DataFrame:
         """Evaluate MANY queries against ONE shared postings scan.
 
         Returns (query_id, doc_id, score, rank<=limit). All queries' terms
-        are collected into a single pruned scan + decode. Queries whose AST
-        is a term / flat boolean of simple leaves — the overwhelming batch
-        workload — are then scored in ONE pass: a single doc-keyed
-        aggregate computes every distinct clause's conditional sum/match
-        flag (``FlatBooleans``, the scorer of single flat queries, shared
-        across queries that touch the same term), one projection explodes
-        per-query (score, gate) structs, and ONE window ranks everything.
-        The whole flat batch is 2 shuffles + 1 decode (in the driver below
-        DRIVER_MAX_BLOCKS, else one Python stage) instead of a job per
-        query.
-
-        Top-k shape: the rank filter plans as WindowGroupLimit (per-group
-        bounded heaps) — a hot term matching 10^8 docs stays O(k) per query
-        in every partition, never a full sort of the match set.
-
-        Queries the flat path cannot express (phrase, spans, dismax,
-        match-all, nested booleans) fall back to the per-query branch path
-        over the SAME shared decoded frame (persisted only in that case;
-        with ``materialize=True`` those branches are checkpointed so the
-        cache releases before returning).
-
-        CACHE CONTRACT for ``materialize=False`` with non-flat queries
-        (lazy plan for tests/plan audits): the shared decoded frame stays
-        persisted — the caller must either trigger an action and then
-        release it via ``spark.catalog.clearCache()``, or accept the
-        pinned cache for the session."""
+        are collected into a single pruned scan + decode, and every query
+        evaluates over it in the same pass (``_hits``): in the driver
+        below DRIVER_MAX_BLOCKS — the answer is a local frame, ranked
+        there — else in one ``repartition("doc_id").mapInPandas`` with a
+        per-partition top-k per query, ranked by a window that plans as
+        WindowGroupLimit (per-group bounded heaps, never a full sort of
+        the match set). A query scores to the same bits here as alone."""
         from pyspark.sql.window import Window
         parsed = {qid: self._rewrite(self.parser.parse(q)) for qid, q in queries.items()}
-        all_terms, all_preds = set(), []
+        terms, consts, match_all = set(), [], False
         for ast in parsed.values():
-            t, p = self._collect_leaves(ast)
-            all_terms.update(t)
-            all_preds.extend(p)
-        terms = sorted(all_terms)
+            t, c, m = self._collect_leaves(ast)
+            terms.update(t)
+            consts.extend(c)
+            match_all |= m
+        terms = sorted(terms)
         idf_map = self._doc_freqs(terms)
-        any_pos = any(needs_positions(a) for a in parsed.values())
-
-        fb = FlatBooleans(self.config.scoring_model == "bm25")
-        flat, general = [], {}
-        for qid, ast in parsed.items():
-            if FlatBooleans.clauses(ast) is None:
-                general[qid] = ast
-                continue
-            compiled = fb.query(ast, 1.0, self._tfidf_qn(ast, idf_map))
-            if compiled is not None:
-                flat.append(F.struct(F.lit(qid).alias("query_id"),
-                                     compiled[0].alias("score"),
-                                     compiled[1].alias("gate")))
-        decoded = self._decode_postings(terms, all_preds, idf_map, any_pos)
-        if general:
-            decoded = decoded.persist()
-            if materialize:
-                # fill the cache with ONE dedicated job before the branches
-                # reference it: concurrent top-k stages racing an
-                # unmaterialized cache can each recompute the scan+decode
-                decoded.count()
-        out = None
-        if flat:
-            ex = (decoded.groupBy("doc_id").agg(*fb.aggs)
-                  .select("doc_id", F.explode(F.array(*flat)).alias("_q")))
-            out = self._filter_tombstones(
-                ex.filter(F.col("_q.gate"))
-                .select(F.col("_q.query_id").alias("query_id"), "doc_id",
-                        F.col("_q.score").alias("score")))
-        gen_out = None
-        for qid, ast in general.items():
-            scored = self._eval(ast, decoded, 1.0, idf_map,
-                                tfidf_qn=self._tfidf_qn(ast, idf_map))
-            scored = self._filter_tombstones(scored)
-            topk = (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-                    .select(F.lit(qid).alias("query_id"), "doc_id", "score"))
-            gen_out = topk if gen_out is None else gen_out.unionByName(topk)
-        if gen_out is not None:
-            if materialize:  # False = lazy plan (tests/plan audits)
-                gen_out = gen_out.localCheckpoint(eager=True)  # <= Q*k rows
-                decoded.unpersist()
-            out = gen_out if out is None else out.unionByName(gen_out)
-        if out is None:  # no query can match
-            out = self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double")
+        decoded = self._decode_postings(
+            terms, consts, idf_map, any(needs_positions(a) for a in parsed.values()),
+            match_all=match_all)
+        hits = self._hits(parsed, decoded, idf_map, limit)
+        if isinstance(hits, pd.DataFrame):
+            if not self.has_tombstones:  # each query's hits are in rank order
+                hits["rank"] = hits.groupby("query_id", sort=False).cumcount() + 1
+                return self._local(hits, RANKED_SCHEMA)
+            hits = self._local(hits, HIT_SCHEMA)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (out.withColumn("rank", F.row_number().over(w))
+        return (self._filter_tombstones(hits).withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= limit))
 
     def hit_count(self, query: str, limit: int | None = None) -> tuple[int, str]:
@@ -740,9 +588,8 @@ class SearchEngine:
         full-corpus pass."""
         from pyspark.sql.window import Window
         ast = self._rewrite(self.parser.parse(query))
-        clauses = FlatBooleans.clauses(ast)
-        if clauses is None or any(occ == MUST_NOT or not isinstance(sub, TermQuery)
-                                  for occ, sub in clauses):
+        clauses = _term_clauses(ast)
+        if clauses is None or any(occ == MUST_NOT for occ, _ in clauses):
             raise ValueError(
                 "explain() decomposes term and flat AND/OR-of-term "
                 "queries; got a clause it cannot attribute")
@@ -754,24 +601,19 @@ class SearchEngine:
         n, k1 = self.stats.n_docs, self.config.k1
         def idf_of(f, t):
             return scoring.idf(model, n, idf_map.get((f, t), 0))
-        tfidf_qn = self._tfidf_qn(ast, idf_map)
-        qn = tfidf_qn or 1.0
+        qn = self._tfidf_qn(ast, idf_map) or 1.0
 
-        # ONE decode serves both the scorer and the per-clause join: the
-        # query's decoded rows are small (bounded by the terms' postings),
-        # so an eager localCheckpoint materializes them once instead of
-        # running the scan + decode twice (halves the decode work and jobs
-        # of every explain() call)
-        decoded = self._decode_postings(terms, [], idf_map, False) \
-            .localCheckpoint(eager=True)
-        scored = self._filter_tombstones(self._eval(
-            ast, decoded, 1.0, idf_map, tfidf_qn))
+        # ONE decode serves both the scorer and the per-clause join: a
+        # capped scan is already in driver memory; above the cap an eager
+        # localCheckpoint materializes it once instead of running the scan
+        # + decode twice
+        decoded = self._decode_postings(terms, [], idf_map, False)
+        if not isinstance(decoded, pd.DataFrame):
+            decoded = decoded.localCheckpoint(eager=True)
+        hits = self._scores(ast, decoded, idf_map, limit if doc_ids is None else None)
         if doc_ids is not None:
-            hits = scored.filter(F.col("doc_id").isin([int(i) for i in
-                                                       doc_ids]))
-        else:
-            hits = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(limit))
+            hits = hits.filter(F.col("doc_id").isin([int(i) for i in doc_ids]))
+        decoded = self._as_frame(decoded)
         meta = [(sub.field, sub.term, idf_map.get((sub.field, sub.term), 0),
                  float(idf_of(sub.field, sub.term)),
                  float(bq_boost * sub.boost * qn))
@@ -866,8 +708,7 @@ class SearchEngine:
             raise ValueError("tie_breaker must be in [0, 1]")
         ast = DisMaxQuery(tuple(self._rewrite(self.parser.parse(q))
                                 for q in queries), float(tie_breaker))
-        scored = self._score_ast(ast)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+        return self._score_ast(ast, limit=limit)
 
     def score_all(self, query: str, _idf_map: dict | None = None,
                   msm: int = 0) -> DataFrame:
@@ -877,26 +718,68 @@ class SearchEngine:
         (same (field, term) keys by construction) — skips the re-collect.
         ``msm``: BooleanQuery.setMinimumNumberShouldMatch — requires a
         boolean top-level query; docs must match >= msm SHOULD clauses."""
+        return self._score_ast(self._parse(query, msm), _idf_map)
+
+    def _parse(self, query: str, msm: int = 0):
+        """The rewritten AST of ``query``, with ``msm`` set on its boolean."""
         ast = self._rewrite(self.parser.parse(query))
         if msm:
             if not isinstance(ast, BooleanQuery):
                 raise ValueError(
                     "minimum_should_match applies to boolean queries only")
             ast = dc_replace(ast, msm=int(msm))
-        return self._score_ast(ast, _idf_map)
+        return ast
 
-    def _score_ast(self, ast, _idf_map: dict | None = None) -> DataFrame:
+    def _score_ast(self, ast, _idf_map: dict | None = None,
+                   limit: int | None = None) -> DataFrame:
         """score_all over an already-rewritten AST (callers that build
         query trees from ANALYZED terms — more_like_this — must not
-        round-trip through the parser, which would re-analyze)."""
-        terms, preds = self._collect_leaves(ast)
+        round-trip through the parser, which would re-analyze); with
+        ``limit``, its top ``limit`` in rank order."""
+        terms, consts, match_all = self._collect_leaves(ast)
         idf_map = _idf_map if _idf_map is not None else self._doc_freqs(terms)
         self._last_conj_ranges = None
         extra = self._conjunction_extra_cond(ast, idf_map)
-        decoded = self._decode_postings(terms, preds, idf_map,
-                                        needs_positions(ast), extra_cond=extra)
-        return self._filter_tombstones(self._eval(
-            ast, decoded, 1.0, idf_map, self._tfidf_qn(ast, idf_map)))
+        decoded = self._decode_postings(terms, consts, idf_map, needs_positions(ast),
+                                        extra_cond=extra, match_all=match_all)
+        return self._scores(ast, decoded, idf_map, limit)
+
+    def _scores(self, ast, decoded, idf_map, limit: int | None) -> DataFrame:
+        """(doc_id, score) of ``ast`` over ``decoded``: every live hit, or
+        the top ``limit`` in (score desc, doc_id asc) order. A capped
+        decode without tombstones answers with a local frame."""
+        hits = self._hits({"": ast}, decoded, idf_map, limit)
+        if isinstance(hits, pd.DataFrame):
+            if not self.has_tombstones:
+                return self._local(hits[["doc_id", "score"]], SCORE_SCHEMA)
+            hits = self._local(hits, HIT_SCHEMA)
+        hits = self._filter_tombstones(hits).select("doc_id", "score")
+        return hits if limit is None else \
+            hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+
+    def _hits(self, queries: dict, decoded, idf_map, cut: int | None):
+        """Evaluate ``queries`` ({query_id: rewritten AST}) where
+        ``decoded`` was decoded: a pandas (query_id, doc_id, score) frame
+        from the driver, or a frame of those rows from one
+        ``repartition("doc_id").mapInPandas`` on the executors. ``cut``
+        keeps each query's best ``cut`` hits (per partition above the
+        cap), widened by n_tombstones for the anti-join that follows."""
+        ev = Evaluator(self.config, self.stats.n_docs, self.stats.avgdl, idf_map)
+        qs = {qid: (ast, self._tfidf_qn(ast, idf_map)) for qid, ast in queries.items()}
+        if cut is not None and self.has_tombstones:
+            cut = None if self.n_tombstones is None else cut + self.n_tombstones
+        if isinstance(decoded, pd.DataFrame):
+            return ev.hits(qs, decoded, cut)
+
+        def run(it):
+            chunks = list(it)
+            if chunks:
+                yield ev.hits(qs, pd.concat(chunks, ignore_index=True), cut)
+
+        # keyed repartition WITHOUT an explicit partition count: an explicit
+        # N is exempt from AQE coalescing, so a small candidate set would
+        # pay N mostly-empty Python tasks
+        return decoded.repartition("doc_id").mapInPandas(run, schema=HIT_SCHEMA)
 
     def _tfidf_qn(self, ast, idf_map) -> float | None:
         """DefaultSimilarity queryNorm of ``ast`` (None under BM25)."""
@@ -926,7 +809,7 @@ class SearchEngine:
             (F.col("field") == field) &
             (F.col("skip_first_doc") <= doc_id) &
             (F.col("skip_last_doc") >= doc_id))
-        decoded = self._decode_blocks(scan, {}, with_positions=False)
+        decoded = self._as_frame(self._decode_blocks(scan, {}, with_positions=False))
         tv = (decoded.filter(F.col("doc_id") == doc_id)
               .groupBy("term").agg(F.sum("tf").alias("tf")))
         dic = (self.dictionary.filter(F.col("field") == field)
@@ -942,7 +825,7 @@ class SearchEngine:
                 .limit(max_terms))
         rows = cand.collect()
         if not rows:
-            return self._empty_scores()
+            return self._local(pd.DataFrame(), SCORE_SCHEMA)
         ast = BooleanQuery(tuple(
             (SHOULD, TermQuery(field, r["term"])) for r in rows))
         scored = self._score_ast(ast).filter(F.col("doc_id") != doc_id)
@@ -989,19 +872,18 @@ class SearchEngine:
         # prefix/wildcard/range: constant-score — push the predicate into the
         # postings scan instead of expanding terms on the driver
         if isinstance(ast, PrefixQuery):
-            return ConstScorePred(ast.field, "prefix", (ast.prefix,), ast.boost)
+            return ConstScoreTerms(ast.field, (), ast.boost, "prefix", (ast.prefix,))
         if isinstance(ast, WildcardQuery):
-            return ConstScorePred(ast.field, "regex",
-                                  (_wildcard_regex(ast.pattern).pattern,), ast.boost)
+            return ConstScoreTerms(ast.field, (), ast.boost, "regex",
+                                   (_wildcard_regex(ast.pattern).pattern,))
         if isinstance(ast, RegexpQuery):
             # /pattern/ (classic QP RegexpQuery): same constant-score pushed
             # predicate as wildcard, with the user's (anchored) pattern
-            return ConstScorePred(ast.field, "regex",
-                                  (_anchored_regexp(ast.pattern),), ast.boost)
+            return ConstScoreTerms(ast.field, (), ast.boost, "regex",
+                                   (_anchored_regexp(ast.pattern),))
         if isinstance(ast, RangeQuery):
-            return ConstScorePred(ast.field, "range",
-                                  (ast.lo, ast.hi, ast.include_lo, ast.include_hi),
-                                  ast.boost)
+            return ConstScoreTerms(ast.field, (), ast.boost, "range",
+                                   (ast.lo, ast.hi, ast.include_lo, ast.include_hi))
         if isinstance(ast, FuzzyQuery):
             # Expansion is pruned JVM-side: a length-window predicate
             # (|len(t)-len(q)| <= maxEdits is necessary for ed <= maxEdits)
@@ -1099,10 +981,12 @@ class SearchEngine:
 
     # --------------------- pruned posting scan + decode --------------------
     def _collect_leaves(self, ast):
-        """(exact (field, term) list, ConstScorePred list) for the scan."""
-        terms, preds = [], []
+        """(exact (field, term) list, ConstScoreTerms list, whether a
+        MatchAllQuery occurs) for the scan."""
+        terms, consts, match_all = [], [], False
 
         def walk(node):
+            nonlocal match_all
             if isinstance(node, BooleanQuery):
                 for _, sub in node.clauses:
                     walk(sub)
@@ -1126,11 +1010,12 @@ class SearchEngine:
                 terms.extend((node.field, t) for t in node.expansions)
             elif isinstance(node, ConstScoreTerms):
                 terms.extend((node.field, t) for t in node.terms)
-            elif isinstance(node, ConstScorePred):
-                preds.append(node)
+                consts.append(node)
+            elif isinstance(node, MatchAllQuery):
+                match_all = True
 
         walk(ast)
-        return sorted(set(terms)), preds
+        return sorted(set(terms)), consts, match_all
 
     def clear_stats_cache(self) -> None:
         self._df_cache.clear()
@@ -1138,6 +1023,7 @@ class SearchEngine:
         self._range_cache.clear()
         self._prefix_cache.clear()
         self._fuzzy_cache.clear()
+        self._live_ids = None
 
     # ---------------- conjunction (rarest-first) block pruning -------------
     def _block_ranges(self, field: str, term: str,
@@ -1219,7 +1105,7 @@ class SearchEngine:
                     must_keys.append((sub.field, sub.term))
                 elif occ == MUST and isinstance(sub, PhraseQuery):
                     must_keys.extend((sub.field, t) for t, _ in sub.terms)
-            has_pred = any(isinstance(sub, ConstScorePred)
+            has_pred = any(isinstance(sub, ConstScoreTerms) and sub.kind
                            for _, sub in ast.clauses)
         if not must_keys:
             return None
@@ -1259,9 +1145,10 @@ class SearchEngine:
         return {t: self._df_cache[t] for t in terms}
 
     def _terms_cond(self, terms, preds):
-        """Scan predicate: exact terms prune on (bucket, term); predicate
-        leaves (prefix/regex/range) prune on field only — pushed to the
-        parquet reader where min/max row-group stats on `term` apply."""
+        """Scan predicate: exact terms prune on (bucket, term); pushed
+        constant-score leaves (prefix/regex/range) prune on field only —
+        pushed to the parquet reader where min/max row-group stats on
+        `term` apply."""
         cond = None
         if terms:
             buckets = sorted({int(term_bucket(np.array([t], dtype=object),
@@ -1312,42 +1199,74 @@ class SearchEngine:
         bs, extra = self.config.block_size, self.stats.segments - 1
         return sum(-(-idf_map[t] // bs) + extra for t in terms)
 
-    def _decode_postings(self, terms, preds, idf_map, with_positions: bool,
-                         extra_cond=None) -> DataFrame:
-        """One scan + decode of all query-term blocks. ``extra_cond``
-        layers a pushed block-level predicate onto the scan (conjunction
-        doc-range pruning)."""
-        if not terms and not preds:
-            return self.spark.createDataFrame([], DECODED_SCHEMA)
-        scan = self.postings.filter(self._terms_cond(terms, preds))
-        if extra_cond is not None:
-            scan = scan.filter(extra_cond)
-        self._last_scan = scan  # plan-audit hook
-        scan = self._scan_coalesce(scan, terms, preds)
-        return self._decode_blocks(
-            scan, idf_map, with_positions,
-            max_blocks=None if preds else self._max_blocks(terms, idf_map))
+    def _decode_postings(self, terms, consts, idf_map, with_positions: bool,
+                         extra_cond=None, match_all: bool = False):
+        """One scan + decode of all query-term blocks (see
+        ``_decode_blocks``), plus one MATCH_ALL row per live doc when
+        ``match_all``; those stay in the driver while the live docs fit
+        DRIVER_MAX_BLOCKS full blocks. ``extra_cond`` layers a pushed
+        block-level predicate onto the scan (conjunction doc-range
+        pruning)."""
+        preds = [c for c in consts if c.kind]
+        members = sorted({member_column(c) for c in consts})
+        on_executors = (match_all and self.stats.n_docs
+                        > DRIVER_MAX_BLOCKS * self.config.block_size)
+        if terms or preds:
+            scan = self.postings.filter(self._terms_cond(terms, preds))
+            if extra_cond is not None:
+                scan = scan.filter(extra_cond)
+            self._last_scan = scan  # plan-audit hook
+            scan = self._scan_coalesce(scan, terms, preds)
+            decoded = self._decode_blocks(
+                scan, idf_map, with_positions, consts=consts,
+                max_blocks=(DRIVER_MAX_BLOCKS + 1 if on_executors else
+                            None if preds else self._max_blocks(terms, idf_map)))
+        else:
+            decoded = self._empty_decoded(members)
+            if on_executors:
+                decoded = self._local(decoded, _decoded_schema(members))
+        if not match_all:
+            return decoded
+        if not isinstance(decoded, pd.DataFrame):
+            return decoded.unionByName(self.docs.select(
+                F.lit(MATCH_ALL).alias("field"), F.lit("").alias("term"), "doc_id",
+                F.lit(0.0).alias("score"), F.lit(0).cast("long").alias("tf"),
+                F.lit(0).cast("long").alias("dl"),
+                F.lit(None).cast("binary").alias("positions"),
+                *[F.lit(False).alias(m) for m in members]))
+        if self._live_ids is None:
+            self._live_ids = self.docs.select("doc_id").toArrow().column(0).to_numpy()
+        live = pd.DataFrame({"field": MATCH_ALL, "term": "", "doc_id": self._live_ids,
+                             "score": 0.0, "tf": 0, "dl": 0, "positions": None,
+                             **{m: False for m in members}})
+        return live if decoded.empty else pd.concat([decoded, live], ignore_index=True)
 
     def _decode_blocks(self, scan: DataFrame, idf_map, with_positions: bool,
-                       max_blocks: int | None = None) -> DataFrame:
+                       max_blocks: int | None = None, consts=()):
         """Blocks -> one scored row per posting, a batch at a time through
-        ``blocks.decode`` and ``scoring.score_freq``.
+        ``blocks.decode`` and ``scoring.score_freq``, with each constant-
+        score leaf's membership (``member_column``) projected by the JVM
+        from its ``term_cond()``.
 
         A scan of at most DRIVER_MAX_BLOCKS blocks decodes in the driver:
-        one Arrow collect (a JVM-only job) and one batch, whose rows become
-        a DataFrame again (``_task_side_frame``) — no Python-worker stage,
-        whose start-up alone costs more than decoding hundreds of blocks. ``max_blocks`` is an
-        upper bound on the scan's blocks when the caller knows one (exact
-        terms: ``_max_blocks``); without one, a ``limit(cap + 1)`` probe
-        collects the scan and its rows are reused when they fit. A larger
-        scan decodes on the executors in one ``mapInPandas``, so driver
+        one Arrow collect (a JVM-only job) and one batch, returned as a
+        pandas frame that the query then evaluates in place — no Python-
+        worker stage, whose start-up alone costs more than decoding
+        hundreds of blocks. ``max_blocks`` is an upper bound on the scan's
+        blocks when the caller knows one (exact terms: ``_max_blocks``);
+        without one, a ``limit(cap + 1)`` probe collects the scan and its
+        rows are reused when they fit. A larger scan decodes on the
+        executors in one ``mapInPandas`` (a frame is returned), so driver
         memory stays bounded at any corpus size."""
         cfg = self.config
-        model, score = cfg.scoring_model, _freq_scorer(cfg)
+        model, score = cfg.scoring_model, freq_scorer(cfg)
         n_docs, avgdl = self.stats.n_docs, self.stats.avgdl
         idf_of = {k: scoring.idf(model, n_docs, df) for k, df in idf_map.items()}
         idf_absent = scoring.idf(model, n_docs, 0)
         streams = ("docs", "tfs", "dls") + (("pos",) if with_positions else ())
+        conds = {member_column(c): (F.col("field") == c.field) & c.term_cond()
+                 for c in consts}
+        members = list(conds)   # names only: the decode closure ships to executors
 
         def decode_batch(pdf):
             """One batch of blocks -> its scored postings (None if none)."""
@@ -1366,18 +1285,18 @@ class SearchEngine:
                 "field": fields[p.row], "term": terms[p.row],
                 "doc_id": p.docs, "score": sc, "tf": p.tfs, "dl": p.dls,
                 "positions": (blocks.position_blobs(p) if with_positions
-                              else [None] * p.row.size)})
+                              else [None] * p.row.size),
+                **{m: pdf[m].to_numpy(dtype=bool)[p.row] for m in members}})
 
         scan = scan.select("field", "term", "n_docs", "docs_bin", "tfs_bin",
-                           "dls_bin", *(("pos_bin",) if with_positions else ()))
+                           "dls_bin", *(("pos_bin",) if with_positions else ()),
+                           *[cond.alias(m) for m, cond in conds.items()])
         if max_blocks is None or max_blocks <= DRIVER_MAX_BLOCKS:
             probe = scan if max_blocks is not None else scan.limit(DRIVER_MAX_BLOCKS + 1)
             table = probe.toArrow()
             if table.num_rows <= DRIVER_MAX_BLOCKS:
                 out = decode_batch(table.to_pandas())
-                if out is None:
-                    return self.spark.createDataFrame([], DECODED_SCHEMA)
-                return self._task_side_frame(out)
+                return out if out is not None else self._empty_decoded(members)
 
         def decode(it):
             for pdf in it:
@@ -1385,81 +1304,32 @@ class SearchEngine:
                 if out is not None:
                     yield out
 
-        return scan.mapInPandas(decode, schema=DECODED_SCHEMA)
+        return scan.mapInPandas(decode, schema=_decoded_schema(members))
 
-    def _task_side_frame(self, pdf: pd.DataFrame) -> DataFrame:
-        """``pdf`` as a DataFrame whose Arrow batches turn into rows in the
-        tasks that read them. Spark's default keeps an Arrow frame under
-        48 MB as a LocalRelation in the plan instead, which every query
-        over it plans and ships from the driver: for 10^5 decoded postings
-        that costs more than the decode it replaces."""
-        key, conf = "spark.sql.execution.arrow.localRelationThreshold", self.spark.conf
-        old = conf.get(key, None)
-        conf.set(key, "0")
-        try:
-            return self.spark.createDataFrame(pdf, DECODED_SCHEMA)
-        finally:
-            if old is None:
-                conf.unset(key)
-            else:
-                conf.set(key, old)
+    @staticmethod
+    def _empty_decoded(members) -> pd.DataFrame:
+        return pd.DataFrame({f.name: pd.Series(dtype=_DTYPES[f.dataType.typeName()])
+                             for f in _decoded_schema(members).fields})
 
-    # --------------------------- evaluation --------------------------------
-    def _eval(self, node, decoded: DataFrame, mult: float, idf_map, tfidf_qn) -> DataFrame:
-        """Recursive AST -> DataFrame(doc_id, score)."""
-        qn = tfidf_qn if tfidf_qn is not None else 1.0
-        if isinstance(node, TermQuery):
-            return (decoded.filter((F.col("field") == node.field) &
-                                   (F.col("term") == node.term))
-                    .select("doc_id", (F.col("score") * F.lit(mult * node.boost * qn))
-                            .alias("score")))
-        if FlatBooleans.clauses(node) is not None:
-            fb = FlatBooleans(self.config.scoring_model == "bm25")
-            compiled = fb.query(node, mult, tfidf_qn)
-            if compiled is None:
-                return self._empty_scores()
-            score, gate = compiled
-            return (decoded.groupBy("doc_id").agg(*fb.aggs).filter(gate)
-                    .select("doc_id", score.alias("score")))
-        if isinstance(node, MatchAllQuery):
-            return self.docs.select("doc_id").withColumn(
-                "score", F.lit(mult * node.boost * qn))
-        if isinstance(node, (PhraseQuery, MultiPhraseQuery)):
-            return self._eval_phrase(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, BooleanQuery):
-            return self._eval_boolean(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, DisMaxQuery):
-            return self._eval_dismax(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, SpanFirstQuery):
-            return self._eval_span_first(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, SpanNearQuery):
-            return self._eval_span_near(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, SpanOrQuery):
-            return self._eval_span_or(node, decoded, mult, idf_map, tfidf_qn)
-        if isinstance(node, SpanNotQuery):
-            return self._eval_span_not(node, decoded, mult, idf_map, tfidf_qn)
-        raise TypeError(type(node).__name__)
+    def _local(self, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
+        """``pdf`` as a local frame: a LocalRelation, whose collect starts
+        no job. An empty pandas frame would take the RDD path, which
+        does; an emptied one-row relation stays local."""
+        if len(pdf):
+            return self.spark.createDataFrame(pdf, schema)
+        filler = {"string": "", "binary": None, "boolean": False, "double": 0.0}
+        return self.spark.createDataFrame(pd.DataFrame(
+            {f.name: [filler.get(f.dataType.typeName(), 0)] for f in schema.fields}),
+            schema).limit(0)
 
-    def _eval_span_first(self, node: SpanFirstQuery, decoded, mult, idf_map,
-                         tfidf_qn) -> DataFrame:
-        """SpanFirstQuery: matching-span count (positions < end) replaces
-        tf in the similarity — SpanScorer semantics, distance-0 spans
-        weigh 1 each. One vectorized mapInPandas over the term's decoded
-        rows (concat-buffer + reduceat, no per-doc Python loop); idf uses
-        the term's FULL doc freq (SpanWeight uses the term statistics)."""
-        cand = (decoded.filter((F.col("field") == node.field) &
-                               (F.col("term") == node.term))
-                .select("doc_id", "positions", "dl"))
-        end = int(node.end)
+    def _as_frame(self, decoded) -> DataFrame:
+        """A decode's rows as a DataFrame (a driver decode becomes local)."""
+        if isinstance(decoded, pd.DataFrame):
+            return self._local(decoded, _decoded_schema(
+                [c for c in decoded.columns if c not in DECODED_SCHEMA.names]))
+        return decoded
 
-        def freq(pdf):
-            pos, counts = blocks.blob_positions(pdf["positions"])
-            offs = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            return np.add.reduceat((pos < end).astype(np.int64), offs)
-
-        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
-                                 [node.term], freq, ("positions",))
-
+    # --------------------------- API-tier queries ---------------------------
     def search_span_first(self, term: str, end: int, field: str | None = None,
                           limit: int = 100) -> DataFrame:
         """Lucene ``SpanFirstQuery(SpanTermQuery(term), end)`` top-k (API
@@ -1471,60 +1341,7 @@ class SearchEngine:
             raise ValueError("end must be >= 1")
         field = field or self.parser.default_field
         [tok] = self._single_terms("span_first", term)
-        scored = self._score_ast(SpanFirstQuery(field, tok, int(end)))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-
-    def _eval_span_near(self, node: SpanNearQuery, decoded, mult, idf_map,
-                        tfidf_qn) -> DataFrame:
-        """Ordered two-clause SpanNearQuery: each ``second`` occurrence
-        pairs with its closest preceding ``first`` occurrence; gap <= slop
-        matches and contributes sloppyFreq = 1/(1+gap). ONE join of the two
-        terms' decoded rows on doc_id (docs must contain both), then a
-        batch-vectorized mapInPandas: every doc in the Arrow batch shares a
-        single global searchsorted via per-row offset lifting (row_i * 2^32
-        added to both position streams) — no per-doc Python loop. Equal
-        positions (posIncr=0 subtokens) are NOT predecessors (strict <).
-        idf is the summed clause idf, like a phrase (SpanWeight builds its
-        SimWeight from all clause term statistics)."""
-        # ONE conditional aggregate instead of a self-join of two filtered
-        # branches: the branches would each recompute the shared
-        # scan+decode subtree (two Python stages) and pay two join
-        # exchanges; a doc has exactly one decoded row per term, so
-        # max(when(term == t, positions)) reconstructs the join's row with
-        # a single decode pass + a single exchange. Inner-join semantics =
-        # both sides non-null.
-        agg = (decoded.filter((F.col("field") == node.field) &
-                              F.col("term").isin([node.first, node.second]))
-               .groupBy("doc_id")
-               .agg(F.max(F.when(F.col("term") == node.first,
-                                 F.col("positions"))).alias("pos_a"),
-                    F.max(F.when(F.col("term") == node.second,
-                                 F.col("positions"))).alias("pos_b"),
-                    F.max("dl").alias("dl")))
-        cand = agg.filter(F.col("pos_a").isNotNull()
-                          & F.col("pos_b").isNotNull())
-        slop = int(node.slop)
-
-        def freq(pdf):
-            pa, cnt_a = blocks.blob_positions(pdf["pos_a"])
-            pb, cnt_b = blocks.blob_positions(pdf["pos_b"])
-            n = len(pdf)
-            base = np.arange(n, dtype=np.int64) << 32  # positions < 2^32
-            pa_adj = pa + np.repeat(base, cnt_a)
-            pb_adj = pb + np.repeat(base, cnt_b)
-            starts_a = np.concatenate(([0], np.cumsum(cnt_a)[:-1]))
-            starts_b = np.concatenate(([0], np.cumsum(cnt_b)[:-1]))
-            row_of_b = np.repeat(np.arange(n, dtype=np.int64), cnt_b)
-            idx = np.searchsorted(pa_adj, pb_adj, side="left") - 1
-            valid = idx >= starts_a[row_of_b]  # predecessor in SAME doc
-            gap = np.where(valid, pb_adj - pa_adj[np.maximum(idx, 0)] - 1,
-                           np.int64(slop) + 1)
-            contrib = np.where(gap <= slop, 1.0 / (1.0 + gap), 0.0)
-            return np.add.reduceat(contrib, starts_b)
-
-        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
-                                 [node.first, node.second], freq,
-                                 ("pos_a", "pos_b"))
+        return self._score_ast(SpanFirstQuery(field, tok, int(end)), limit=limit)
 
     def search_collapsed(self, query: str, group_field: str,
                          group_limit: int = 1,
@@ -1556,114 +1373,14 @@ class SearchEngine:
         docs are excluded like every scoring path.
 
         CURSOR CONTRACT (ADVICE r5 #2): the cursor comparison is float
-        equality on raw scores, and for multi-clause queries Spark's
-        per-doc float sum order is not guaranteed identical across jobs —
-        so cursors must come from the SAME score frame the page reads
-        (this method over the same engine/index generation), or from a
-        frame rounded consistently on both sides (the _ft entries round
-        @4 before the cut for exactly this reason). A cursor score
-        recomputed elsewhere can drift a ulp and drop/duplicate the
-        boundary row."""
+        equality on raw scores. The evaluator adds clause contributions in
+        clause order, so this engine's scores repeat bit for bit; cursors
+        must come from the same engine/index generation, or from a frame
+        rounded consistently on both sides (the _ft entries round @4
+        before the cut). A cursor score recomputed elsewhere can drift a
+        ulp and drop/duplicate the boundary row."""
         scored = self.score_all(query)
         return paginate_after(scored, after_score, after_doc_id, limit)
-
-    def _span_kernel(self, rows: DataFrame, node, mult, idf_map, tfidf_qn,
-                     idf_terms, freq, required=()) -> DataFrame:
-        """The shared frame of every spans evaluator, ONE mapInPandas over
-        per-doc rows: a partition's batches concatenated, rows with a null
-        ``required`` column dropped, ``freq(pdf)`` -> the span frequency of
-        each row (the evaluator's count, run in the same kernel), then the
-        rows with frequency > 0 scored with the active similarity. idf
-        sums the ``idf_terms``' idfs."""
-        cfg = self.config
-        avgdl = self.stats.avgdl.get(node.field, 1.0) or 1.0
-        idf = sum(scoring.idf(cfg.scoring_model, self.stats.n_docs,
-                              idf_map.get((node.field, t), 0)) for t in idf_terms)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None
-                                          else 1.0)
-        score = _freq_scorer(cfg)
-
-        def score_partition(it):
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            if required:
-                pdf = pdf.dropna(subset=list(required))
-            if pdf.empty:
-                return
-            sf = freq(pdf)
-            keep = sf > 0
-            if not keep.any():
-                return
-            sc = score(sf[keep], pdf["dl"].to_numpy(dtype=np.int64)[keep],
-                       idf, avgdl)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64)[keep],
-                "score": sc * final_mult})
-
-        return rows.mapInPandas(score_partition, schema=SCORE_SCHEMA)
-
-    def _eval_span_or(self, node: SpanOrQuery, decoded, mult, idf_map,
-                      tfidf_qn) -> DataFrame:
-        """SpanOrQuery over term clauses: span frequency = summed clause
-        tf, idf = summed clause idf. The frequency is ONE JVM aggregate
-        over the shared decoded frame (map-side partials) — no positions
-        decode, no Python until the per-doc (sf, dl) rows."""
-        # duplicate clauses each contribute their spans (SpanOr unions
-        # clause span streams): weight tf by clause multiplicity
-        counts = Counter(node.terms)
-        w = F.lit(None).cast("double")
-        for t, c in counts.items():
-            w = F.when(F.col("term") == t, F.lit(float(c))).otherwise(w)
-        rows = (decoded.filter((F.col("field") == node.field) &
-                               F.col("term").isin(list(counts)))
-                .groupBy("doc_id")
-                .agg(F.sum(F.col("tf") * w).cast("double").alias("sf"),
-                     F.max("dl").alias("dl")))
-        return self._span_kernel(rows, node, mult, idf_map, tfidf_qn,
-                                 node.terms,
-                                 lambda pdf: pdf["sf"].to_numpy(dtype=np.float64))
-
-    def _eval_span_not(self, node: SpanNotQuery, decoded, mult, idf_map,
-                       tfidf_qn) -> DataFrame:
-        """SpanNotQuery: include occurrences with no exclude occurrence in
-        [p - pre, p + post]; frequency = surviving count; include-term
-        statistics only. LEFT join (docs without the exclude term keep
-        every span), then one batch-vectorized window count — the same
-        offset-lifted global searchsorted as span_near."""
-        # single conditional aggregate replaces the LEFT join of two
-        # filtered branches (same rationale as _eval_span_near: one decode
-        # pass, one exchange); left-join semantics = include side non-null,
-        # exclude side may stay NULL
-        agg = (decoded.filter((F.col("field") == node.field) &
-                              F.col("term").isin([node.include, node.exclude]))
-               .groupBy("doc_id")
-               .agg(F.max(F.when(F.col("term") == node.include,
-                                 F.col("positions"))).alias("pos_i"),
-                    F.max(F.when(F.col("term") == node.exclude,
-                                 F.col("positions"))).alias("pos_e"),
-                    F.max(F.when(F.col("term") == node.include,
-                                 F.col("dl"))).alias("dl")))
-        cand = agg.filter(F.col("pos_i").isNotNull())
-        pre, post = int(node.pre), int(node.post)
-
-        def freq(pdf):
-            pi, cnt_i = blocks.blob_positions(pdf["pos_i"])
-            pe, cnt_e = blocks.blob_positions(pdf["pos_e"])
-            base = np.arange(len(pdf), dtype=np.int64) << 32
-            pi_adj = pi + np.repeat(base, cnt_i)
-            pe_adj = pe + np.repeat(base, cnt_e)
-            # pre/post < 2^31 (validated in search_span_not) so the
-            # window never crosses a row's block
-            lo = np.searchsorted(pe_adj, pi_adj - pre, side="left")
-            hi = np.searchsorted(pe_adj, pi_adj + post, side="right")
-            survive = (hi == lo).astype(np.float64)
-            starts_i = np.concatenate(([0], np.cumsum(cnt_i)[:-1]))
-            return np.add.reduceat(survive, starts_i)
-
-        return self._span_kernel(cand, node, mult, idf_map, tfidf_qn,
-                                 [node.include], freq, ("pos_i",))
 
     def search_span_or(self, terms: list[str] | tuple[str, ...],
                        field: str | None = None,
@@ -1673,8 +1390,7 @@ class SearchEngine:
             raise ValueError("span_or needs at least one term")
         field = field or self.parser.default_field
         ast = SpanOrQuery(field, tuple(self._single_terms("span_or", *terms)))
-        scored = self._score_ast(ast)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+        return self._score_ast(ast, limit=limit)
 
     def search_span_not(self, include: str, exclude: str, pre: int = 0,
                         post: int = 0, field: str | None = None,
@@ -1692,8 +1408,7 @@ class SearchEngine:
         field = field or self.parser.default_field
         inc, exc = self._single_terms("span_not", include, exclude)
         ast = SpanNotQuery(field, inc, exc, int(pre), int(post))
-        scored = self._score_ast(ast)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+        return self._score_ast(ast, limit=limit)
 
     def search_span_near(self, first: str, second: str, slop: int,
                          field: str | None = None,
@@ -1705,8 +1420,7 @@ class SearchEngine:
             raise ValueError("slop must be >= 0")
         field = field or self.parser.default_field
         a, b = self._single_terms("span_near", first, second)
-        scored = self._score_ast(SpanNearQuery(field, a, b, int(slop)))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
+        return self._score_ast(SpanNearQuery(field, a, b, int(slop)), limit=limit)
 
     def _single_terms(self, api: str, *texts: str) -> list[str]:
         """Each text through the index analyzer to its one term (the span
@@ -1719,148 +1433,6 @@ class SearchEngine:
                                  f"single term; {text!r} gives {len(toks)}")
             out.append(toks[0][0])
         return out
-
-    def _eval_dismax(self, node: DisMaxQuery, decoded, mult, idf_map,
-                     tfidf_qn) -> DataFrame:
-        """DisjunctionMaxQuery: max(clause scores) + tie * sum(others) —
-        one union of the clause score frames + one doc-keyed aggregate
-        (max and sum in the same pass); clauses share the single decoded
-        scan like the boolean paths."""
-        m2 = mult * node.boost
-        tagged = [self._eval(sub, decoded, m2, idf_map, tfidf_qn)
-                  .select("doc_id", "score") for sub in node.clauses]
-        unioned = tagged[0]
-        for t in tagged[1:]:
-            unioned = unioned.unionByName(t)
-        agg = unioned.groupBy("doc_id").agg(F.max("score").alias("_mx"),
-                                            F.sum("score").alias("_sm"))
-        return agg.select(
-            "doc_id",
-            (F.col("_mx") + F.lit(float(node.tie_breaker))
-             * (F.col("_sm") - F.col("_mx"))).alias("score"))
-
-    def _empty_scores(self) -> DataFrame:
-        return self.spark.createDataFrame([], SCORE_SCHEMA)
-
-    def _eval_phrase(self, node, decoded, mult, idf_map, tfidf_qn):
-        """PhraseQuery and MultiPhraseQuery: ONE repartition(doc_id) of the
-        slot terms' decoded rows, then a partition-level mapInPandas
-        vectorized across every candidate doc (a per-doc-group
-        applyInPandas would pay Arrow batch overhead per document, and
-        pandas groupby iteration ~1 ms per group).
-
-        A slot is a set of terms at a relative offset: one term per slot
-        for an exact phrase, plus — in the phrase-prefix form — a slot at
-        ``prefix_offset`` matched by ANY expansion term. The slot kernel
-        turns every slot-term position into a (doc, slot, anchor =
-        position - offset) triple, dedupes the triples (two expansion
-        terms at one position are ONE slot match: ExactPhraseScorer over
-        the union postings enum counts each position once) and counts the
-        (doc, anchor) groups holding every slot: phraseFreq. Sloppy phrases
-        score with ``functions/phrase.py:phrase_freq``'s anchor-distance
-        rule applied batch-wide (nearest-position searchsorted on a (doc,
-        position) composite key). idf sums every slot term's idf
-        (MultiPhraseWeight allTermStats)."""
-        if isinstance(node, MultiPhraseQuery):
-            if not node.expansions:
-                return self._empty_scores()
-            slots = ([((t,), o) for t, o in node.terms]
-                     + [(tuple(node.expansions), node.prefix_offset)])
-            slop = 0
-        else:
-            slots, slop = [((t,), o) for t, o in node.terms], node.slop
-        slot_terms = sorted({t for ts, _ in slots for t in ts})
-        cand = (decoded.filter((F.col("field") == node.field) &
-                               F.col("term").isin(slot_terms))
-                .select("doc_id", "term", "positions", "dl"))
-        cfg = self.config
-        n_docs, avgdl = self.stats.n_docs, self.stats.avgdl.get(node.field, 1.0) or 1.0
-        idf = sum(sum(scoring.idf(cfg.scoring_model, n_docs,
-                                  idf_map.get((node.field, t), 0)) for t in ts)
-                  for ts, _ in slots)
-        score = _freq_scorer(cfg)
-        final_mult = mult * node.boost * (tfidf_qn if tfidf_qn is not None else 1.0)
-
-        def slot_freq(tpos, tdoc, ndocs):
-            parts = [(tdoc[t], np.full(tdoc[t].size, si), tpos[t] - off)
-                     for si, (ts, off) in enumerate(slots) for t in ts]
-            gd, gs, ga = (np.concatenate(c) for c in zip(*parts))
-            order = np.lexsort((gs, ga, gd))
-            gd, gs, ga = gd[order], gs[order], ga[order]
-            fresh = np.concatenate(([True], (gd[1:] != gd[:-1])
-                                    | (ga[1:] != ga[:-1])
-                                    | (gs[1:] != gs[:-1])))
-            gd, ga = gd[fresh], ga[fresh]
-            bnd = np.flatnonzero(np.concatenate((
-                [True], (gd[1:] != gd[:-1]) | (ga[1:] != ga[:-1]))))
-            sizes = np.diff(np.concatenate((bnd, [gd.size])))
-            full = sizes == len(slots)  # deduped: <= 1 entry per slot
-            return np.bincount(gd[bnd[full]], minlength=ndocs).astype(np.float64)
-
-        def sloppy_freq(tpos, tdoc, ndocs):
-            terms = [ts[0] for ts, _ in slots]
-            offsets = [o for _, o in slots]
-            a_doc = tdoc[terms[0]]
-            a_pos = tpos[terms[0]] - offsets[0]
-            total = np.zeros(a_doc.size, dtype=np.float64)
-            for i in range(1, len(terms)):
-                fp, fd = tpos[terms[i]], tdoc[terms[i]]
-                expected = a_pos + offsets[i]
-                if fp.size == 0 or a_doc.size == 0:
-                    total[:] = np.inf
-                    break
-                lo = min(int(fp.min()), int(expected.min()))
-                span = max(int(fp.max()), int(expected.max())) - lo + 2
-                comp = fd * span + (fp - lo)
-                j = np.searchsorted(comp, a_doc * span + (expected - lo))
-                jr = np.minimum(j, comp.size - 1)
-                ok_r = (j < comp.size) & (fd[jr] == a_doc)
-                dist = np.where(ok_r, np.abs(fp[jr] - expected), np.inf)
-                jl = np.maximum(j - 1, 0)
-                ok_l = (j > 0) & (fd[jl] == a_doc)
-                dist = np.minimum(dist, np.where(
-                    ok_l, np.abs(fp[jl] - expected), np.inf))
-                total += dist
-            ok = total <= slop
-            return np.bincount(a_doc[ok], weights=1.0 / (1.0 + total[ok]),
-                               minlength=ndocs)
-
-        def score_partition(it):
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["positions"].notna()]
-            if pdf.empty:
-                return
-            dcode, duniq = pd.factorize(pdf["doc_id"].to_numpy())
-            ndocs = len(duniq)
-            dl_all = np.zeros(ndocs, dtype=np.int64)
-            dl_all[dcode] = pdf["dl"].to_numpy(dtype=np.int64)
-            # every term's positions with ONE frombuffer, doc-major order
-            # (positions are stored ascending within a doc)
-            term_arr = pdf["term"].to_numpy()
-            blob_arr = pdf["positions"].to_numpy()
-            tpos, tdoc = {}, {}
-            for t in slot_terms:
-                sub = np.flatnonzero(term_arr == t)
-                sub = sub[np.argsort(dcode[sub], kind="stable")]
-                tpos[t], cnts = blocks.blob_positions(blob_arr[sub])
-                tdoc[t] = np.repeat(dcode[sub], cnts)
-            pf_per_doc = (slot_freq if slop == 0 else sloppy_freq)(tpos, tdoc, ndocs)
-            hit = pf_per_doc > 0
-            if not hit.any():
-                return
-            sc = final_mult * score(pf_per_doc[hit], dl_all[hit], idf, avgdl)
-            yield pd.DataFrame({"doc_id": duniq[hit].astype(np.int64), "score": sc})
-
-        # keyed repartition WITHOUT an explicit partition count: an explicit
-        # N is exempt from AQE coalescing, so a small candidate set would
-        # pay N mostly-empty Python tasks; letting AQE size it collapses
-        # tiny phrase shuffles to one task and leaves big ones at
-        # spark.sql.shuffle.partitions
-        return (cand.repartition("doc_id")
-                .mapInPandas(score_partition, schema=SCORE_SCHEMA))
 
     def search_phrase_prefix(self, phrase: str, field: str | None = None,
                              limit: int = 100,
@@ -1875,8 +1447,8 @@ class SearchEngine:
         Scale shape: the expansion is ONE pushed-prefix dictionary scan
         collecting <= max_expansions + 1 rows driver-side (the audited
         bounded-collect pattern shared with fuzzy); scoring reuses the
-        phrase pipeline — pruned postings scan over the expanded term set,
-        one repartition(doc_id), one vectorized kernel."""
+        phrase path — pruned postings scan over the expanded term set,
+        then the evaluator's slot kernel."""
         field = field or self.parser.default_field
         toks = analyze_text(phrase, self.config.analyzer)
         if len(toks) < 2:
@@ -1899,53 +1471,4 @@ class SearchEngine:
                 f"{max_expansions} (BooleanQuery.TooManyClauses analog)")
         ast = MultiPhraseQuery(field, tuple(lead), pref, int(poff),
                                tuple(expansions))
-        scored = self._score_ast(ast)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-
-    def _eval_boolean(self, node: BooleanQuery, decoded, mult, idf_map, tfidf_qn):
-        """Booleans with a nested or non-leaf clause (flat ones score in
-        ``FlatBooleans``): one union of the clause score frames, then one
-        doc-keyed aggregate of score, MUST/SHOULD hit counts and the
-        MUST_NOT flag."""
-        m2 = mult * node.boost
-        tagged = []
-        n_must = 0
-        n_scoring = 0
-        n_should = 0
-        for i, (occ, sub) in enumerate(node.clauses):
-            child = self._eval(sub, decoded, m2, idf_map, tfidf_qn)
-            if occ == MUST:
-                n_must += 1
-            if occ != MUST_NOT:
-                n_scoring += 1
-            if occ == SHOULD:
-                n_should += 1
-            tagged.append(child.select(
-                "doc_id",
-                F.when(F.lit(occ == MUST_NOT), F.lit(0.0)).otherwise(F.col("score")).alias("score"),
-                F.lit(1 if occ == MUST else 0).alias("is_must"),
-                F.lit(1 if occ == MUST_NOT else 0).alias("is_not"),
-                F.lit(1 if occ != MUST_NOT else 0).alias("is_scoring"),
-                F.lit(1 if occ == SHOULD else 0).alias("is_should")))
-        if n_scoring == 0:
-            return self._empty_scores()  # pure-negative matches nothing
-        if node.msm > n_should:
-            return self._empty_scores()  # Lucene: msm > optional count -> no hits
-        unioned = tagged[0]
-        for t in tagged[1:]:
-            unioned = unioned.unionByName(t)
-        agg = (unioned.groupBy("doc_id").agg(
-            F.sum("score").alias("score"),
-            F.sum("is_must").alias("must_hits"),
-            F.max("is_not").alias("excluded"),
-            F.sum("is_scoring").alias("overlap"),
-            F.sum("is_should").alias("should_hits")))
-        cond = (F.col("excluded") == 0) & (F.col("must_hits") == n_must)
-        if node.msm > 0:
-            cond &= F.col("should_hits") >= node.msm
-        if n_must == 0:
-            cond &= F.col("overlap") >= 1
-        out = agg.filter(cond)
-        if self.config.scoring_model != "bm25":
-            out = out.withColumn("score", F.col("score") * F.col("overlap") / F.lit(float(n_scoring)))
-        return out.select("doc_id", "score")
+        return self._score_ast(ast, limit=limit)

@@ -31,10 +31,35 @@ FUZZY_TOP_TERMS = 50  # TopTermsScoringBooleanQueryRewrite size in FuzzyQuery 4.
 @dataclass(frozen=True)
 class ConstScoreTerms:
     """Rewritten multi-term query: constant score `boost` for any doc
-    containing at least one of `terms` in `field`."""
+    containing a matching term in `field` (Lucene's CONSTANT_SCORE
+    rewrite). The terms are either the explicit tuple ``terms`` (``kind``
+    None) or every term satisfying a predicate the engine pushes into its
+    postings scan instead of expanding it on the driver: ``kind`` 'prefix'
+    (payload ``(prefix,)``), 'regex' (``(java_regex,)``) or 'range'
+    (``(lo, hi, include_lo, include_hi)``)."""
     field: str
-    terms: tuple[str, ...]
+    terms: tuple[str, ...] = ()
     boost: float = 1.0
+    kind: str | None = None
+    payload: tuple = ()
+
+    def term_cond(self):
+        """The term predicate as a Spark column expression."""
+        from pyspark.sql import functions as F
+        t = F.col("term")
+        if self.kind is None:
+            return t.isin(list(self.terms)) if self.terms else F.lit(False)
+        if self.kind == "prefix":
+            return t.startswith(self.payload[0])
+        if self.kind == "regex":
+            return t.rlike(self.payload[0])
+        lo, hi, ilo, ihi = self.payload
+        c = F.lit(True)
+        if lo is not None:
+            c = c & ((t >= lo) if ilo else (t > lo))
+        if hi is not None:
+            c = c & ((t <= hi) if ihi else (t < hi))
+        return c
 
 
 def _damerau_capped(a: str, b: str, cap: int) -> int:
