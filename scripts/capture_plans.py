@@ -119,10 +119,13 @@ def main(out_path: str | None = None) -> int:
         search.DRIVER_MAX_BLOCKS = cap
     sections.append(("search_many (3 queries, k=10) above the decode cap",
                      "Expected: the pruned scan, MapInPandas (decode), ONE "
-                     "Exchange hashpartitioning(doc_id), MapInPandas "
-                     "(every query evaluated per partition, top-k per "
-                     "query), then the rank cut as WindowGroupLimit — the "
-                     "raw match set is never globally sorted.",
+                     "Exchange hashpartitioning(doc_id) with one partition per "
+                     "core (REPARTITION_BY_NUM), a Sort on doc_id "
+                     "within each partition, MapInPandas (every query "
+                     "evaluated a bounded batch of whole docs at a time, "
+                     "top-k per query), then the rank cut as "
+                     "WindowGroupLimit — the raw match set is never "
+                     "globally sorted.",
                      explain_str(many, mode="simple")))
 
     # 2b) WAND with exact stats: the block skip is a PUSHED parquet filter;

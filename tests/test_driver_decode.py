@@ -162,6 +162,29 @@ def test_placements_give_same_bits(engines, both):
         assert api_d == api_e and all(api_d.values())
 
 
+def test_executor_batches_split_at_doc_boundaries(spark, engines, both):
+    """Above the cap a partition evaluates whole docs a bounded batch at a
+    time. A 0-block cap bounds a batch at one row and 5-row Arrow batches
+    split every partition many times, docs carrying over between them;
+    every answer is still the driver's bits."""
+    queries = ["alpha OR graded", "alpha NOT beta", '"alpha beta"', "ind*",
+               "*:* NOT alpha"]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    for engine in engines:
+        def answers():
+            return ({q: engine.search_scores(q, 20).collect() for q in queries},
+                    _rows(engine.score_all("alpha OR graded")),
+                    engine.search_span_near("alpha", "beta", 2, limit=20).collect())
+
+        spark.conf.set(key, "5")
+        try:
+            driver, executors = both(answers)
+        finally:
+            spark.conf.set(key, old)
+        assert driver == executors and all(driver)
+
+
 def test_score_all_consumers_agree_across_placements(engines, both):
     """The consumers of ``score_all`` get the same answers whether its
     frame is local (driver) or evaluated on the executors."""
@@ -183,6 +206,26 @@ def test_score_all_consumers_agree_across_placements(engines, both):
 
         driver, executors = both(answers)
         assert driver == executors and all(driver.values())
+
+
+def test_packed_driver_frames_equal_local_relations(engines, monkeypatch):
+    """A driver-built frame above LOCAL_MAX_ROWS ships as one exploded
+    row of column arrays; it must hold the same rows as the plain
+    LocalRelation, for hit sets, ranked batches and their consumers."""
+    for engine in engines:
+        def answers():
+            return (_rows(engine.score_all("alpha OR graded")),
+                    _rows(engine.search_many({"a": "alpha", "b": "*:* NOT beta"}, 50)),
+                    engine.facets("alpha OR graded", ["lang"]).collect(),
+                    engine.search_collapsed("alpha OR graded", "lang", 2, 5).collect(),
+                    engine.more_like_this(3, limit=None).count())
+
+        want = answers()
+        with monkeypatch.context() as m:
+            m.setattr(search, "LOCAL_MAX_ROWS", 0)
+            assert "Generate" in engine.score_all("alpha")._jdf.queryExecution() \
+                .optimizedPlan().toString()
+            assert answers() == want and all(want)
 
 
 def test_match_all_in_booleans_matches_oracle(spark, both, tmp_path):

@@ -630,7 +630,8 @@ def test_hit_count_fast_paths(bm25_setup, spark, tiny_corpus):
     dead = int(engine.score_all("common_token").collect()[0]["doc_id"])
     eng2 = SearchEngine(spark, builder.postings_stage(runs, st), docs,
                         builder.dictionary_stage(runs), st, cfg,
-                        tombstones_df=spark.createDataFrame([(dead,)], "doc_id long"))
+                        tombstones_df=spark.createDataFrame([(dead,)], "doc_id long"),
+                        n_tombstones=1)
     n2, _ = eng2.hit_count("common_token")
     assert n2 == n_term - 1
 

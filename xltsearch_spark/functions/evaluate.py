@@ -61,6 +61,13 @@ def top_k(ids: np.ndarray, scores: np.ndarray, k: int):
     return ids[order], scores[order]
 
 
+def best_hits(hits: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Each query's ``k`` best (query_id, doc_id, score) hits in (score
+    desc, doc_id asc) order."""
+    return (hits.sort_values(["query_id", "score", "doc_id"], ascending=[True, False, True])
+            .groupby("query_id", sort=False).head(k))
+
+
 class _Batch:
     """A decoded batch: dense doc codes and the row index of every
     (field, term)."""

@@ -16,8 +16,9 @@ Physical shape (shuffle-light; SURVEY.md §4):
 2. The whole query — booleans, dismax, phrases, spans — is ONE numpy
    function over the decoded rows (``functions/evaluate.py``), run where
    the rows were decoded: in the driver for a capped scan, else on the
-   executors after one ``repartition("doc_id")`` (evaluation is
-   doc-local, so each partition's answer is exact).
+   executors after one ``repartition("doc_id")``, a bounded batch of
+   whole docs at a time (evaluation is doc-local, so each partition's
+   answer is exact).
 3. Top-k: ``np.lexsort`` on (score desc, doc_id asc) in the driver — the
    answer is a local frame, whose collect starts no job — or a per-
    partition top-k and then TakeOrderedAndProject above the cap. A
@@ -35,6 +36,7 @@ from dataclasses import dataclass, replace as dc_replace
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
                                IntegerType, LongType, StringType,
@@ -43,8 +45,8 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
 from xltsearch_spark.analyzers import analyze_text
 from xltsearch_spark.config import IndexConfig
 from xltsearch_spark.functions import blocks
-from xltsearch_spark.functions.evaluate import (MATCH_ALL, Evaluator, freq_scorer,
-                                                member_column)
+from xltsearch_spark.functions.evaluate import (MATCH_ALL, Evaluator, best_hits,
+                                                freq_scorer, member_column, top_k)
 from xltsearch_spark.operators.build import BuildStats, term_bucket
 from xltsearch_spark.plans import scoring
 from xltsearch_spark.plans.parser import (BooleanQuery, DisMaxQuery, MatchAllQuery, MUST,
@@ -73,8 +75,13 @@ SCORE_SCHEMA = StructType([StructField("doc_id", LongType()),
                            StructField("score", DoubleType())])
 HIT_SCHEMA = StructType([StructField("query_id", StringType()), *SCORE_SCHEMA.fields])
 RANKED_SCHEMA = StructType([*HIT_SCHEMA.fields, StructField("rank", IntegerType())])
+TV_SCHEMA = StructType([StructField("term", StringType()), StructField("tf", LongType())])
 _DTYPES = {"string": object, "binary": object, "long": np.int64,
            "double": np.float64, "boolean": bool}  # of _decoded_schema's types
+_ARROW = {"string": pa.string(), "binary": pa.binary(), "long": pa.int64(),
+          "integer": pa.int32(), "double": pa.float64(), "boolean": pa.bool_()}
+# rows above which _local packs a driver-built frame into one row
+LOCAL_MAX_ROWS = 10_000
 # conjunction pruning: cap on the coalesced doc-range disjuncts a pruned
 # scan carries (_block_ranges keeps the largest gaps)
 CONJ_PRUNE_MAX_RANGES = 64
@@ -109,6 +116,15 @@ def _term_clauses(ast):
             isinstance(sub, TermQuery) for _, sub in ast.clauses):
         return list(ast.clauses)
     return None
+
+
+def _best(hits: pd.DataFrame, k: int | None) -> pd.DataFrame:
+    """The ``k`` best of the (doc_id, score) ``hits`` in rank order; all of
+    them when ``k`` is None."""
+    if k is None:
+        return hits
+    ids, scores = top_k(hits["doc_id"].to_numpy(), hits["score"].to_numpy(), k)
+    return pd.DataFrame({"doc_id": ids, "score": scores})
 
 
 def collapse_top_groups(hits: DataFrame, group_col: str, group_limit: int,
@@ -169,8 +185,11 @@ class SearchEngine:
         self.tombstones_df = tombstones_df
         # an upper bound on the dead docs (the catalog meta's count): a
         # top-k keeps k + n_tombstones candidates for the anti-join, so a
-        # dead doc never pushes a live one out (None: keep every hit)
-        self.n_tombstones = n_tombstones
+        # dead doc never pushes a live one out
+        if tombstones_df is not None and n_tombstones is None:
+            raise ValueError("tombstones_df needs n_tombstones, an upper bound "
+                             "on its doc count")
+        self.n_tombstones = n_tombstones or 0
         # blocks_exact: True iff every stored block_max/min_score is a score
         # THIS engine decodes — computed with the CURRENT collection stats
         # (single segment, no incremental drift) under this engine's model
@@ -388,7 +407,7 @@ class SearchEngine:
             decoded = self._decode_blocks(self._scan_coalesce(blocks_scan, terms, []),
                                           idf_map, with_positions=False,
                                           max_blocks=self._max_blocks(terms, idf_map))
-            return self._scores(ast, decoded, idf_map, limit)
+            return self._top_hits(ast, decoded, idf_map, limit)
 
         tau = None  # threshold in FINAL-score units (qn/coord included)
         self._last_wand_tau_source = None  # introspection for tests/audits
@@ -443,9 +462,11 @@ class SearchEngine:
                 c = (F.col("field") == f) & (F.col("term") == t) & \
                     (F.col("block_max_score") == m)
                 probe_cond = c if probe_cond is None else (probe_cond | c)
-            rows = top(self.postings.filter(cond).filter(probe_cond)).collect()
-            if len(rows) == limit:
-                tau = float(rows[-1]["score"])
+            probe = top(self.postings.filter(cond).filter(probe_cond))
+            scores = (probe["score"].tolist() if isinstance(probe, pd.DataFrame)
+                      else [r["score"] for r in probe.collect()])
+            if len(scores) == limit:
+                tau = float(scores[-1])
                 self._last_wand_tau_source = "probe"
         scan = self.postings.filter(cond)
         if tau is not None:
@@ -490,7 +511,7 @@ class SearchEngine:
                 prune = c if prune is None else (prune | c)
             scan = scan.filter(prune)
         self._last_wand_scan = scan
-        return top(scan), idf_map
+        return self._frame(top(scan)), idf_map
 
     def search_many(self, queries: dict[str, str], limit: int = 100) -> DataFrame:
         """Evaluate MANY queries against ONE shared postings scan.
@@ -550,7 +571,8 @@ class SearchEngine:
                 n = self._doc_freqs([(ast.field, ast.term)])[
                     (ast.field, ast.term)]
         if n is None:
-            n = self.score_all(query).count()
+            hits = self._hit_set(self._parse(query))
+            n = len(hits) if isinstance(hits, pd.DataFrame) else hits.count()
         shown = n if limit is None else min(n, limit)
         return n, f"{shown} results"
 
@@ -610,8 +632,13 @@ class SearchEngine:
         decoded = self._decode_postings(terms, [], idf_map, False)
         if not isinstance(decoded, pd.DataFrame):
             decoded = decoded.localCheckpoint(eager=True)
-        hits = self._scores(ast, decoded, idf_map, limit if doc_ids is None else None)
-        if doc_ids is not None:
+        hits = self._top_hits(ast, decoded, idf_map, limit if doc_ids is None else None)
+        if isinstance(hits, pd.DataFrame):  # only the hits' rows leave the driver
+            if doc_ids is not None:
+                hits = hits[hits["doc_id"].isin([int(i) for i in doc_ids])]
+            decoded = decoded[decoded["doc_id"].isin(hits["doc_id"])]
+            hits = self._local(hits, SCORE_SCHEMA)
+        elif doc_ids is not None:
             hits = hits.filter(F.col("doc_id").isin([int(i) for i in doc_ids]))
         decoded = self._as_frame(decoded)
         meta = [(sub.field, sub.term, idf_map.get((sub.field, sub.term), 0),
@@ -736,22 +763,29 @@ class SearchEngine:
         query trees from ANALYZED terms — more_like_this — must not
         round-trip through the parser, which would re-analyze); with
         ``limit``, its top ``limit`` in rank order."""
+        return self._frame(self._hit_set(ast, _idf_map, limit))
+
+    def _hit_set(self, ast, _idf_map: dict | None = None, limit: int | None = None):
+        """``_score_ast``'s hits as ``_top_hits`` returns them: consumers
+        that can answer from a driver-side pandas frame read it there."""
         terms, consts, match_all = self._collect_leaves(ast)
         idf_map = _idf_map if _idf_map is not None else self._doc_freqs(terms)
         self._last_conj_ranges = None
         extra = self._conjunction_extra_cond(ast, idf_map)
         decoded = self._decode_postings(terms, consts, idf_map, needs_positions(ast),
                                         extra_cond=extra, match_all=match_all)
-        return self._scores(ast, decoded, idf_map, limit)
+        return self._top_hits(ast, decoded, idf_map, limit)
 
-    def _scores(self, ast, decoded, idf_map, limit: int | None) -> DataFrame:
+    def _top_hits(self, ast, decoded, idf_map, limit: int | None):
         """(doc_id, score) of ``ast`` over ``decoded``: every live hit, or
         the top ``limit`` in (score desc, doc_id asc) order. A capped
-        decode without tombstones answers with a local frame."""
+        decode without tombstones answers with the driver's pandas frame
+        (``_frame`` makes it a local frame), anything else with a
+        DataFrame."""
         hits = self._hits({"": ast}, decoded, idf_map, limit)
         if isinstance(hits, pd.DataFrame):
             if not self.has_tombstones:
-                return self._local(hits[["doc_id", "score"]], SCORE_SCHEMA)
+                return hits[["doc_id", "score"]]
             hits = self._local(hits, HIT_SCHEMA)
         hits = self._filter_tombstones(hits).select("doc_id", "score")
         return hits if limit is None else \
@@ -767,19 +801,44 @@ class SearchEngine:
         ev = Evaluator(self.config, self.stats.n_docs, self.stats.avgdl, idf_map)
         qs = {qid: (ast, self._tfidf_qn(ast, idf_map)) for qid, ast in queries.items()}
         if cut is not None and self.has_tombstones:
-            cut = None if self.n_tombstones is None else cut + self.n_tombstones
+            cut += self.n_tombstones
         if isinstance(decoded, pd.DataFrame):
             return ev.hits(qs, decoded, cut)
+        rows_max = max(1, DRIVER_MAX_BLOCKS * self.config.block_size)
 
         def run(it):
-            chunks = list(it)
-            if chunks:
-                yield ev.hits(qs, pd.concat(chunks, ignore_index=True), cut)
+            # a partition's rows arrive sorted by doc_id: the whole docs of
+            # about rows_max rows (the driver placement's bound) evaluate at
+            # a time, so a worker holds one such batch and each query's best
+            # cut so far, however large the partition
+            held, n_held, best = [], 0, None
+            for pdf in it:
+                held.append(pdf)
+                n_held += len(pdf)
+                if n_held < rows_max:
+                    continue
+                pdf = pd.concat(held, ignore_index=True)
+                ids = pdf["doc_id"].to_numpy()
+                tail = int(np.searchsorted(ids, ids[-1]))  # the last doc's first row
+                held, n_held = [pdf.iloc[tail:]], len(pdf) - tail
+                if tail:
+                    out = ev.hits(qs, pdf.iloc[:tail], cut)
+                    if cut is None:
+                        yield out
+                    else:
+                        best = out if best is None else best_hits(pd.concat([best, out]), cut)
+            out = ev.hits(qs, pd.concat(held, ignore_index=True), cut) if n_held else None
+            if cut is not None and best is not None:
+                out = best if out is None else best_hits(pd.concat([best, out]), cut)
+            if out is not None:
+                yield out
 
-        # keyed repartition WITHOUT an explicit partition count: an explicit
-        # N is exempt from AQE coalescing, so a small candidate set would
-        # pay N mostly-empty Python tasks
-        return decoded.repartition("doc_id").mapInPandas(run, schema=HIT_SCHEMA)
+        # one partition per core: AQE would coalesce this exchange to its
+        # 64 MB target, and 10^6 decoded rows then evaluated in two Python
+        # tasks on four cores
+        n = self.spark.sparkContext.defaultParallelism
+        return (decoded.repartition(n, "doc_id").sortWithinPartitions("doc_id")
+                .mapInPandas(run, schema=HIT_SCHEMA))
 
     def _tfidf_qn(self, ast, idf_map) -> float | None:
         """DefaultSimilarity queryNorm of ``ast`` (None under BM25)."""
@@ -809,9 +868,13 @@ class SearchEngine:
             (F.col("field") == field) &
             (F.col("skip_first_doc") <= doc_id) &
             (F.col("skip_last_doc") >= doc_id))
-        decoded = self._as_frame(self._decode_blocks(scan, {}, with_positions=False))
-        tv = (decoded.filter(F.col("doc_id") == doc_id)
-              .groupBy("term").agg(F.sum("tf").alias("tf")))
+        decoded = self._decode_blocks(scan, {}, with_positions=False)
+        if isinstance(decoded, pd.DataFrame):
+            tv = self._local(decoded[decoded["doc_id"] == doc_id]
+                             .groupby("term", as_index=False)["tf"].sum(), TV_SCHEMA)
+        else:
+            tv = (decoded.filter(F.col("doc_id") == doc_id)
+                  .groupBy("term").agg(F.sum("tf").alias("tf")))
         dic = (self.dictionary.filter(F.col("field") == field)
                .groupBy("term").agg(F.sum("doc_freq").alias("df")))
         n = self.stats.n_docs
@@ -828,7 +891,10 @@ class SearchEngine:
             return self._local(pd.DataFrame(), SCORE_SCHEMA)
         ast = BooleanQuery(tuple(
             (SHOULD, TermQuery(field, r["term"])) for r in rows))
-        scored = self._score_ast(ast).filter(F.col("doc_id") != doc_id)
+        hits = self._hit_set(ast)
+        if isinstance(hits, pd.DataFrame):
+            return self._frame(_best(hits[hits["doc_id"] != doc_id], limit))
+        scored = hits.filter(F.col("doc_id") != doc_id)
         if limit is None:  # callers that re-rank on rounded scores
             return scored
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
@@ -1312,15 +1378,29 @@ class SearchEngine:
                              for f in _decoded_schema(members).fields})
 
     def _local(self, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
-        """``pdf`` as a local frame: a LocalRelation, whose collect starts
-        no job. An empty pandas frame would take the RDD path, which
-        does; an emptied one-row relation stays local."""
+        """``pdf`` as a frame built in the driver. Up to LOCAL_MAX_ROWS
+        rows it is a LocalRelation, whose collect starts no job; an empty
+        pandas frame would take the RDD path, which does, so an emptied
+        one-row relation stands in. A larger frame is ONE row of column
+        arrays that a task explodes: a LocalRelation of 5 * 10^5 hits,
+        row by row in the plan, took 2-4x as long to build and join."""
+        if len(pdf) > LOCAL_MAX_ROWS:
+            ends = pa.array([0, len(pdf)], pa.int32())
+            one = self.spark.createDataFrame(pa.table({
+                f.name: pa.ListArray.from_arrays(ends, pa.array(
+                    pdf[f.name].to_numpy(), _ARROW[f.dataType.typeName()]))
+                for f in schema.fields}))
+            return one.select(F.explode(F.arrays_zip(*schema.names)).alias("_r")).select("_r.*")
         if len(pdf):
             return self.spark.createDataFrame(pdf, schema)
         filler = {"string": "", "binary": None, "boolean": False, "double": 0.0}
         return self.spark.createDataFrame(pd.DataFrame(
             {f.name: [filler.get(f.dataType.typeName(), 0)] for f in schema.fields}),
             schema).limit(0)
+
+    def _frame(self, hits) -> DataFrame:
+        """``_top_hits``'s answer as a DataFrame."""
+        return self._local(hits, SCORE_SCHEMA) if isinstance(hits, pd.DataFrame) else hits
 
     def _as_frame(self, decoded) -> DataFrame:
         """A decode's rows as a DataFrame (a driver decode becomes local)."""
@@ -1379,8 +1459,12 @@ class SearchEngine:
         rounded consistently on both sides (the _ft entries round @4
         before the cut). A cursor score recomputed elsewhere can drift a
         ulp and drop/duplicate the boundary row."""
-        scored = self.score_all(query)
-        return paginate_after(scored, after_score, after_doc_id, limit)
+        hits = self._hit_set(self._parse(query))
+        if not isinstance(hits, pd.DataFrame):
+            return paginate_after(hits, after_score, after_doc_id, limit)
+        s, d = hits["score"].to_numpy(), hits["doc_id"].to_numpy()
+        after = (s < after_score) | ((s == after_score) & (d > after_doc_id))
+        return self._frame(_best(hits[after], limit))
 
     def search_span_or(self, terms: list[str] | tuple[str, ...],
                        field: str | None = None,
