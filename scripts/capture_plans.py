@@ -133,16 +133,18 @@ def main(out_path: str | None = None) -> int:
     #     in the section title so the audit shows which phase ran
     eng.wand_min_df = 1
     eng.search_scores("common_token OR graded", 5).collect()
-    if eng._last_wand_scan is not None:
+    if eng._last_wand_tau_source is not None:
         sections.append((f"WAND tau-prune (stats exact, tau from "
                          f"{eng._last_wand_tau_source}): pushed block_max filter",
                          "Expected: GreaterThanOrEqual(block_max_score, ...) in "
                          "PushedFilters — non-competitive blocks are skipped by "
                          "parquet row-group stats, never read. tau_source="
-                         "metadata means the threshold came from block_min_score"
-                         " metadata in the SAME aggregate that collected doc "
-                         "freqs: 2 driver jobs total for the query.",
-                         explain_str(eng._last_wand_scan)))
+                         "metadata means the threshold came from the "
+                         "block_min_score seeds of the term statistics that "
+                         "also gave the doc freqs: 2 driver jobs for a cold "
+                         "query (the metadata collect and this scan's), 1 "
+                         "warm.",
+                         explain_str(eng._last_scan)))
     eng.wand_min_df = 200_000
 
     # 2c) conjunction rarest-first doc-range pruning (r5, VERDICT r4 #2):
@@ -150,7 +152,6 @@ def main(out_path: str | None = None) -> int:
     #     envelope onto every other term's block scan — Lucene's leapfrog
     #     analog — so the frequent term's non-overlapping blocks are
     #     skipped via row-group stats. A/B block-row counts quantify it.
-    eng.conj_prune_ratio = 1.0
     eng.score_all("needle_17 AND common_token").collect()
     pruned_scan = eng._last_scan
     n_pruned = pruned_scan.count()
@@ -158,7 +159,6 @@ def main(out_path: str | None = None) -> int:
     eng.score_all("needle_17 AND common_token").collect()
     n_brute = eng._last_scan.count()
     eng.conj_prune_enabled = True
-    eng.conj_prune_ratio = 4.0
     sections.append((f"conjunction doc-range prune: 'needle_17 AND "
                      f"common_token' ({n_pruned} block rows pruned vs "
                      f"{n_brute} brute)",
@@ -174,7 +174,6 @@ def main(out_path: str | None = None) -> int:
     # 2c-bis) phrase doc-range pruning (r5): phrase terms are implicit
     #     MUSTs, so the rare term's ranges prune the frequent term's
     #     position-carrying blocks — the most expensive decode in the index
-    eng.conj_prune_ratio = 1.0
     eng.score_all('"needle_17 common_token"').collect()
     ph_scan = eng._last_scan
     ph_pruned = ph_scan.count()
@@ -182,7 +181,6 @@ def main(out_path: str | None = None) -> int:
     eng.score_all('"needle_17 common_token"').collect()
     ph_brute = eng._last_scan.count()
     eng.conj_prune_enabled = True
-    eng.conj_prune_ratio = 4.0
     sections.append((f"phrase doc-range prune: '\"needle_17 common_token\"' "
                      f"({ph_pruned} block rows pruned vs {ph_brute} brute)",
                      "Expected: the same pushed skip_first_doc/skip_last_doc "
@@ -202,7 +200,7 @@ def main(out_path: str | None = None) -> int:
     eng_t = cat_t.engine()
     eng_t.wand_min_df = 1
     eng_t.search_scores("common_token OR graded", 5).collect()
-    if eng_t._last_wand_scan is not None:
+    if eng_t._last_wand_tau_source is not None:
         sections.append((f"WAND under model=default (tau from "
                          f"{eng_t._last_wand_tau_source}): pushed block_max "
                          f"filter on TF-IDF maxima",
@@ -210,10 +208,10 @@ def main(out_path: str | None = None) -> int:
                          "in PushedFilters with blocks built under "
                          "DefaultSimilarity (sqrt(tf)*idf^2*norm) — coord "
                          "and queryNorm fold into the tau/ceiling math "
-                         "(search._wand_topk docstring); rank-identity vs "
+                         "(search._wand_cond docstring); rank-identity vs "
                          "brute force verified in tests/test_engine.py::"
                          "test_tfidf_wand_rank_identical_and_pushed_filter.",
-                         explain_str(eng_t._last_wand_scan)))
+                         explain_str(eng_t._last_scan)))
 
     # 3) tombstones: persisted parquet anti-joined lazily
     v2 = corpus.iloc[: len(corpus) - 40]

@@ -38,7 +38,7 @@ def engines(request, spark, tmp_path_factory):
     cat.update(spark.createDataFrame(generate_corpus(200, version=2)),
                fingerprint="v2")
     two = cat.engine()
-    assert two.stats.segments == 2 and two.has_tombstones
+    assert len(cat.read_meta()["segments"]) == 2 and two.has_tombstones
     return one, two
 
 
@@ -101,6 +101,33 @@ def test_executor_fallback_above_cap(engines, monkeypatch):
             got = {q: engine.search_scores(q, 20).collect() for q in queries}
         assert got == want
         assert collected and max(collected) <= cap + 1
+
+
+def test_term_stats_overflow_aggregate_matches_collect(engines, monkeypatch):
+    """Past DRIVER_MAX_BLOCKS block rows the term statistics come from one
+    groupBy(field, term, n_docs) aggregate instead of the bounded collect:
+    the same df (the dictionary's doc_freq), block count, ceilings and tau
+    seeds, and doc spans that cover the collected ones."""
+    from dataclasses import replace
+    terms = [("content", t) for t in
+             ("common_token", "alpha", "beta", "graded", "needle_17", "zzqq")]
+    for engine in engines:
+        dic = {(r["field"], r["term"]): r["df"] for r in engine.dictionary
+               .groupBy("field", "term").agg(F.sum("doc_freq").alias("df")).collect()}
+        engine.clear_stats_cache()
+        collected = engine._term_stats(terms)
+        engine.clear_stats_cache()
+        with monkeypatch.context() as m:
+            m.setattr(search, "DRIVER_MAX_BLOCKS", 2)
+            aggregated = engine._term_stats(terms)
+        engine.clear_stats_cache()
+        assert sum(s.n_blocks for s in collected.values()) > 2
+        for t in terms:
+            c, a = collected[t], aggregated[t]
+            assert c.df == dic.get(t, 0), t
+            assert replace(a, spans=c.spans) == c, t
+            assert all(any(lo <= c_lo and c_hi <= hi for lo, hi in a.spans)
+                       for c_lo, c_hi in c.spans), t
 
 
 def test_fuzzy_expansion_cached_per_generation(spark, engines):

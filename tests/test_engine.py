@@ -162,21 +162,32 @@ def test_block_bounds_equal_decoded_scores(spark, model):
 
 
 def test_wand_metadata_tau_skips_probe(spark):
-    """With exact stats and full blocks, tau comes from block metadata (no
-    probe job); with stale stats the probe fallback runs — both must return
-    the identical top-k as the brute-force path."""
+    """With exact stats and full blocks, tau comes from the cached term
+    statistics (no probe job); with stale stats the probe fallback runs —
+    both prune the one scan and must return the identical top-k as the
+    brute-force path."""
     from xltsearch_spark.sources.corpus import generate_corpus
     corpus = generate_corpus(600)
     cfg = IndexConfig(doc_range_size=64, block_size=8, term_buckets=8)
     engine, _ = build_engine(spark, corpus, cfg)
     engine.wand_min_df = 1
-    meta_hits = [(r["doc_id"], round(r["score"], 9)) for r in
-                 engine.search_scores("common_token", 5).collect()]
+    tracker = spark.sparkContext.statusTracker()
+
+    def top5():
+        before = set(tracker.getJobIdsForGroup(None))
+        hits = [(r["doc_id"], round(r["score"], 9)) for r in
+                engine.search_scores("common_token", 5).collect()]
+        assert "block_max_score" in engine._last_scan._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        return hits, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    top5()  # warm the term statistics
+    meta_hits, meta_jobs = top5()
     assert engine._last_wand_tau_source == "metadata"
     engine.blocks_exact = False  # stored per-doc scores no longer trusted
-    probe_hits = [(r["doc_id"], round(r["score"], 9)) for r in
-                  engine.search_scores("common_token", 5).collect()]
+    probe_hits, probe_jobs = top5()
     assert engine._last_wand_tau_source == "probe"
+    assert meta_jobs < probe_jobs
     engine.blocks_exact = True
     engine.wand_enabled = False  # brute force
     brute = [(r["doc_id"], round(r["score"], 9)) for r in
@@ -326,7 +337,7 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
         exact = top("common_token OR graded")
         buf = io.StringIO()
         with redirect_stdout(buf):
-            eng._last_wand_scan.explain(mode="formatted")
+            eng._last_scan.explain(mode="formatted")
         plan = buf.getvalue()
         assert "GreaterThanOrEqual(block_max_score" in plan, plan[-2000:]
         if model == "bm25":
@@ -343,12 +354,11 @@ def test_wand_pushed_blockmax_filter(spark, small_corpus, tmp_path):
         wand = {}
         for q in queries:
             wand[q] = top(q, 10)
-            assert eng._last_wand_scan is not None, q
-            eng._last_wand_scan = None
+            assert eng._last_wand_tau_source is not None, q  # WAND pruned
         eng.wand_enabled = False
         for q in queries:
             assert wand[q] == top(q, 10), (model, q)
-            assert eng._last_wand_scan is None, q
+            assert eng._last_wand_tau_source is None, q
 
 
 def test_term_scan_plan_pruning_regression(spark, small_corpus, tmp_path):
@@ -445,23 +455,22 @@ def test_wand_zero_boost_term_does_not_crash(spark, small_corpus, tmp_path):
 
 
 def test_term_stats_cache_repeat_queries_identical(bm25_setup):
-    """df/meta caches (the Lucene terms-dict role) must be transparent:
-    repeated and overlapping queries return identical results, negatives
-    are cached (absent term -> 0), and the cache actually populates."""
+    """The term-statistics cache (the Lucene terms-dict role) must be
+    transparent: repeated and overlapping queries return identical
+    results, negatives are cached (absent term -> df 0), and the cache
+    actually populates, for WAND-shaped and conjunctive queries alike."""
+    from xltsearch_spark.operators.search import TermStats
     engine, oracle, _ = bm25_setup
     engine.clear_stats_cache()
-    # WAND-shaped (SHOULD-of-terms) queries populate the META cache
     first = [(r["doc_id"], r["score"]) for r in
              engine.search_scores("graded OR nosuchterm_xyz", 10).collect()]
-    assert engine._meta_cache[("content", "graded", 10)] is not None
-    assert engine._meta_cache[("content", "nosuchterm_xyz", 10)] is None
+    assert engine._term_cache[("content", "graded")].df > 0
+    assert engine._term_cache[("content", "nosuchterm_xyz")] == TermStats()
     second = [(r["doc_id"], r["score"]) for r in
               engine.search_scores("graded OR nosuchterm_xyz", 10).collect()]
     assert first == second
-    # non-WAND (conjunction) queries populate the DF cache
     engine.search_scores("graded AND alpha", 10).collect()
-    assert ("content", "alpha") in engine._df_cache
-    assert engine._df_cache[("content", "graded")] > 0
+    assert engine._term_cache[("content", "alpha")].df > 0
     exp = [h["doc_id"] for h in oracle.search("graded AND alpha", 10)]
     got = [int(r["doc_id"]) for r in
            engine.search_scores("graded AND alpha", 10).collect()]
@@ -508,8 +517,16 @@ def test_tfidf_wand_rank_identical_and_pushed_filter(spark, tmp_path):
     assert eng_fs._last_wand_tau_source == "metadata"
     buf = io.StringIO()
     with redirect_stdout(buf):
-        eng_fs._last_wand_scan.explain(mode="formatted")
+        eng_fs._last_scan.explain(mode="formatted")
     assert "GreaterThanOrEqual(block_max_score" in buf.getvalue()
+
+
+def _wand_cond(engine, query, limit):
+    """The WAND scan filter ``engine`` derives for the top ``limit`` of
+    ``query`` (None when WAND declines)."""
+    ast = engine._parse(query)
+    return engine._wand_cond(ast, engine._term_stats(engine._collect_leaves(ast)[0]),
+                             limit)
 
 
 def test_wand_declines_on_block_provenance_mismatch(spark, tiny_corpus):
@@ -534,15 +551,13 @@ def test_wand_declines_on_block_provenance_mismatch(spark, tiny_corpus):
         eng = SearchEngine(spark, postings, docs, dictionary, stats, derived,
                            blocks_exact=False)
         eng.wand_min_df = 1
-        wand_df, _ = eng._wand_topk("common_token", 5)
-        assert wand_df is None  # declined: metadata provenance mismatch
+        assert _wand_cond(eng, "common_token", 5) is None  # provenance mismatch
         oracle = OracleIndex(tiny_corpus, derived)
         assert_rank_identical(eng, oracle, ["common_token", "graded OR beta"])
     # matching provenance keeps the fast path alive
     eng_ok = SearchEngine(spark, postings, docs, dictionary, stats, cfg)
     eng_ok.wand_min_df = 1
-    wand_df, _ = eng_ok._wand_topk("common_token", 5)
-    assert wand_df is not None
+    assert _wand_cond(eng_ok, "common_token", 5) is not None
 
 
 def test_conjunction_range_pruning_rank_identical(spark):
@@ -576,9 +591,6 @@ def test_conjunction_range_pruning_rank_identical(spark):
     plan = buf.getvalue()
     assert "skip_first_doc" in plan and "skip_last_doc" in plan
     engine.conj_prune_enabled = True
-    # equal-frequency conjunction: the skew gate must skip the extra job
-    engine.score_all("common_token AND graded").collect()
-    assert engine._last_conj_ranges is None
 
 
 def test_conjunction_pruning_breadth(spark):
@@ -589,7 +601,6 @@ def test_conjunction_pruning_breadth(spark):
     corpus = generate_corpus(400)
     cfg = IndexConfig(doc_range_size=64, block_size=8, term_buckets=8)
     engine, _ = build_engine(spark, corpus, cfg)
-    engine.conj_prune_ratio = 1.0   # prune whenever a MUST term exists
     queries = [
         "needle_17 AND common_token",
         "needle_17 AND common_token NOT graded",
@@ -645,7 +656,6 @@ def test_phrase_range_pruning_rank_identical(spark):
     corpus = generate_corpus(600)
     cfg = IndexConfig(doc_range_size=64, block_size=8, term_buckets=8)
     engine, _ = build_engine(spark, corpus, cfg)
-    engine.conj_prune_ratio = 1.0
     queries = ['"needle_17 common_token"', '"alpha beta"~2',
                '+"needle_17 common_token" graded',
                '"needle_17 common_token" AND graded']

@@ -197,7 +197,7 @@ def test_merge_without_retokenize_matches_fresh_build(spark, corpora, tmp_path,
     assert eng._last_wand_tau_source == "metadata"
     buf = io.StringIO()
     with redirect_stdout(buf):
-        eng._last_wand_scan.explain(mode="formatted")
+        eng._last_scan.explain(mode="formatted")
     pushed = re.findall(r"PushedFilters: \[.*\]", buf.getvalue())
     assert any("block_max_score" in f for f in pushed), buf.getvalue()[-2000:]
 

@@ -434,8 +434,7 @@ class IndexCatalog:
             raise RuntimeError(f"index not ready: last_updated={meta.get('last_updated')}")
         return BuildStats(n_docs=int(meta["n_docs"]),
                           avgdl={k: float(v) for k, v in meta["avgdl"].items()},
-                          sum_ttf={k: int(v) for k, v in meta["sum_ttf"].items()},
-                          segments=max(1, len(meta["segments"])))
+                          sum_ttf={k: int(v) for k, v in meta["sum_ttf"].items()})
 
     def engine(self) -> SearchEngine:
         self._require_valid()

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 
 # Config.java:52-54 lifecycle sentinels
 INDEX_UPDATE_FAILED = -1
@@ -27,7 +27,6 @@ INDEX_INVALIDATED = -3
 HASH_ALGORITHMS = ("md5", "sha1", "sha256")  # Config.java:60-65; BASELINE fixes sha256
 ANALYZERS = ("standard", "classic", "uax29urlemail", "english", "code")  # Config.java:72-78 + code-aware
 SCORING_MODELS = ("bm25", "default")  # Config.java:80-84 ("Default"=TF-IDF DefaultSimilarity)
-DIRECTORY_TYPES = ("fs", "ram")  # Config.java:86-98 (fs=persisted parquet, ram=in-memory cached)
 
 
 class ConfigError(ValueError):
@@ -42,11 +41,9 @@ class IndexConfig:
     hash_algorithm: str = "sha256"   # BASELINE.json mandates sha256 row invariant
     analyzer: str = "standard"       # config.defaults:3
     scoring_model: str = "bm25"      # reference default is "Default"; north rule mandates BM25
-    directory_type: str = "fs"
     k1: float = 1.2                  # BM25Similarity defaults (Lucene 4.6)
     b: float = 0.75
     quantize_norms: bool = True      # Lucene 8-bit floatToByte315 norm quantization
-    with_positions: bool = True      # TextField records positions (phrase support)
     max_token_length: int = 255      # StandardTokenizer default maxTokenLength
     block_size: int = 128            # postings docs per block (skip/block-max granularity)
     doc_range_size: int = 1 << 16    # docs per doc-range bucket (two-level merge unit)
@@ -72,7 +69,6 @@ class IndexConfig:
     # IndexTask.java:74-78). 0 = vanilla Analyzer.getPositionIncrementGap:
     # positions continue across instances, phrases can match the boundary.
     position_increment_gap: int = 0
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.hash_algorithm not in HASH_ALGORITHMS:
@@ -81,8 +77,6 @@ class IndexConfig:
             raise ConfigError(f"unknown lucene.analyzer: {self.analyzer!r}")
         if self.scoring_model not in SCORING_MODELS:
             raise ConfigError(f"unknown scoring.model: {self.scoring_model!r}")
-        if self.directory_type not in DIRECTORY_TYPES:
-            raise ConfigError(f"unknown directory.type: {self.directory_type!r}")
 
     def config_hash(self) -> str:
         """Stable digest of every semantics-affecting knob.

@@ -190,7 +190,6 @@ class BuildStats:
     n_docs: int
     avgdl: dict[str, float]
     sum_ttf: dict[str, int]
-    segments: int = 1   # segments the postings union (each cuts its own blocks)
 
 
 def make_tokenize_udf(config: IndexConfig, fields_present: list[str]):
